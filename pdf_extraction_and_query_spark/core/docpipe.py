@@ -7,6 +7,12 @@ the two graft extensions (media passthrough, boilerplate strip). The Spark
 pipeline (``plans/extract.py``) must produce byte-identical span sequences;
 ``tests/test_pipeline_equality.py`` enforces it.
 
+There is ONE kernel, :func:`extract_columns`, over parallel per-span
+columns. :func:`extract_document` adapts span dicts to it, and the fused
+Spark path feeds it slices of flattened Arrow batches, so the two cannot
+drift apart; ``tests/test_kernel_golden.py`` pins its output to literal
+digests instead.
+
 Interleaved-span contract (documented spec, since the reference drops media
 — ``src/extraction/pymupdf_extractor.py:124``):
 
@@ -25,7 +31,7 @@ Interleaved-span contract (documented spec, since the reference drops media
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Any, Dict, List, Sequence
+from typing import Any, Dict, List, Optional, Sequence, Tuple
 
 from . import boilerplate as bp
 from .chunker import DEFAULT_CHUNK_OVERLAP, DEFAULT_MAX_CHUNK_SIZE, SectionChunker
@@ -50,96 +56,101 @@ class ExtractConfig:
     strip_boilerplate: bool = True
 
 
-def _with_pages_and_segments(
-    spans: Sequence[Dict[str, Any]],
-) -> List[Dict[str, Any]]:
-    """Sort by offset, derive ``page`` (explicit field wins, else running
-    page-marker count) and ``seg`` (count of media spans before this span),
-    and drop page_marker spans."""
-    ordered = sorted(spans, key=lambda s: s["offset"])
-    out: List[Dict[str, Any]] = []
+# parallel per-span columns, in this order, are the kernel's input
+SPAN_FIELDS = ("kind", "text", "media_ref", "offset", "page", "font_size", "bold")
+
+
+def span_columns(spans: Sequence[Dict[str, Any]]) -> Tuple[List[Any], ...]:
+    """Span dicts -> one list per :data:`SPAN_FIELDS` entry (absent keys
+    read as None)."""
+    return tuple([s.get(f) for s in spans] for f in SPAN_FIELDS)
+
+
+def _pages_and_segments(
+    kinds: Sequence[str], offsets: Sequence[int], pages: Sequence[Any]
+) -> List[Tuple[int, int, int]]:
+    """``(index, page, seg)`` per non-marker span in offset order (stable):
+    ``page`` is the explicit field when set, else the running page-marker
+    count (at least 1); ``seg`` counts the media spans before the span."""
+    out: List[Tuple[int, int, int]] = []
     markers_seen = 0
     media_seen = 0
-    for s in ordered:
-        kind = s.get("kind")
+    for i in sorted(range(len(kinds)), key=offsets.__getitem__):
+        kind = kinds[i]
         if kind == "page_marker":
             markers_seen += 1
             continue
-        derived_page = max(1, markers_seen)
-        page = s.get("page")
-        rec = dict(s)
-        rec["page"] = int(page) if page is not None else derived_page
-        rec["seg"] = media_seen
+        page = pages[i]
+        out.append((i, max(1, markers_seen) if page is None else int(page), media_seen))
         if kind in MEDIA_KINDS:
             media_seen += 1
-        out.append(rec)
+    return out
+
+
+def _line_records(
+    cols: Sequence[Sequence[Any]], cfg: ExtractConfig
+) -> List[Dict[str, Any]]:
+    """Stage 1-2 over span columns: page/segment derivation, page font
+    mode, boilerplate strip, per-line features. Returns, in offset order,
+    feature records for the kept text lines and ``{kind, text, media_ref,
+    offset, page, seg}`` records for every other non-marker span."""
+    kinds, texts, refs, offsets, pages, sizes, bolds = cols
+    prepared = _pages_and_segments(kinds, offsets, pages)
+    text_rows = [(i, page) for i, page, _ in prepared if kinds[i] == "text"]
+    lines = {i: (texts[i] or "").strip() for i, _ in text_rows}
+
+    # page font mode over ALL text spans of the page (reference collects
+    # sizes before the empty-line filter, formatting_extractor.py:74-86)
+    sizes_by_page: Dict[int, List[float]] = {}
+    for i, page in text_rows:
+        if sizes[i] is not None:
+            sizes_by_page.setdefault(page, []).append(float(sizes[i]))
+    mode_by_page = {p: page_font_mode(v) for p, v in sizes_by_page.items()}
+
+    # boilerplate can only fire for docs spanning >= min_pages pages (spec);
+    # for the 1-3-page long tail we skip normalization entirely, and when it
+    # does run, each distinct line is normalized ONCE (footers repeat) and
+    # the result reused for the membership test (was ~30% of kernel CPU).
+    boiler: set = set()
+    norms: Dict[str, str] = {}
+    if cfg.strip_boilerplate and len(
+        {page for _, page in text_rows}
+    ) >= cfg.boilerplate_min_pages:
+        norms = {t: bp.normalize_line(t) for t in set(lines.values())}
+        boiler = bp.boilerplate_keys_from_norms(
+            ((norms[lines[i]], page) for i, page in text_rows),
+            cfg.boilerplate_min_pages,
+        )
+
+    out: List[Dict[str, Any]] = []
+    for i, page, seg in prepared:
+        text = lines.get(i)
+        if text is None:
+            out.append(
+                {"kind": kinds[i], "text": texts[i], "media_ref": refs[i],
+                 "offset": offsets[i], "page": page, "seg": seg}
+            )
+            continue
+        if not text:
+            continue  # formatting_extractor.py:162-164
+        if boiler and norms[text] in boiler:
+            continue
+        feats = line_features(
+            text, page, sizes[i], bolds[i], mode_by_page.get(page, DEFAULT_FONT_SIZE)
+        )
+        feats["kind"] = "text"
+        feats["seg"] = seg
+        feats["offset"] = offsets[i]
+        feats["media_ref"] = None
+        out.append(feats)
     return out
 
 
 def extract_lines(
     spans: Sequence[Dict[str, Any]], cfg: ExtractConfig = ExtractConfig()
 ) -> List[Dict[str, Any]]:
-    """Stage 1-2: page/segment derivation, page font mode, boilerplate strip,
-    per-line features. Returns feature records (text lines only) plus media
-    records untouched, all carrying ``page``/``seg``."""
-    prepared = _with_pages_and_segments(spans)
-    text_spans = [s for s in prepared if s["kind"] == "text"]
-
-    # page font mode over ALL text spans of the page (reference collects
-    # sizes before the empty-line filter, formatting_extractor.py:74-86)
-    sizes_by_page: Dict[int, List[float]] = {}
-    for s in text_spans:
-        if s.get("font_size") is not None:
-            sizes_by_page.setdefault(s["page"], []).append(float(s["font_size"]))
-    mode_by_page = {p: page_font_mode(v) for p, v in sizes_by_page.items()}
-
-    # boilerplate can only fire for docs spanning >= min_pages pages (spec);
-    # for the 1-3-page long tail we skip normalization entirely, and when it
-    # does run, each line is normalized ONCE (memoized — footers repeat) and
-    # the result reused for the membership test (was ~30% of kernel CPU).
-    boiler: set = set()
-    norm_memo: Dict[str, str] = {}
-    if cfg.strip_boilerplate and len(
-        {s["page"] for s in text_spans}
-    ) >= cfg.boilerplate_min_pages:
-
-        def _norm(t: str) -> str:
-            n = norm_memo.get(t)
-            if n is None:
-                n = norm_memo[t] = bp.normalize_line(t)
-            return n
-
-        boiler = bp.boilerplate_keys_from_norms(
-            (
-                (_norm((s.get("text") or "").strip()), s["page"])
-                for s in text_spans
-            ),
-            cfg.boilerplate_min_pages,
-        )
-
-    out: List[Dict[str, Any]] = []
-    for s in prepared:
-        if s["kind"] != "text":
-            out.append(s)
-            continue
-        text = (s.get("text") or "").strip()
-        if not text:
-            continue  # formatting_extractor.py:162-164
-        if boiler and norm_memo.get(text, "") in boiler:
-            continue
-        feats = line_features(
-            text,
-            s["page"],
-            s.get("font_size"),
-            s.get("bold"),
-            mode_by_page.get(s["page"], DEFAULT_FONT_SIZE),
-        )
-        feats["kind"] = "text"
-        feats["seg"] = s["seg"]
-        feats["offset"] = s["offset"]
-        feats["media_ref"] = None
-        out.append(feats)
-    return out
+    """Stage 1-2 (see :func:`_line_records`) over span dicts."""
+    return _line_records(span_columns(spans), cfg)
 
 
 def reconstruct_blocks(
@@ -156,50 +167,77 @@ def reconstruct_blocks(
     return merged
 
 
-def extract_document(
-    spans: Sequence[Dict[str, Any]], cfg: ExtractConfig = ExtractConfig()
-) -> List[Dict[str, Any]]:
-    """Full pipeline for one document -> ordered output span sequence
-    ``[{kind, text, media_ref, order}, ...]``."""
-    records = reconstruct_blocks(spans, cfg)
-    n_segs = max((r["seg"] for r in records), default=-1) + 1
+def _segments(
+    cols: Sequence[Sequence[Any]], cfg: ExtractConfig
+) -> Tuple[int, Dict[int, List[Dict[str, Any]]], Dict[int, Dict[str, Any]]]:
+    """Stages 1-3 grouped by media segment: ``(n_segs, blocks_by_seg,
+    media_by_seg)``. Blocks keep offset order; a segment's media record is
+    the last non-text span that carries its index."""
+    media_by_seg: Dict[int, Dict[str, Any]] = {}
+    text_lines: List[Dict[str, Any]] = []
+    for r in _line_records(cols, cfg):
+        if r["kind"] == "text":
+            text_lines.append(r)
+        else:
+            media_by_seg[r["seg"]] = r
+    blocks_by_seg: Dict[int, List[Dict[str, Any]]] = {}
+    for b in reconstruct_wrapped_lines(text_lines):
+        blocks_by_seg.setdefault(b["seg"], []).append(b)
+    n_segs = max(max(blocks_by_seg, default=-1), max(media_by_seg, default=-1)) + 1
+    return n_segs, blocks_by_seg, media_by_seg
 
-    chunker = SectionChunker(
+
+def _chunker(cfg: ExtractConfig) -> SectionChunker:
+    return SectionChunker(
         max_chunk_size=cfg.max_chunk_size,
         chunk_overlap=cfg.chunk_overlap,
         use_section_awareness=cfg.use_section_awareness,
     )
 
-    media_by_seg: Dict[int, Dict[str, Any]] = {}
-    blocks_by_seg: Dict[int, List[Dict[str, Any]]] = {}
-    for r in records:
-        if r["kind"] == "text":
-            blocks_by_seg.setdefault(r["seg"], []).append(r)
-        else:
-            media_by_seg[r["seg"]] = r
 
-    out: List[Dict[str, Any]] = []
+def extract_columns(
+    kinds: Sequence[str],
+    texts: Sequence[Optional[str]],
+    refs: Sequence[Optional[str]],
+    offsets: Sequence[int],
+    pages: Sequence[Optional[int]],
+    sizes: Sequence[Optional[float]],
+    bolds: Sequence[Optional[bool]],
+    cfg: ExtractConfig = ExtractConfig(),
+) -> List[Tuple[str, Optional[str], Optional[str]]]:
+    """THE kernel: one document given as parallel span columns (one entry
+    per span, :data:`SPAN_FIELDS` order) -> its ordered output spans as
+    ``(kind, text, media_ref)``; a span's ``order`` is its list index.
+
+    Every extraction path runs this function: the eager oracle through
+    :func:`extract_document`, the fused Spark path straight from Arrow
+    batches (``operators/extraction.fused_extract``)."""
+    n_segs, blocks_by_seg, media_by_seg = _segments(
+        (kinds, texts, refs, offsets, pages, sizes, bolds), cfg
+    )
+    chunker = _chunker(cfg)
+    out: List[Tuple[str, Optional[str], Optional[str]]] = []
     for seg in range(n_segs):
-        blocks = blocks_by_seg.get(seg, [])
+        blocks = blocks_by_seg.get(seg)
         if blocks:
-            marked = blocks_to_marked_text(blocks)
-            cleaned, _ = clean(marked, validate=False)
-            for ch in chunker.chunk(cleaned):
-                out.append(
-                    {"kind": "text", "text": ch["text"], "media_ref": None}
-                )
+            cleaned, _ = clean(blocks_to_marked_text(blocks), validate=False)
+            out.extend(("text", ch["text"], None) for ch in chunker.chunk(cleaned))
         m = media_by_seg.get(seg)
         if m is not None:
-            out.append(
-                {
-                    "kind": m["kind"],
-                    "text": m.get("text"),
-                    "media_ref": m.get("media_ref"),
-                }
-            )
-    for i, rec in enumerate(out):
-        rec["order"] = i
+            out.append((m["kind"], m["text"], m["media_ref"]))
     return out
+
+
+def extract_document(
+    spans: Sequence[Dict[str, Any]], cfg: ExtractConfig = ExtractConfig()
+) -> List[Dict[str, Any]]:
+    """Full pipeline for one document -> ordered output span sequence
+    ``[{kind, text, media_ref, order}, ...]`` (:func:`extract_columns` over
+    span dicts)."""
+    return [
+        {"kind": k, "text": t, "media_ref": r, "order": i}
+        for i, (k, t, r) in enumerate(extract_columns(*span_columns(spans), cfg))
+    ]
 
 
 def chunk_records(
@@ -208,22 +246,12 @@ def chunk_records(
     """Chunk rows with full metadata (analog of the reference's chunks table,
     ``src/vector_store/schema.py:55-78``): ``{seg, chunk_index, text,
     chunk_size, metadata}`` with doc-global chunk_index."""
-    records = reconstruct_blocks(spans, cfg)
-    chunker = SectionChunker(
-        max_chunk_size=cfg.max_chunk_size,
-        chunk_overlap=cfg.chunk_overlap,
-        use_section_awareness=cfg.use_section_awareness,
-    )
-    blocks_by_seg: Dict[int, List[Dict[str, Any]]] = {}
-    for r in records:
-        if r["kind"] == "text":
-            blocks_by_seg.setdefault(r["seg"], []).append(r)
-
+    _, blocks_by_seg, _ = _segments(span_columns(spans), cfg)
+    chunker = _chunker(cfg)
     out: List[Dict[str, Any]] = []
     idx = 0
     for seg in sorted(blocks_by_seg):
-        marked = blocks_to_marked_text(blocks_by_seg[seg])
-        cleaned, _ = clean(marked, validate=False)
+        cleaned, _ = clean(blocks_to_marked_text(blocks_by_seg[seg]), validate=False)
         for ch in chunker.chunk(cleaned):
             out.append(
                 {

@@ -24,20 +24,26 @@ PAGE_MARKER_RE = re.compile(r"-+\s*Page\s+\d+\s*-+\s*\n", flags=re.IGNORECASE)
 # src/config/constants.py:101
 MAX_CONTENT_LOSS_PCT = 10.0
 
-_SPACES_RE = re.compile(r" +")
+# ``" {2,}"`` rewrites exactly what the reference's ``" +"`` changes (a lone
+# space maps to itself) without a substitution per single space
+_SPACES_RE = re.compile(r" {2,}")
 _NEWLINES_RE = re.compile(r"\n{3,}")
 _NONSPACE_RE = re.compile(r"\s")
 
 
 def remove_page_markers(text: str) -> str:
     """Remove page-break markers like ``--- Page 7 ---\\n``."""
-    return PAGE_MARKER_RE.sub("", text)
+    # every marker contains a "-"; the guard skips the regex scan otherwise
+    return PAGE_MARKER_RE.sub("", text) if "-" in text else text
 
 
 def normalize_whitespace(text: str) -> str:
-    """Collapse space runs, cap blank lines at one, strip each line."""
-    text = _SPACES_RE.sub(" ", text)
-    text = _NEWLINES_RE.sub("\n\n", text)
+    """Collapse space runs, cap blank lines at one, strip each line. Each
+    substitution runs only when its pattern can match."""
+    if "  " in text:
+        text = _SPACES_RE.sub(" ", text)
+    if "\n\n\n" in text:
+        text = _NEWLINES_RE.sub("\n\n", text)
     return "\n".join(line.strip() for line in text.split("\n"))
 
 

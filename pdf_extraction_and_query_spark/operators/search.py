@@ -1622,12 +1622,13 @@ def mrl_recall(
     over the scored frame, and the overlap join runs on the tiny
     (n_queries * |MRL_DIMS| * k) ranked frame."""
     # the full-dim frame anchors recall: if EMBED_DIM leaves MRL_DIMS the
-    # report silently flatlines at 0 instead of failing (round-4 ADVICE.md;
-    # mirrored by the comment at contract.MRL_DIMS)
-    assert C.EMBED_DIM in C.MRL_DIMS, (
-        f"mrl_recall needs the full dimension {C.EMBED_DIM} in MRL_DIMS "
-        f"{C.MRL_DIMS} as the recall anchor"
-    )
+    # report silently flatlines at 0 instead of failing (mirrored by the
+    # comment at contract.MRL_DIMS); a raise, not an assert, survives -O
+    if C.EMBED_DIM not in C.MRL_DIMS:
+        raise ValueError(
+            f"mrl_recall needs the full dimension {C.EMBED_DIM} in MRL_DIMS "
+            f"{C.MRL_DIMS} as the recall anchor"
+        )
     qs = embeddings.where(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("q_id"),
         fixed_point_vec(F.col("embedding")).alias("qv"),

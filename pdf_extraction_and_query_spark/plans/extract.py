@@ -7,9 +7,10 @@
   (doc_id / (doc_id,norm) / (doc_id,page) / (doc_id,seg)); page-level
   grouping bounds straggler size for 1000-page documents; AQE splits any
   residual skewed partitions.
-* ``mode='fused'``: one narrow ``mapInPandas`` pass running the eager kernel
-  per document — zero shuffles, best raw throughput when the corpus is
-  mostly small documents; no intra-document parallelism.
+* ``mode='fused'``: one narrow ``mapInArrow`` pass running the columnar
+  kernel per document straight from Arrow span batches — zero shuffles,
+  best raw throughput when the corpus is mostly small documents; no
+  intra-document parallelism.
 
 Both must produce identical span sequences (enforced by
 tests/test_pipeline_equality.py against the eager oracle).
@@ -54,7 +55,7 @@ def extract_spans(
     """Ordered output spans (doc_id, order, kind, text, media_ref).
 
     Modes: ``staged`` (shuffled, page-parallel — survives 1000-page
-    stragglers), ``fused`` (zero-shuffle mapInPandas — fastest on uniform
+    stragglers), ``fused`` (zero-shuffle mapInArrow — fastest on uniform
     small docs), ``hybrid`` (size-aware routing: the skew treatment the
     north rule asks for — the long tail of small docs streams through the
     narrow path while oversized docs get intra-document page parallelism;

@@ -79,9 +79,14 @@ def submit(
         capture_output=True, text=True, cwd=workdir, timeout=3600,
         check=True, env=env,
     )
-    return json.loads(
+    rep = json.loads(
         [l for l in r.stdout.splitlines() if l.startswith("{")][-1]
     )
+    # a failed submit raised above and leaves its output for inspection; a
+    # parsed one frees the per-run sink (RAM-backed under /dev/shm)
+    if sink:
+        shutil.rmtree(sink_root, ignore_errors=True)
+    return rep
 
 
 def main() -> None:

@@ -46,3 +46,11 @@ def test_mrl_recall_matches_numpy_replay(emb):
             assert out[(q, d)] == (n, (1_000_000 * n) // C.TOPK), (q, d)
         # the full-dim anchor row is always perfect recall
         assert out[(q, C.EMBED_DIM)] == (C.TOPK, 1_000_000)
+
+
+def test_mrl_recall_rejects_dims_without_full_anchor(emb, monkeypatch):
+    """Without EMBED_DIM in MRL_DIMS recall would flatline at 0; the guard
+    is a ValueError (an assert would vanish under python -O)."""
+    monkeypatch.setattr(C, "MRL_DIMS", (8, 16, 32))
+    with pytest.raises(ValueError, match="recall anchor"):
+        S.mrl_recall(emb)

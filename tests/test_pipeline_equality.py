@@ -108,3 +108,92 @@ def test_extract_arrays_shape(spark, corpus, oracle_out):
     assert set(got) == set(nonempty)
     for doc_id, expected in nonempty.items():
         assert got[doc_id] == expected, doc_id
+
+
+def _span(kind, text, offset, media_ref=None, **fields):
+    return {"kind": kind, "text": text, "media_ref": media_ref, "offset": offset, **fields}
+
+
+def test_fused_edge_cases_match_oracle(spark):
+    """Arrow-batch edge cases of the fused path: more docs than
+    ``arrow.maxRecordsPerBatch`` (several batches), a batch in which
+    ``font_size``/``bold``/``page`` are null in every span, an empty
+    ``spans`` array, docs with zero output rows, and a span schema without
+    ``page``/``font_size``/``bold`` at all."""
+    from pyspark.sql import types as T
+
+    from pdf_extraction_and_query_spark.sources.corpus import SPAN_STRUCT
+
+    nulls = dict(page=None, font_size=None, bold=None)
+    bare = [
+        ("bare0", [_span("text", f"bare doc line {i} that is long enough", i) for i in range(3)]),
+        ("bare1", [
+            _span("page_marker", "--- Page 1 ---", 0),
+            _span("figure", "Figure 1", 1, "fig://b/1"),
+            _span("text", "after the figure", 2),
+        ]),
+    ]
+    # bare0 and bare1 have page/font_size/bold null throughout: the batch
+    # holding just them (the first, at local[4]) has all-null children
+    docs = [(d, [{**s, **nulls} for s in spans]) for d, spans in bare] + [
+        ("empty", []),
+        ("markers", [_span("page_marker", "--- Page 1 ---", 0, **nulls)]),
+        ("blank", [_span("text", "  ", 0, **nulls), _span("text", None, 1, **nulls)]),
+    ] + synth_docs(4, seed=7)
+    oracle = {
+        d: [(r["order"], r["kind"], r["text"], r["media_ref"]) for r in extract_document(s, CFG)]
+        for d, s in docs
+    }
+    assert not oracle["empty"] and not oracle["markers"] and not oracle["blank"]
+
+    fields = ("kind", "text", "media_ref", "offset")
+    bare_struct = T.StructType([SPAN_STRUCT[f] for f in fields])
+    bare_df = spark.createDataFrame(
+        [(d, [{f: s[f] for f in fields} for s in spans]) for d, spans in bare],
+        T.StructType([
+            T.StructField("doc_id", T.StringType()),
+            T.StructField("spans", T.ArrayType(bare_struct)),
+        ]),
+    )
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        got = _collect(extract_spans(docs_to_df(spark, docs), CFG, mode="fused"))
+        got_bare = _collect(extract_spans(bare_df, CFG, mode="fused"))
+    finally:
+        spark.conf.set(key, old)
+    _assert_equal(got, oracle)
+    _assert_equal(got_bare, {d: oracle[d] for d, _ in bare})
+
+
+def test_span_lists_rebase_sliced_batches():
+    """A sliced Arrow batch keeps its parent's list offsets; each doc's
+    bounds must be rebased onto the flattened slice."""
+    import pyarrow as pa
+
+    from pdf_extraction_and_query_spark.operators.extraction import _span_lists
+
+    typ = pa.list_(
+        pa.struct([("kind", pa.string()), ("offset", pa.int32()), ("font_size", pa.float64())])
+    )
+    arr = pa.array(
+        [
+            [{"kind": "a", "offset": 0, "font_size": 1.0}],
+            [],
+            [
+                {"kind": "b", "offset": 5, "font_size": float("nan")},
+                {"kind": "c", "offset": 6, "font_size": 2.5},
+            ],
+            [{"kind": "d", "offset": 7, "font_size": None}],
+        ],
+        typ,
+    )
+    cols, bounds = _span_lists(arr.slice(1, 2))
+    assert bounds == [0, 0, 2]
+    assert cols[0] == ["b", "c"] and cols[3] == [5, 6]
+    assert cols[5] == [None, 2.5]  # NaN reads as missing
+    assert cols[1] == cols[4] == cols[6] == [None, None]  # absent fields
+    cols, bounds = _span_lists(arr)
+    assert bounds == [0, 1, 1, 3, 4]
+    assert cols[5] == [1.0, None, 2.5, None]

@@ -10,13 +10,14 @@ import re
 
 from hypothesis import given, settings, strategies as st
 
+from pdf_extraction_and_query_spark.core.boilerplate import normalize_line
 from pdf_extraction_and_query_spark.core.chunker import SectionChunker
 from pdf_extraction_and_query_spark.core.docpipe import ExtractConfig, extract_document
 from pdf_extraction_and_query_spark.core.splitter import (
     DEFAULT_SEPARATORS,
     RecursiveCharacterSplitter,
 )
-from pdf_extraction_and_query_spark.core.textclean import clean
+from pdf_extraction_and_query_spark.core.textclean import PAGE_MARKER_RE, clean
 
 # words + whitespace + punctuation + unicode, biased toward text-like input
 _text = st.text(
@@ -49,6 +50,52 @@ def test_splitter_preserves_content_order(text, size):
         found = text.find(c, pos)
         assert found >= 0, (c, pos)
         pos = found
+
+
+# the regex specs the fast paths replace: the oracles for the two tests below
+_SPEC_DIGITS_RE = re.compile(r"\d+")
+_SPEC_WS_RE = re.compile(r"\s+")
+
+
+def _spec_normalize_line(t):
+    return _SPEC_WS_RE.sub(" ", _SPEC_DIGITS_RE.sub("0", t.lower())).strip()
+
+
+def _spec_clean(t):
+    t = PAGE_MARKER_RE.sub("", t)
+    t = re.sub(r" +", " ", t)
+    t = re.sub(r"\n{3,}", "\n\n", t)
+    return "\n".join(line.strip() for line in t.split("\n"))
+
+
+# any code point, biased toward the ones the fast paths must get right:
+# Unicode whitespace and digits, case mappings that change length or
+# context (final sigma, dotted I, ligatures), and page-marker pieces
+_unicode_text = st.lists(
+    st.one_of(
+        st.sampled_from(
+            [" ", "  ", "\n", "\n\n\n", "\t", "-", "--- Page 7 ---\n", "-page 3-\n",
+             "- PAGE ٣ -\n", "Page", "7",
+             "\u3000", "\x1c", "\x1f", "\x85", "\xa0", "\u2028", "\u200b",
+             "\u0663", "\u06f4", "\u0e53", "\u2460", "\u00b2",
+             "\u03a3", "\u0130", "\ufb01", "\u00df", "\u212a"]
+        ),
+        st.characters(),
+    ),
+    max_size=120,
+).map("".join)
+
+
+@settings(max_examples=300, deadline=None)
+@given(_unicode_text)
+def test_normalize_line_equals_regex_spec(text):
+    assert normalize_line(text) == _spec_normalize_line(text)
+
+
+@settings(max_examples=300, deadline=None)
+@given(_unicode_text)
+def test_clean_equals_three_sub_spec(text):
+    assert clean(text, validate=False)[0] == _spec_clean(text)
 
 
 @settings(max_examples=100, deadline=None)
