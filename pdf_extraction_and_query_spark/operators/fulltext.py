@@ -478,14 +478,16 @@ def bm25_topk_prebuilt(
     not the index.  The bucket list is a driver-side planning step over the
     literal query terms (metadata, not data — same pattern as
     ``search.ivf_topk_prebuilt``'s probe-list planning)."""
+    from ..sources.tables import read_versioned
+
+    # the streaming FTS maintainer folds into versions of these tables
     queries = queries or C.FTS_QUERIES
-    stats = spark.read.parquet(f"{path}/_stats")
+    stats, _ = read_versioned(spark, f"{path}/_stats")
     n_buckets = int(stats.collect()[0]["n_buckets"])
     buckets = query_term_buckets(spark, queries, n_buckets)
-    post = spark.read.parquet(f"{path}/postings").where(
-        F.col("bucket").isin(buckets)
-    )
-    dl = spark.read.parquet(f"{path}/doclen")
+    post, _ = read_versioned(spark, f"{path}/postings")
+    post = post.where(F.col("bucket").isin(buckets))
+    dl, _ = read_versioned(spark, f"{path}/doclen")
     return score_candidates(post, dl, stats, queries, k)
 
 

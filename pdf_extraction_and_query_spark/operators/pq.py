@@ -480,9 +480,9 @@ def ivfpq_topk_prebuilt(
         dtype=np.int64,
     )
     lut = query_lut(cb, qv)
-    codes = tables.read_table(spark, f"{index_path}/codes").where(
-        F.col("cent_id").isin(probe_ids)
-    )
+    # the streaming IVFADC maintainer folds into versions of this table
+    codes, _ = tables.read_versioned(spark, f"{index_path}/codes")
+    codes = codes.where(F.col("cent_id").isin(probe_ids))
     shortlist = (
         codes.select("vec_id", _adc_literal_score(lut).alias("adot_e12"))
         .orderBy(F.desc("adot_e12"), F.asc("vec_id"))

@@ -15,11 +15,15 @@ API surface used by the engine:
   * ``overwrite_partitions(df, ident, cols)`` — idempotent dynamic overwrite
   * ``delete_where(spark, ident, cond)``  — delete (Iceberg DELETE / parquet
                                             anti-filter rewrite)
+  * ``read_versioned`` / ``replace_versioned`` / ``drop_versions``
+                                          — atomically swapped versioned
+                                            base (streaming/deltaindex)
 """
 
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -62,6 +66,86 @@ def replace_table(df: DataFrame, ident: str) -> None:
         df.writeTo(f"{CATALOG}.{ident}").createOrReplace()
     else:
         df.write.mode("overwrite").parquet(ident)
+
+
+VERSION_PROPERTY = "folded_max"  # Iceberg table property holding the version
+_VERSION_DIR = re.compile(r"v(-?\d+)")
+
+
+def _fs(spark: SparkSession, ident: str):
+    """(Hadoop FileSystem of ``ident``, the ``Path`` class)."""
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    return Path(ident).getFileSystem(spark._jsc.hadoopConfiguration()), Path
+
+
+def read_versioned(spark: SparkSession, ident: str) -> tuple[DataFrame, int]:
+    """The current version of a versioned table and its number.  Parquet:
+    the highest ``<ident>/v<N>`` directory; a table with no ``v<N>`` child
+    (a plain :func:`replace_table` or batch-builder layout) reads whole as
+    version -1.  Iceberg: the table and its ``folded_max`` property."""
+    if _is_iceberg():
+        props = spark.sql(f"SHOW TBLPROPERTIES {CATALOG}.{ident}").collect()
+        version = {r["key"]: r["value"] for r in props}.get(VERSION_PROPERTY, -1)
+        return read_table(spark, ident), int(version)
+    fs, Path = _fs(spark, ident)
+    root = Path(ident)
+    versions = [
+        int(m.group(1))
+        for st in (fs.listStatus(root) if fs.exists(root) else [])
+        if st.isDirectory()
+        and (m := _VERSION_DIR.fullmatch(st.getPath().getName()))
+    ]
+    if not versions:
+        return read_table(spark, ident), -1
+    n = max(versions)
+    return spark.read.parquet(f"{ident}/v{n}"), n
+
+
+def replace_versioned(
+    df: DataFrame, ident: str, version: int, partition_cols=()
+) -> None:
+    """Publish ``df`` as version ``version`` of ``ident`` in one atomic
+    step: a reader sees the previous version or this one, never a partial
+    or empty table.  Parquet: a cluster-parallel write under a hidden temp
+    name, then ONE directory rename to ``<ident>/v<version>`` (atomic on
+    HDFS and local filesystems, not on object stores; older versions stay
+    until :func:`drop_versions`).  Iceberg: ``createOrReplace`` carrying
+    the version as a table property."""
+    if _is_iceberg():
+        writer = df.writeTo(f"{CATALOG}.{ident}").tableProperty(
+            VERSION_PROPERTY, str(version)
+        )
+        if partition_cols:
+            writer = writer.partitionedBy(*partition_cols)
+        writer.createOrReplace()
+        return
+    import uuid
+
+    tmp = f"{ident}/_v{version}.{uuid.uuid4().hex[:8]}"
+    writer = df.write
+    if partition_cols:
+        writer = writer.partitionBy(*partition_cols)
+    writer.parquet(tmp)
+    fs, Path = _fs(df.sparkSession, ident)
+    dst = Path(f"{ident}/v{version}")
+    fs.delete(dst, True)  # only a re-init re-publishes an existing version
+    if not fs.rename(Path(tmp), dst):
+        raise IOError(f"versioned replace: rename {tmp} -> {dst} failed")
+
+
+def drop_versions(spark: SparkSession, ident: str, keep: int) -> None:
+    """Delete everything under ``ident`` but ``v<keep>``: older versions, a
+    pre-versioning plain layout, temp directories of crashed writes.  A
+    no-op until ``v<keep>`` exists, and on Iceberg (snapshot expiry is the
+    catalog's maintenance)."""
+    if _is_iceberg():
+        return
+    fs, Path = _fs(spark, ident)
+    if not fs.exists(Path(f"{ident}/v{keep}")):
+        return
+    for st in fs.listStatus(Path(ident)):
+        if st.getPath().getName() != f"v{keep}":
+            fs.delete(st.getPath(), True)
 
 
 def overwrite_partitions(df: DataFrame, ident: str, partition_cols: list[str]) -> None:

@@ -5,7 +5,7 @@ A search index attributes anchor text to the TARGET page — and fresh
 crawls keep arriving, so the signal must maintain incrementally.  The
 level-1 ``(href, anchor_text, cnt, cnt_main)`` partials are pure sums
 (fully associative), so this reuses the shared summary-delta engine
-(``streaming/deltaindex.py``: batch_id delta partitions, ``folded_max``
+(``streaming/deltaindex.py``: batch_id delta partitions, fold
 watermark, snapshot-pinned compaction) verbatim; the level-2 rollup —
 most-common text, deterministic tie-break — applies ON READ through the
 SAME :func:`anchor_agg_from_partials` the batch operator runs, so the
@@ -18,7 +18,6 @@ from __future__ import annotations
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.htmlextract import (
     anchor_agg_from_partials,
@@ -69,22 +68,3 @@ def anchor_agg_merged(spark: SparkSession, root: str) -> DataFrame:
 def anchorindex_compact(spark: SparkSession, root: str) -> None:
     """Fold unfolded deltas into the base; no-op when none exist."""
     deltaindex.compact(spark, root, _SUMMARY_COLS, merge_anchor_partials)
-
-
-def stream_anchorindex_maintenance(
-    spark: SparkSession,
-    input_dir: str,
-    root: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Watch ``input_dir`` for new page parquet files (doc_id, html) and
-    keep the anchor-text index current (delta appends; run
-    ``anchorindex_compact`` on a maintenance cadence)."""
-    stream = spark.readStream.schema(PAGES_SCHEMA).parquet(input_dir)
-    writer = stream.writeStream.foreachBatch(
-        make_anchorindex_batch_processor(root)
-    ).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

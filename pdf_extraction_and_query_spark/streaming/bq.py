@@ -7,24 +7,17 @@ there is nothing to freeze at init — a streamed vector's sketch is a
 pure function of the vector forever, and merged == one-shot holds with
 no seam semantics at all.
 
-Layout under one index root:
-  sketches/  (vec_id, srp)  — the compacted 8 B/vector base
-  delta/     batch_id=N     — per-micro-batch sketch appends; clear +
-             batch_id partition-overwrite = exactly-once on replay.
+The index is a row index (vec_id, srp), 8 B/vector, on the delta-index
+engine (``streaming/deltaindex.py``) with the identity merge.
 
 ``bq_topk_merged`` Hamming-ranks base ∪ deltas (sketch-only scan, JVM
 popcount) and re-ranks the shortlist against the PRIMARY vector table
 the caller passes — the index never stores raw vectors, exactly the
 streaming/pq.py split.  ``bq_stream_compact`` folds deltas.
-
-PARQUET-BACKEND-ONLY: like the sibling maintainers, this module manages
-its LSM layout directly on the filesystem by design (see
-streaming/pq.py's module docstring for the Iceberg-native equivalent).
 """
 
 from __future__ import annotations
 
-import shutil
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -34,30 +27,23 @@ from .. import contract as C
 from ..operators.bq import bq_sketches
 from ..operators.dedup import srp_words
 from ..operators.search import _dot_vec, _rank_topk, fixed_point_vec
-from ..sources import tables
-from ..sources.tables import read_optional as _read_delta
+from . import deltaindex as DX
+
+_COLS = ["vec_id", "srp"]
 
 
 def bq_stream_init(embeddings: DataFrame, root: str) -> None:
     """Sketch the initial corpus (no quantizer state to persist — the
     hyperplanes are contract constants)."""
-    bq_sketches(embeddings).write.mode("overwrite").parquet(
-        f"{root}/sketches"
-    )
+    DX.init_index(bq_sketches(embeddings), root)
 
 
 def make_bq_batch_processor(root: str) -> Callable[[DataFrame, int], None]:
     """``foreachBatch`` body: sketch the batch's vectors and write them
-    as a batch_id delta partition."""
+    as its delta partition."""
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        bid = int(batch_id)
-        out = bq_sketches(batch_df).withColumn(
-            "batch_id", F.lit(bid).cast("long")
-        )
-        tables.clear_partitions(spark, f"{root}/delta", "batch_id", [bid])
-        tables.overwrite_partitions(out, f"{root}/delta", ["batch_id"])
+        DX.write_delta(bq_sketches(batch_df), root, batch_id)
 
     return process_batch
 
@@ -74,10 +60,7 @@ def bq_topk_merged(
     re-rank against ``vectors`` — the primary (vec_id, embedding) table,
     which must cover every indexed vector.  Row-identical to the batch
     :func:`~..operators.bq.bq_topk` over the same corpus."""
-    sk = spark.read.parquet(f"{root}/sketches").select("vec_id", "srp")
-    delta = _read_delta(spark, f"{root}/delta")
-    if delta is not None:
-        sk = sk.unionByName(delta.select("vec_id", "srp"))
+    sk = DX.read_merged(spark, root, _COLS)
     qword = int(
         srp_words(vectors.where(F.col("vec_id") == query_vec_id))
         .collect()[0]["srp"]
@@ -112,18 +95,6 @@ def bq_topk_merged(
 
 
 def bq_stream_compact(spark: SparkSession, root: str) -> None:
-    """Fold delta sketches into the base table and clear them
-    (parquet-backend non-atomicity caveat as in streaming/fts)."""
-    delta = _read_delta(spark, f"{root}/delta")
-    if delta is None:
-        return
-    base = spark.read.parquet(f"{root}/sketches")
-    merged = base.select("vec_id", "srp").unionByName(
-        delta.select("vec_id", "srp")
-    )
-    tmp = f"{root}/sketches__compact"
-    merged.write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(f"{root}/sketches")
-    shutil.move(tmp, f"{root}/sketches")
-    shutil.rmtree(f"{root}/delta", ignore_errors=True)
-    spark.catalog.refreshByPath(root)
+    """Fold delta sketches into a new base version (see
+    streaming/deltaindex)."""
+    DX.compact(spark, root, _COLS)

@@ -31,7 +31,6 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.eventflow import (
     cascade_from_partials,
@@ -125,22 +124,3 @@ def cascade_merged(spark: SparkSession, root: str) -> DataFrame:
 def cascade_compact(spark: SparkSession, root: str) -> None:
     deltaindex.compact(spark, f"{root}/hourly", _HOURLY_COLS, _merge_hourly)
     deltaindex.compact(spark, f"{root}/regs", _REG_COLS, _merge_regs)
-
-
-def stream_cascade_maintenance(
-    spark: SparkSession,
-    input_dir: str,
-    root: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Watch ``input_dir`` for new event parquet files and keep the
-    continuous aggregate current (delta appends; run ``cascade_compact``
-    on a maintenance cadence)."""
-    stream = spark.readStream.schema(EVENTS_SCHEMA).parquet(input_dir)
-    writer = stream.writeStream.foreachBatch(
-        make_cascade_batch_processor(root)
-    ).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

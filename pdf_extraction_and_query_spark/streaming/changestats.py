@@ -18,7 +18,7 @@ count of version rows, n_crawls = sum of counts, latest_changed =
 version(#1) != version(#2).
 
 Same ``deltaindex`` discipline as the rest of the family (count-carrying
-summaries: batch_id deltas, folded_max watermark, snapshot-pinned
+summaries: batch_id deltas, fold watermark, snapshot-pinned
 compaction); merged reads move summary rows only — never pages.
 """
 
@@ -28,7 +28,6 @@ from typing import Callable, Iterable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.htmlextract import TS_UNKNOWN
 from . import deltaindex
@@ -204,21 +203,3 @@ def change_stats_merged(spark: SparkSession, root: str) -> DataFrame:
 def change_stats_compact(spark: SparkSession, root: str) -> None:
     """Fold unfolded deltas into the base; no-op when none exist."""
     deltaindex.compact(spark, root, _SUMMARY_COLS, merge_change)
-
-
-def stream_change_stats_maintenance(
-    spark: SparkSession,
-    input_dir: str,
-    root: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Watch ``input_dir`` for new crawl parquet files (doc_id, html,
-    fetched_at_ts) and keep the change statistics current."""
-    stream = spark.readStream.schema(PAGES_TS_SCHEMA).parquet(input_dir)
-    writer = stream.writeStream.foreachBatch(
-        make_change_batch_processor(root)
-    ).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

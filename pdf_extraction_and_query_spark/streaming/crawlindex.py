@@ -15,7 +15,7 @@ answers the indexable-corpus gate too (``crawl_corpus_merged``) — no page
 is ever re-parsed to re-derive policy.
 
 Because keep-latest carries COUNTS (non-idempotent under re-merge), the
-exactly-once/compaction discipline — the ``folded_max`` watermark column,
+exactly-once/compaction discipline — the fold watermark (the base version number),
 the snapshot-pinned partition-exact clear, the root+checkpoint durability
 contract — lives in the shared engine ``streaming/deltaindex.py``; this
 module contributes only the crawl-specific pieces: the head-metadata parse
@@ -25,10 +25,7 @@ Scale shape: the per-batch parse is one narrow Arrow pass carrying
 (doc_id, canonical, fetched_at_ts) — canonical extraction and the fetch
 timestamp travel in the SAME pass, no join back to the batch.  The batch
 summary is one hash-agg on canonical (micro-batch sized); merged reads and
-compaction move summary rows only, never pages.  Parquet-backend caveat:
-a crash MID-write of the base rewrite is non-atomic for concurrent
-readers — same documented limitation as ``fts_compact``; an Iceberg
-catalog's transactional rewrite is the production path.
+compaction move summary rows only, never pages.
 """
 
 from __future__ import annotations
@@ -37,7 +34,6 @@ from typing import Callable, Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.htmlextract import (
     TS_UNKNOWN,
@@ -150,22 +146,3 @@ def crawl_compact(spark: SparkSession, root: str) -> None:
     """Fold unfolded deltas into the base index; a no-op when no deltas
     exist (race/crash discipline in ``deltaindex.compact``)."""
     deltaindex.compact(spark, root, _SUMMARY_COLS, merge_keep_latest_full)
-
-
-def stream_crawl_maintenance(
-    spark: SparkSession,
-    input_dir: str,
-    root: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Watch ``input_dir`` for new page parquet files (doc_id, html,
-    fetched_at_ts) and keep the crawl index current (delta appends; run
-    ``crawl_compact`` on a maintenance cadence)."""
-    stream = spark.readStream.schema(PAGES_TS_SCHEMA).parquet(input_dir)
-    writer = stream.writeStream.foreachBatch(
-        make_crawl_batch_processor(root)
-    ).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

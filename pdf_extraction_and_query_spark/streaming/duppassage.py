@@ -18,7 +18,7 @@ micro-batch replayed after compaction already folded it (crash between
 ``foreachBatch`` returning and the checkpoint commit, with a maintenance
 compact in between) would silently inflate ``dfc`` — false dup evidence —
 and duplicate occurrence rows would corrupt the gaps-and-islands merge.
-The ``folded_max`` watermark makes that replay a no-op on read (pinned in
+The fold watermark makes that replay a no-op on read (pinned in
 the replay-after-compact test).  The row-shaped ``occ`` family uses the
 same engine with an identity merge: the watermark, not deduplication, is
 what keeps it exactly-once.
@@ -64,12 +64,6 @@ _OCC_COLS = ["doc_id", "nw", "start_w", "gram"]
 _DF_COLS = ["gram", "dfc"]
 
 
-def _occ_merge(df: DataFrame) -> DataFrame:
-    # occurrences are rows, not keyed summaries — the watermark alone
-    # provides exactly-once; merging is the identity
-    return df
-
-
 def _df_merge(df: DataFrame) -> DataFrame:
     return df.groupBy("gram").agg(F.sum("dfc").cast("long").alias("dfc"))
 
@@ -108,7 +102,7 @@ def make_dup_batch_processor(
 
 
 def _merged_occ(spark: SparkSession, root: str) -> DataFrame:
-    return DX.read_merged(spark, f"{root}/occ", _OCC_COLS, _occ_merge)
+    return DX.read_merged(spark, f"{root}/occ", _OCC_COLS)
 
 
 def _merged_evidence(spark: SparkSession, root: str) -> DataFrame:
@@ -142,5 +136,5 @@ def dup_compact(spark: SparkSession, root: str) -> None:
     """Fold both delta families into their bases under the shared
     watermark discipline (snapshot-pinned, crash-safe — see
     streaming/deltaindex.compact)."""
-    DX.compact(spark, f"{root}/occ", _OCC_COLS, _occ_merge)
+    DX.compact(spark, f"{root}/occ", _OCC_COLS)
     DX.compact(spark, f"{root}/df", _DF_COLS, _df_merge)

@@ -16,25 +16,17 @@ operators start from (user_id, event_type, event_id, ts_us, k) for the
 as-of/funnel event types only — at the fixture mix that is 3/5 of the
 stream reduced to five scalar columns; the text/props payload never
 lands.  A projected row is a PURE PER-EVENT function (no cross-event
-state), so the index is append-only on event_id and takes the simple LSM
-shape of ``streaming/minhash.py``, not the watermarked summary-delta
-engine — and like minhash's pair ``distinct()``, the read tail's
-``dropDuplicates(event_id)`` makes even the replay-after-compact race
-harmless (duplicate rows are identical by construction).
-
-Durability contract (family-wide, see streaming/deltaindex.py): the index
-root and the streaming checkpoint directory form ONE durable unit.
-PARQUET-BACKEND-ONLY compactor, like the ivf/pq/fts/minhash siblings.
+state), so the index is append-only on event_id: a row index on the
+delta-index engine (``streaming/deltaindex.py``), folded with
+``dropDuplicates(event_id)``.
 """
 
 from __future__ import annotations
 
-import shutil
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from .. import contract as C
 from ..operators.eventflow import (
@@ -43,8 +35,7 @@ from ..operators.eventflow import (
     event_funnel,
     funnel_report,
 )
-from ..sources import tables
-from ..sources.tables import read_optional as _read_delta
+from . import deltaindex as DX
 
 EVENTS_SCHEMA = (
     "event_id long, ts timestamp_ntz, user_id long, event_type string, "
@@ -63,32 +54,24 @@ def _project(events: DataFrame) -> DataFrame:
 
 def eventlog_init(events: DataFrame, root: str) -> None:
     """Build the base log from the events already ingested."""
-    _project(events).write.mode("overwrite").parquet(f"{root}/base")
+    DX.init_index(_project(events), root)
 
 
 def make_eventlog_batch_processor(root: str) -> Callable[[DataFrame, int], None]:
     """``foreachBatch`` body: project the batch's events and land them as
-    a ``batch_id`` delta partition (clear-then-overwrite = exactly-once
-    under replay)."""
+    its delta partition."""
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        bid = int(batch_id)
-        rows = _project(batch_df).withColumn(
-            "batch_id", F.lit(bid).cast("long")
-        )
-        tables.clear_partitions(spark, f"{root}/delta", "batch_id", [bid])
-        tables.overwrite_partitions(rows, f"{root}/delta", ["batch_id"])
+        DX.write_delta(_project(batch_df), root, batch_id)
 
     return process_batch
 
 
 def merged_log(spark: SparkSession, root: str) -> DataFrame:
-    """Base ∪ deltas, deduped — row-identical to the one-shot projection
-    over everything ingested (append-only contract; the dedup also
-    immunizes the replay-after-compact race, duplicate rows being
-    identical by construction — which is exactly why whole-row groupBy
-    dedup equals dropDuplicates(event_id) here).
+    """Base ∪ unfolded deltas, deduped — row-identical to the one-shot
+    projection over everything ingested (append-only contract; rows are a
+    pure function of the event, which is why whole-row groupBy dedup
+    equals the compactor's dropDuplicates(event_id) here).
 
     Plan shape: the dedup is a whole-row groupBy UNDER an explicit
     user_id repartition — HashPartitioning(user_id) satisfies the
@@ -96,12 +79,9 @@ def merged_log(spark: SparkSession, root: str) -> DataFrame:
     windows' user_id requirement, so the read pays ONE exchange total; a
     dropDuplicates(event_id) would shuffle the whole log a second time
     on a key nothing downstream uses (2 → 1 exchanges, measured)."""
-    out = spark.read.parquet(f"{root}/base").select(*_LOG_COLS)
-    delta = _read_delta(spark, f"{root}/delta")
-    if delta is not None:
-        out = out.unionByName(delta.select(*_LOG_COLS))
     return (
-        out.repartition("user_id")
+        DX.read_merged(spark, root, _LOG_COLS)
+        .repartition("user_id")
         .groupBy(*_LOG_COLS)
         .agg(F.count("*").alias("_dups"))
         .drop("_dups")
@@ -144,35 +124,7 @@ def funnel_report_merged(spark: SparkSession, root: str) -> DataFrame:
 
 
 def eventlog_compact(spark: SparkSession, root: str) -> None:
-    """Fold deltas into the base and clear them (parquet-backend
-    non-atomicity caveat as in streaming/minhash.minhash_compact)."""
-    delta = _read_delta(spark, f"{root}/delta")
-    if delta is None:
-        return
-    base = spark.read.parquet(f"{root}/base")
-    merged = base.select(*_LOG_COLS).unionByName(delta.select(*_LOG_COLS))
-    tmp = f"{root}/base__compact"
-    merged.dropDuplicates(["event_id"]).write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(f"{root}/base")
-    shutil.move(tmp, f"{root}/base")
-    shutil.rmtree(f"{root}/delta", ignore_errors=True)
-    spark.catalog.refreshByPath(root)
-
-
-def stream_eventlog_maintenance(
-    spark: SparkSession,
-    input_dir: str,
-    root: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Watch ``input_dir`` for new event parquet files and keep the
-    filtered event log current (delta appends; run ``eventlog_compact``
-    on a maintenance cadence)."""
-    stream = spark.readStream.schema(EVENTS_SCHEMA).parquet(input_dir)
-    writer = stream.writeStream.foreachBatch(
-        make_eventlog_batch_processor(root)
-    ).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    """Fold deltas into a new base version (see streaming/deltaindex)."""
+    DX.compact(
+        spark, root, _LOG_COLS, lambda log: log.dropDuplicates(["event_id"])
+    )

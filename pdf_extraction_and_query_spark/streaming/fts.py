@@ -1,12 +1,15 @@
 """Incremental full-text index maintenance under Structured Streaming.
 
-LSM shape over the ``fulltext.fts_build`` layout: every micro-batch of new
-documents appends its postings / doc-lengths / stats as DELTA partitions
-keyed by ``batch_id`` (clear + dynamic partition-overwrite = exactly-once
-under micro-batch replay, the ``streaming/ingest`` idiom);
-``bm25_topk_merged`` scores against base ∪ deltas with the shared exact
-scoring tail; ``fts_compact`` folds the accumulated deltas into the
-bucketed base and clears them.
+The three tables ``fulltext.fts_build`` writes — postings (partitioned by
+token-hash bucket), doc lengths and the one-row corpus stats — are each an
+index on the delta-index engine (``streaming/deltaindex.py``): every
+micro-batch of new documents lands its postings / doc-lengths / stats as
+``batch_id`` delta partitions (``delta_postings``, ``delta_doclen``,
+``delta_stats``); ``bm25_topk_merged`` scores against base ∪ unfolded
+deltas with the shared exact scoring tail; ``fts_compact`` folds each
+table under its own watermark (postings sum tf per (doc, token, bucket),
+doc lengths sum per doc, stats re-sum), so a crash between the three
+folds leaves every table complete.
 
 Contract: the corpus is APPEND-ONLY on doc_id (the same assumption the
 streaming ingest makes) — a doc_id re-appearing in a later batch would
@@ -23,12 +26,10 @@ reader prunes both sides.
 
 from __future__ import annotations
 
-import shutil
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from .. import contract as C
 from ..operators.fulltext import (
@@ -39,59 +40,72 @@ from ..operators.fulltext import (
     score_candidates,
 )
 from ..sources import tables
-from ..sources.tables import read_optional as _read_delta
-from ..sources.formats import DOCUMENTS_SCHEMA
+from . import deltaindex as DX
+
+# each fts_build table as an engine (base, delta) pair under the index path
+_POSTINGS = ("postings", "delta_postings")
+_DOCLEN = ("doclen", "delta_doclen")
+_STATS = ("_stats", "delta_stats")
+_POST_COLS = ["doc_id", "token", "tf", "bucket"]
+_DL_COLS = ["doc_id", "dl"]
+_STATS_COLS = ["n_docs", "sum_dl", "n_buckets"]
+
+
+def _at(index_path: str, table: tuple[str, str]) -> tuple[str, str]:
+    return tuple(f"{index_path}/{t}" for t in table)
+
+
+def _sum_tf(post: DataFrame) -> DataFrame:
+    return post.groupBy("doc_id", "token", "bucket").agg(F.sum("tf").alias("tf"))
+
+
+def _sum_dl(dl: DataFrame) -> DataFrame:
+    return dl.groupBy("doc_id").agg(F.sum("dl").alias("dl"))
+
+
+def _sum_stats(stats: DataFrame) -> DataFrame:
+    """One row (n_docs, sum_dl, avgdl_e3, n_buckets) — avgdl is RE-derived
+    from the summed totals, never averaged from per-source averages."""
+    return stats.agg(
+        F.sum("n_docs").cast("long").alias("n_docs"),
+        F.sum("sum_dl").cast("long").alias("sum_dl"),
+        F.max("n_buckets").alias("n_buckets"),
+    ).select(
+        "n_docs",
+        "sum_dl",
+        F.expr("(1000 * sum_dl) div n_docs").alias("avgdl_e3"),
+        "n_buckets",
+    )
 
 
 def _n_buckets(spark: SparkSession, index_path: str) -> int:
-    return int(
-        spark.read.parquet(f"{index_path}/_stats").collect()[0]["n_buckets"]
-    )
+    base, _ = tables.read_versioned(spark, f"{index_path}/_stats")
+    return int(base.collect()[0]["n_buckets"])
 
 
 def make_fts_batch_processor(index_path: str) -> Callable[[DataFrame, int], None]:
     """``foreachBatch`` body: write the batch's postings/doclen/stats as
-    batch_id-partitioned deltas.  Clear-then-overwrite makes a crashed
-    attempt's partial partition vanish on replay (exactly-once)."""
+    its delta partitions."""
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        bid = int(batch_id)
-        nb = _n_buckets(spark, index_path)
+        nb = _n_buckets(batch_df.sparkSession, index_path)
         post = postings(batch_df).withColumn(
             "bucket", F.pmod(F.xxhash64("token"), F.lit(nb))
         )
-        bcol = F.lit(bid).cast("long").alias("batch_id")
-        for sub, frame, parts in (
-            ("delta_postings", post.select("*", bcol), ["batch_id", "bucket"]),
-            ("delta_doclen", doc_lengths(post).select("*", bcol), ["batch_id"]),
-            ("delta_stats", corpus_stats(batch_df).select("*", bcol), ["batch_id"]),
-        ):
-            tables.clear_partitions(spark, f"{index_path}/{sub}", "batch_id", [bid])
-            tables.overwrite_partitions(frame, f"{index_path}/{sub}", parts)
+        stats = corpus_stats(batch_df).withColumn(
+            "n_buckets", F.lit(nb).cast("int")
+        )
+        DX.write_delta(post, _at(index_path, _POSTINGS), batch_id, ["bucket"])
+        DX.write_delta(doc_lengths(post), _at(index_path, _DOCLEN), batch_id)
+        DX.write_delta(stats, _at(index_path, _STATS), batch_id)
 
     return process_batch
 
 
 def _merged_stats(spark: SparkSession, index_path: str) -> DataFrame:
-    """One row (n_docs, sum_dl, avgdl_e3, n_buckets) over base + deltas —
-    avgdl is RE-derived from the summed totals, never averaged from the
-    per-source averages."""
-    base = spark.read.parquet(f"{index_path}/_stats").select(
-        "n_docs", "sum_dl", "n_buckets"
+    return DX.read_merged(
+        spark, _at(index_path, _STATS), _STATS_COLS, _sum_stats
     )
-    delta = _read_delta(spark, f"{index_path}/delta_stats")
-    if delta is not None:
-        base = base.unionByName(
-            delta.select("n_docs", "sum_dl").withColumn(
-                "n_buckets", F.lit(None).cast("int")
-            )
-        )
-    return base.agg(
-        F.sum("n_docs").cast("long").alias("n_docs"),
-        F.sum("sum_dl").cast("long").alias("sum_dl"),
-        F.max("n_buckets").alias("n_buckets"),
-    ).withColumn("avgdl_e3", F.expr("(1000 * sum_dl) div n_docs"))
 
 
 def bm25_topk_merged(
@@ -107,21 +121,11 @@ def bm25_topk_merged(
     nb = _n_buckets(spark, index_path)
     buckets = query_term_buckets(spark, queries, nb)
     post = (
-        spark.read.parquet(f"{index_path}/postings")
+        DX.read_merged(spark, _at(index_path, _POSTINGS), _POST_COLS)
         .where(F.col("bucket").isin(buckets))
         .select("doc_id", "token", "tf")
     )
-    dl = spark.read.parquet(f"{index_path}/doclen").select("doc_id", "dl")
-    dpost = _read_delta(spark, f"{index_path}/delta_postings")
-    if dpost is not None:
-        post = post.unionByName(
-            dpost.where(F.col("bucket").isin(buckets)).select(
-                "doc_id", "token", "tf"
-            )
-        )
-        ddl = _read_delta(spark, f"{index_path}/delta_doclen")
-        if ddl is not None:
-            dl = dl.unionByName(ddl.select("doc_id", "dl"))
+    dl = DX.read_merged(spark, _at(index_path, _DOCLEN), _DL_COLS)
     return score_candidates(post, dl, stats, queries, k)
 
 
@@ -138,72 +142,15 @@ def tfidf_topk_merged(
     from ..operators.fulltext import tfidf_from_postings
 
     stats = _merged_stats(spark, index_path)
-    post = spark.read.parquet(f"{index_path}/postings").select(
-        "doc_id", "token", "tf"
+    post = DX.read_merged(
+        spark, _at(index_path, _POSTINGS), ["doc_id", "token", "tf"]
     )
-    dpost = _read_delta(spark, f"{index_path}/delta_postings")
-    if dpost is not None:
-        post = post.unionByName(dpost.select("doc_id", "token", "tf"))
     return tfidf_from_postings(post, stats.select("n_docs"), k)
 
 
 def fts_compact(spark: SparkSession, index_path: str) -> None:
-    """Fold deltas into the bucketed base (partition-aligned: bucket ids
-    already agree) and clear them.  Parquet-backend caveat: the base
-    rewrite is not atomic for concurrent readers — same documented
-    limitation as ``tables._staged_swap``; the Iceberg backend's
-    rewrite_data_files is the production path."""
-    dpost = _read_delta(spark, f"{index_path}/delta_postings")
-    if dpost is None:
-        return
-    base = spark.read.parquet(f"{index_path}/postings")
-    merged = (
-        base.unionByName(dpost.select(*base.columns))
-        .groupBy("doc_id", "token", "bucket")
-        .agg(F.sum("tf").alias("tf"))
-        .select("doc_id", "token", "tf", "bucket")
-    )
-    tmp = f"{index_path}/postings__compact"
-    merged.write.mode("overwrite").partitionBy("bucket").parquet(tmp)
-
-    stats = _merged_stats(spark, index_path).localCheckpoint(eager=True)
-    ddl = _read_delta(spark, f"{index_path}/delta_doclen")
-    dl = spark.read.parquet(f"{index_path}/doclen")
-    if ddl is not None:
-        dl = (
-            dl.unionByName(ddl.select("doc_id", "dl"))
-            .groupBy("doc_id")
-            .agg(F.sum("dl").alias("dl"))
-        )
-    tmp_dl = f"{index_path}/doclen__compact"
-    dl.write.mode("overwrite").parquet(tmp_dl)
-
-    shutil.rmtree(f"{index_path}/postings")
-    shutil.move(tmp, f"{index_path}/postings")
-    shutil.rmtree(f"{index_path}/doclen")
-    shutil.move(tmp_dl, f"{index_path}/doclen")
-    stats.select("n_docs", "sum_dl", "avgdl_e3", "n_buckets").write.mode(
-        "overwrite"
-    ).parquet(f"{index_path}/_stats")
-    for sub in ("delta_postings", "delta_doclen", "delta_stats"):
-        shutil.rmtree(f"{index_path}/{sub}", ignore_errors=True)
-    spark.catalog.refreshByPath(index_path)
-
-
-def stream_fts_maintenance(
-    spark: SparkSession,
-    input_dir: str,
-    index_path: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Watch ``input_dir`` for new document parquet files and keep the FTS
-    index current (delta appends; run ``fts_compact`` on a maintenance
-    cadence)."""
-    stream = spark.readStream.schema(DOCUMENTS_SCHEMA).parquet(input_dir)
-    writer = stream.writeStream.foreachBatch(
-        make_fts_batch_processor(index_path)
-    ).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    """Fold each table's deltas into a new version of its base, each under
+    its own watermark (see streaming/deltaindex)."""
+    DX.compact(spark, _at(index_path, _POSTINGS), _POST_COLS, _sum_tf, ["bucket"])
+    DX.compact(spark, _at(index_path, _DOCLEN), _DL_COLS, _sum_dl)
+    DX.compact(spark, _at(index_path, _STATS), _STATS_COLS, _sum_stats)

@@ -2,13 +2,12 @@
 the vector twin of ``streaming/fts.py``'s LSM shape.
 
 Layout under one index root:
-  base/      (vec_id, ev) partitioned by cent_id   — the compacted index
-  _centroids (cent_id, cv)                          — FROZEN at init; new
-             vectors assign to these (the standard IVF insert rule —
-             re-training centroids is a rebuild, not maintenance)
-  delta/     batch_id=N/cent_id=M                   — per-micro-batch
-             appends; clear + batch_id partition-overwrite = exactly-once
-             under replay
+  index/, delta/  (vec_id, ev, cent_id) — the row index on the delta-index
+             engine (``streaming/deltaindex.py``, identity merge),
+             partitioned by cent_id (deltas by batch_id/cent_id)
+  _centroids (cent_id, cv) — FROZEN at init; new vectors assign to these
+             (the standard IVF insert rule — re-training centroids is a
+             rebuild, not maintenance)
 
 ``ivf_topk_merged`` probes base ∪ deltas with cent_id pruning on BOTH
 sides; ``ivf_compact`` folds deltas into base partitions (partition-
@@ -18,7 +17,6 @@ contract as the FTS maintainer.
 
 from __future__ import annotations
 
-import shutil
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -34,7 +32,9 @@ from ..operators.search import (
     fixed_point_vec,
 )
 from ..sources import tables
-from ..sources.tables import read_optional as _read_delta
+from . import deltaindex as DX
+
+_COLS = ["vec_id", "ev", "cent_id"]
 
 
 def ivf_stream_init(
@@ -42,30 +42,24 @@ def ivf_stream_init(
 ) -> None:
     """Build the base index + freeze the centroid set."""
     cents = _centroids(embeddings, n_centroids)
-    cents.write.mode("overwrite").parquet(f"{root}/_centroids")
+    tables.replace_table(cents, f"{root}/_centroids")
     cand = embeddings.select(
         "vec_id", fixed_point_vec(F.col("embedding")).alias("ev")
     )
-    assigned = assign_to_centroids(cand, cents)
-    tables.overwrite_partitions(assigned, f"{root}/base", ["cent_id"])
+    DX.init_index(assign_to_centroids(cand, cents), root, ["cent_id"])
 
 
 def make_ivf_batch_processor(root: str) -> Callable[[DataFrame, int], None]:
     """``foreachBatch`` body: assign the batch's vectors to the frozen
-    centroids and write them as a batch_id delta partition."""
+    centroids and write them as its delta partition."""
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        bid = int(batch_id)
-        cents = spark.read.parquet(f"{root}/_centroids")
+        cents = tables.read_table(batch_df.sparkSession, f"{root}/_centroids")
         cand = batch_df.select(
             "vec_id", fixed_point_vec(F.col("embedding")).alias("ev")
         )
-        out = assign_to_centroids(cand, cents).withColumn(
-            "batch_id", F.lit(bid).cast("long")
-        )
-        tables.clear_partitions(spark, f"{root}/delta", "batch_id", [bid])
-        tables.overwrite_partitions(out, f"{root}/delta", ["batch_id", "cent_id"])
+        out = assign_to_centroids(cand, cents)
+        DX.write_delta(out, root, batch_id, ["cent_id"])
 
     return process_batch
 
@@ -80,15 +74,11 @@ def ivf_topk_merged(
     """Top-k over base ∪ deltas, cent_id-pruned on both sides.  The query
     vector is looked up in the index itself (base ∪ delta — a streamed-in
     vector can be the query)."""
-    base = spark.read.parquet(f"{root}/base")
-    delta = _read_delta(spark, f"{root}/delta")
-    allv = base.select("vec_id", "ev", "cent_id")
-    if delta is not None:
-        allv = allv.unionByName(delta.select("vec_id", "ev", "cent_id"))
+    allv = DX.read_merged(spark, root, _COLS)
     q = allv.where(F.col("vec_id") == query_vec_id).select(
         F.col("ev").alias("qv")
     )
-    cents = spark.read.parquet(f"{root}/_centroids")
+    cents = tables.read_table(spark, f"{root}/_centroids")
     probes = (
         cents.crossJoin(F.broadcast(q))
         .select("cent_id", _dot(F.col("cv"), F.col("qv")).alias("qdot"))
@@ -104,18 +94,5 @@ def ivf_topk_merged(
 
 
 def ivf_compact(spark: SparkSession, root: str) -> None:
-    """Fold deltas into the base partitions and clear them (parquet-backend
-    non-atomicity caveat as in streaming/fts.fts_compact)."""
-    delta = _read_delta(spark, f"{root}/delta")
-    if delta is None:
-        return
-    base = spark.read.parquet(f"{root}/base")
-    merged = base.select("vec_id", "ev", "cent_id").unionByName(
-        delta.select("vec_id", "ev", "cent_id")
-    )
-    tmp = f"{root}/base__compact"
-    merged.write.mode("overwrite").partitionBy("cent_id").parquet(tmp)
-    shutil.rmtree(f"{root}/base")
-    shutil.move(tmp, f"{root}/base")
-    shutil.rmtree(f"{root}/delta", ignore_errors=True)
-    spark.catalog.refreshByPath(root)
+    """Fold deltas into a new base version (see streaming/deltaindex)."""
+    DX.compact(spark, root, _COLS, partition_cols=["cent_id"])

@@ -16,24 +16,20 @@ Correctness rests on two facts:
   any global top-k edge is in its own batch's top-k.  State per query is
   k rows/batch, folded back to k rows total at compact.
 
-Layout under one root:
-  _centroids           (cent_id, cv)  — FROZEN at init (insert rule as in
-                       streaming/ivf.py; re-training is a rebuild)
-  assign/base          (vec_id, ev, cent_id, rn) — ranked probe rows,
-                       rn <= n_probe (rn = 1 is the inverted-list
-                       assignment) — the persisted ``_ivf_ranked`` frame
-  assign/delta/batch_id=N  per-batch ranked rows
-  edges/base           (q_id, nb_id, dot_e12) — per-query top-k
-  edges/delta/batch_id=N   per-batch new edges (per-query top-k of the
-                       pairs that batch generated)
+Layout under one root, two indexes on the delta-index engine
+(``streaming/deltaindex.py``):
+  _centroids   (cent_id, cv)  — FROZEN at init (insert rule as in
+               streaming/ivf.py; re-training is a rebuild)
+  assign/      (vec_id, ev, cent_id, rn) — ranked probe rows, rn <= n_probe
+               (rn = 1 is the inverted-list assignment) — the persisted
+               ``_ivf_ranked`` frame; identity merge, partitioned by cent_id
+  edges/       (q_id, nb_id, dot_e12) — per-query top-k; each batch's
+               delta holds the per-query top-k of the pairs it generated,
+               folded by re-taking the per-query top-k
 
-Exactly-once: both delta writes are clear-then-overwrite on batch_id, so
-a crashed attempt's partial partition vanishes on replay; the old-side
-read EXCLUDES the replayed batch id (``batch_id < bid``), so regenerated
-edges are identical.  Simple-LSM family contract (streaming/deltaindex.py
-docstring): ``knn_compact`` must run at a COMMITTED stream boundary — an
-interleaved compact + replay would pair a batch against its own folded
-vectors.
+Exactly-once: the old-side read EXCLUDES the batch's own id (``below``),
+so a replayed batch regenerates identical edges; a batch replayed after a
+compact folded it lands below both watermarks and is ignored.
 """
 
 from __future__ import annotations
@@ -46,7 +42,7 @@ from pyspark.sql import functions as F
 from .. import contract as C
 from ..operators.search import _centroids, _dot_vec, fixed_point_vec
 from ..sources import tables
-from ..sources.tables import read_optional as _read_delta
+from . import deltaindex as DX
 
 _ASSIGN_COLS = ("vec_id", "ev", "cent_id", "rn")
 _EDGE_COLS = ("q_id", "nb_id", "dot_e12")
@@ -79,9 +75,17 @@ def _pair_topk(
             "q_id", "nb_id", _dot_vec(F.col("qv"), F.col("nv")).alias("dot_e12")
         )
     )
-    wk = Window.partitionBy("q_id").orderBy(F.desc("dot_e12"), F.asc("nb_id"))
+    return _edge_topk(pairs, k)
+
+
+def _by_dot():
+    """Each query's edges, dot desc, nb asc — the knn_join order."""
+    return Window.partitionBy("q_id").orderBy(F.desc("dot_e12"), F.asc("nb_id"))
+
+
+def _edge_topk(edges: DataFrame, k: int) -> DataFrame:
     return (
-        pairs.withColumn("r", F.row_number().over(wk))
+        edges.withColumn("r", F.row_number().over(_by_dot()))
         .where(F.col("r") <= k)
         .select(*_EDGE_COLS)
     )
@@ -114,19 +118,9 @@ def knn_stream_init(
         "vec_id", fixed_point_vec(F.col("embedding")).alias("ev")
     )
     ranked = _rank_against(cand, cents, n_probe).localCheckpoint()
-    tables.overwrite_partitions(ranked, f"{root}/assign/base", ["cent_id"])
+    DX.init_index(ranked, f"{root}/assign", ["cent_id"])
     edges = _pair_topk(_probe_rows(ranked), _assign_rows(ranked), k)
-    tables.replace_table(edges, f"{root}/edges/base")
-
-
-def _old_ranked(spark: SparkSession, root: str, before_bid: int) -> DataFrame:
-    old = tables.read_table(spark, f"{root}/assign/base").select(*_ASSIGN_COLS)
-    delta = _read_delta(spark, f"{root}/assign/delta")
-    if delta is not None:
-        old = old.unionByName(
-            delta.where(F.col("batch_id") < before_bid).select(*_ASSIGN_COLS)
-        )
-    return old
+    DX.init_index(edges, f"{root}/edges")
 
 
 def make_knn_batch_processor(
@@ -146,28 +140,16 @@ def make_knn_batch_processor(
             "vec_id", fixed_point_vec(F.col("embedding")).alias("ev")
         )
         ranked_new = _rank_against(cand, cents, n_probe).localCheckpoint()
+        DX.write_delta(ranked_new, f"{root}/assign", bid, ["cent_id"])
 
-        tables.clear_partitions(spark, f"{root}/assign/delta", "batch_id", [bid])
-        tables.overwrite_partitions(
-            ranked_new.withColumn("batch_id", F.lit(bid).cast("long")),
-            f"{root}/assign/delta",
-            ["batch_id", "cent_id"],
-        )
-
-        old = _old_ranked(spark, root, bid)
+        old = DX.read_merged(spark, f"{root}/assign", _ASSIGN_COLS, below=bid)
         new_assign = _assign_rows(ranked_new)
         edges = _pair_topk(
             _probe_rows(ranked_new),
             _assign_rows(old).unionByName(new_assign),
             k,
         ).unionByName(_pair_topk(_probe_rows(old), new_assign, k))
-
-        tables.clear_partitions(spark, f"{root}/edges/delta", "batch_id", [bid])
-        tables.overwrite_partitions(
-            edges.withColumn("batch_id", F.lit(bid).cast("long")),
-            f"{root}/edges/delta",
-            ["batch_id"],
-        )
+        DX.write_delta(edges, f"{root}/edges", bid)
 
     return process_batch
 
@@ -178,13 +160,9 @@ def knn_graph_merged(
     """The live graph: per-query top-k over edge base ∪ deltas, with the
     1-based rank column — row-identical to ``knn_join`` over everything
     ingested (tests pin it)."""
-    edges = tables.read_table(spark, f"{root}/edges/base").select(*_EDGE_COLS)
-    delta = _read_delta(spark, f"{root}/edges/delta")
-    if delta is not None:
-        edges = edges.unionByName(delta.select(*_EDGE_COLS))
-    wk = Window.partitionBy("q_id").orderBy(F.desc("dot_e12"), F.asc("nb_id"))
+    edges = DX.read_merged(spark, f"{root}/edges", _EDGE_COLS)
     return (
-        edges.withColumn("rank", F.row_number().over(wk).cast("long"))
+        edges.withColumn("rank", F.row_number().over(_by_dot()).cast("long"))
         .where(F.col("rank") <= k)
         .select(
             F.col("q_id").cast("long").alias("q_id"),
@@ -196,39 +174,12 @@ def knn_graph_merged(
 
 
 def knn_compact(spark: SparkSession, root: str, k: int = C.KNN_K) -> None:
-    """Fold deltas into both bases: assignment rows append (disjoint
-    vec_ids), edge rows re-take per-query top-k (ranking-preserving —
-    future batches only ADD candidates, so dropping below-k edges can
-    never resurface).  Parquet-backend non-atomicity caveat and the
-    committed-boundary contract as in streaming/ivf.ivf_compact."""
-    import shutil
-
-    a_delta = _read_delta(spark, f"{root}/assign/delta")
-    if a_delta is not None:
-        base = tables.read_table(spark, f"{root}/assign/base")
-        merged = base.select(*_ASSIGN_COLS).unionByName(
-            a_delta.select(*_ASSIGN_COLS)
-        )
-        tmp = f"{root}/assign/base__compact"
-        merged.write.mode("overwrite").partitionBy("cent_id").parquet(tmp)
-        shutil.rmtree(f"{root}/assign/base")
-        shutil.move(tmp, f"{root}/assign/base")
-        shutil.rmtree(f"{root}/assign/delta", ignore_errors=True)
-
-    e_delta = _read_delta(spark, f"{root}/edges/delta")
-    if e_delta is not None:
-        base = tables.read_table(spark, f"{root}/edges/base")
-        union = base.select(*_EDGE_COLS).unionByName(e_delta.select(*_EDGE_COLS))
-        wk = Window.partitionBy("q_id").orderBy(F.desc("dot_e12"), F.asc("nb_id"))
-        folded = (
-            union.withColumn("r", F.row_number().over(wk))
-            .where(F.col("r") <= k)
-            .select(*_EDGE_COLS)
-            .localCheckpoint(eager=True)
-        )
-        tables.replace_table(folded, f"{root}/edges/base")
-        shutil.rmtree(f"{root}/edges/delta", ignore_errors=True)
-    spark.catalog.refreshByPath(root)
+    """Fold deltas into new versions of both bases: assignment rows append
+    (disjoint vec_ids), edge rows re-take per-query top-k (ranking-
+    preserving — future batches only ADD candidates, so dropping below-k
+    edges can never resurface)."""
+    DX.compact(spark, f"{root}/assign", _ASSIGN_COLS, partition_cols=["cent_id"])
+    DX.compact(spark, f"{root}/edges", _EDGE_COLS, lambda e: _edge_topk(e, k))
 
 
 def knn_classify_merged(
@@ -249,7 +200,7 @@ def knn_classify_merged(
     label sidecar, never the vectors."""
     from ..operators.search import classify_from_ranked
 
-    ranked = _old_ranked(spark, root, before_bid=1 << 62)
+    ranked = DX.read_merged(spark, f"{root}/assign", _ASSIGN_COLS)
     labels = labels.select(
         "vec_id", F.col("label").cast("long").alias("label")
     )

@@ -9,16 +9,14 @@ partitions, merged reads over base ∪ unfolded deltas (row-identical to the
 one-shot batch operator — equality tested), compaction on a cadence.
 
 Counts are NOT idempotent under re-merge, so the exactly-once/compaction
-discipline — the ``folded_max`` watermark, snapshot-pinned partition-exact
+discipline — the fold watermark, snapshot-pinned partition-exact
 clears, the root+checkpoint durability contract — lives in the shared
 engine ``streaming/deltaindex.py``; this module contributes only the
 link-specific pieces: the per-batch link extraction (the same narrow Arrow
 pass as the batch operator; the summary is one hash-agg on href where hot
 targets like '/home' combine map-side) and the count-sum merge.  Merged
 reads and compaction move (href, count) summary rows only — never raw
-links.  Parquet-backend caveat as the rest of the family: mid-write base
-rewrites are not atomic for concurrent readers; Iceberg is the production
-path.
+links.
 """
 
 from __future__ import annotations
@@ -27,7 +25,6 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.htmlextract import link_in_degree
 from . import deltaindex
@@ -74,22 +71,3 @@ def linkgraph_compact(spark: SparkSession, root: str) -> None:
     """Fold unfolded deltas into the base; a no-op when no deltas exist
     (race/crash discipline in ``deltaindex.compact``)."""
     deltaindex.compact(spark, root, _SUMMARY_COLS, _merge_counts)
-
-
-def stream_linkgraph_maintenance(
-    spark: SparkSession,
-    input_dir: str,
-    root: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Watch ``input_dir`` for new page parquet files (doc_id, html) and
-    keep the in-degree table current (delta appends; run
-    ``linkgraph_compact`` on a maintenance cadence)."""
-    stream = spark.readStream.schema(PAGES_SCHEMA).parquet(input_dir)
-    writer = stream.writeStream.foreachBatch(
-        make_linkgraph_batch_processor(root)
-    ).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

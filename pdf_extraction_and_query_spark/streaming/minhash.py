@@ -4,12 +4,9 @@ streaming dedup in ``streaming/dedup.py``.
 
 A signature is a PURE PER-DOC function (contract ``MINHASH_*`` hash
 family — no cross-doc state, unlike counts or LM stats), so the index is
-append-only on doc_id and takes the simple LSM shape of ``streaming/
-ivf.py`` / ``streaming/pq.py``, not the watermarked summary-delta engine:
-
-  base/   (doc_id, m0..m{K-1})  — the compacted signature table
-  delta/  batch_id=N            — per-micro-batch signatures; clear +
-          batch_id partition-overwrite = exactly-once under replay
+append-only on doc_id: a row index on the delta-index engine
+(``streaming/deltaindex.py``) with the identity merge, rows
+(doc_id, m0..m{K-1}).
 
 ``minhash_pairs_merged`` band-joins base ∪ deltas through the EXACT
 batch code (``operators/dedup.band_pairs_from_signatures``), so a newly
@@ -21,16 +18,6 @@ candidate-pair feed; the exact-Jaccard verify and cluster resolution
 (``dedup_clusters``) run downstream on candidates only, exactly as in
 batch.
 
-PARQUET-BACKEND-ONLY: like the shutil-based compactors in the sibling
-ivf/pq/fts maintainers, ``minhash_compact``'s base rewrite is not atomic
-under concurrent readers; run the Iceberg backend for that (the batch
-operators route through sources/tables).  Like those siblings it carries
-no fold watermark, so run the compactor at a COMMITTED stream boundary
-(see streaming/deltaindex.py's family note) — though the PAIR output is
-immune to the replay-after-compact race regardless: duplicate signature
-rows band to identical (band, val) rows and the pair join ends in
-``distinct()``.
-
 Durability contract (family-wide, see streaming/deltaindex.py): the index
 root and the streaming checkpoint directory form ONE durable unit —
 batch ids are only unique within a checkpoint lineage.
@@ -38,18 +25,13 @@ batch ids are only unique within a checkpoint lineage.
 
 from __future__ import annotations
 
-import shutil
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.streaming import StreamingQuery
-
-from pyspark.sql import functions as F
 
 from .. import contract as C
 from ..operators.dedup import band_pairs_from_signatures, minhash_signatures
-from ..sources import tables
-from ..sources.tables import read_optional as _read_delta
+from . import deltaindex as DX
 
 DOCS_SCHEMA = "doc_id long, text string"
 
@@ -58,26 +40,16 @@ _SIG_COLS = ["doc_id"] + [f"m{i}" for i in range(C.MINHASH_K)]
 
 def minhash_stream_init(docs: DataFrame, root: str) -> None:
     """Build the base signature table from the corpus already ingested."""
-    minhash_signatures(docs).select(*_SIG_COLS).write.mode(
-        "overwrite"
-    ).parquet(f"{root}/base")
+    DX.init_index(minhash_signatures(docs).select(*_SIG_COLS), root)
 
 
 def make_minhash_batch_processor(root: str) -> Callable[[DataFrame, int], None]:
     """``foreachBatch`` body: signature the batch's docs and land them as
-    a ``batch_id`` delta partition (clear-then-overwrite: a crashed
-    attempt's partial partition vanishes on replay — exactly-once)."""
+    its delta partition."""
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        bid = int(batch_id)
-        sig = (
-            minhash_signatures(batch_df)
-            .select(*_SIG_COLS)
-            .withColumn("batch_id", F.lit(bid).cast("long"))
-        )
-        tables.clear_partitions(spark, f"{root}/delta", "batch_id", [bid])
-        tables.overwrite_partitions(sig, f"{root}/delta", ["batch_id"])
+        sig = minhash_signatures(batch_df).select(*_SIG_COLS)
+        DX.write_delta(sig, root, batch_id)
 
     return process_batch
 
@@ -85,11 +57,7 @@ def make_minhash_batch_processor(root: str) -> Callable[[DataFrame, int], None]:
 def merged_signatures(spark: SparkSession, root: str) -> DataFrame:
     """Base ∪ deltas — row-identical to one-shot ``minhash_signatures``
     over everything ingested (append-only contract)."""
-    out = spark.read.parquet(f"{root}/base").select(*_SIG_COLS)
-    delta = _read_delta(spark, f"{root}/delta")
-    if delta is not None:
-        out = out.unionByName(delta.select(*_SIG_COLS))
-    return out
+    return DX.read_merged(spark, root, _SIG_COLS)
 
 
 def minhash_pairs_merged(spark: SparkSession, root: str) -> DataFrame:
@@ -99,35 +67,5 @@ def minhash_pairs_merged(spark: SparkSession, root: str) -> DataFrame:
 
 
 def minhash_compact(spark: SparkSession, root: str) -> None:
-    """Fold deltas into the base and clear them (parquet-backend
-    non-atomicity caveat as in streaming/fts.fts_compact)."""
-    delta = _read_delta(spark, f"{root}/delta")
-    if delta is None:
-        return
-    base = spark.read.parquet(f"{root}/base")
-    merged = base.select(*_SIG_COLS).unionByName(delta.select(*_SIG_COLS))
-    tmp = f"{root}/base__compact"
-    merged.write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(f"{root}/base")
-    shutil.move(tmp, f"{root}/base")
-    shutil.rmtree(f"{root}/delta", ignore_errors=True)
-    spark.catalog.refreshByPath(root)
-
-
-def stream_minhash_maintenance(
-    spark: SparkSession,
-    input_dir: str,
-    root: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Watch ``input_dir`` for new document parquet files (doc_id, text)
-    and keep the signature index current (delta appends; run
-    ``minhash_compact`` on a maintenance cadence)."""
-    stream = spark.readStream.schema(DOCS_SCHEMA).parquet(input_dir)
-    writer = stream.writeStream.foreachBatch(
-        make_minhash_batch_processor(root)
-    ).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    """Fold deltas into a new base version (see streaming/deltaindex)."""
+    DX.compact(spark, root, _SIG_COLS)

@@ -2,12 +2,12 @@
 quantized twin of ``streaming/ivf.py``'s LSM shape.
 
 Layout under one index root:
-  codes/     (vec_id, codes)            — the compacted 64x-compressed base
-  _codebook  (m, code, cw)              — FROZEN at init; new vectors encode
-             against it (the standard PQ insert rule — re-training the
-             codebook is a rebuild, not maintenance)
-  delta/     batch_id=N                 — per-micro-batch encoded appends;
-             clear + batch_id partition-overwrite = exactly-once on replay
+  index/, delta/  (vec_id, codes) — the 64x-compressed row index on the
+             delta-index engine (``streaming/deltaindex.py``, identity
+             merge)
+  _codebook  (m, code, cw) — FROZEN at init; new vectors encode against
+             it (the standard PQ insert rule — re-training the codebook is
+             a rebuild, not maintenance)
 
 ``pq_topk_merged`` runs the literal-LUT ADC over base ∪ deltas (codes only
 — 8 small ints/vector through the scan) and re-ranks the shortlist against
@@ -17,19 +17,13 @@ point-read of PQ_RERANK rows, which is exactly the split this module keeps.
 ``pq_compact`` folds deltas into the base. Append-only on vec_id, same
 contract as the FTS/IVF maintainers.
 
-PARQUET-BACKEND-ONLY: like the shutil-based compactors in the sibling
-maintainers, this module manages its LSM layout (delta/batch_id dirs,
-directory swaps) directly on the filesystem — reads and writes are raw
-parquet paths BY DESIGN and ``SPARK_GRAFT_CATALOG`` does not reroute them
-(the ``tables.clear_partitions``/``overwrite_partitions`` calls below are
-used purely for their parquet dynamic-overwrite semantics).  On the
-Iceberg backend the equivalent maintenance is native (MERGE INTO +
-rewrite_data_files); see sources/tables.py.
+The IVFADC twin (``ivfpq_*``) keeps ``operators/pq.ivfpq_build``'s layout:
+its ``codes`` table, partitioned by cent_id, is the engine base and
+``delta/`` holds (batch_id, cent_id) partitions.
 """
 
 from __future__ import annotations
 
-import shutil
 from typing import Callable
 
 import numpy as np
@@ -45,42 +39,40 @@ from ..operators.pq import (
 )
 from ..operators.search import _dot, _rank_topk, fixed_point_vec
 from ..sources import tables
-from ..sources.tables import read_optional as _read_delta
+from . import deltaindex as DX
+
+_COLS = ["vec_id", "codes"]
+_IVFPQ_COLS = ["vec_id", "cent_id", "codes"]
+
+
+def _ivfpq(root: str) -> tuple[str, str]:
+    """The IVFADC index's engine (base, delta) pair."""
+    return f"{root}/codes", f"{root}/delta"
 
 
 def pq_stream_init(embeddings: DataFrame, root: str) -> None:
-    """Encode the initial corpus and freeze the codebook. Raw parquet
-    writes, matching this module's raw reads (parquet-backend-only — see
-    module docstring; the previous replace_table write was asymmetric with
-    the raw-parquet readers under a configured catalog, round-3
-    ADVICE.md)."""
-    pq_codebook(embeddings).write.mode("overwrite").parquet(f"{root}/_codebook")
+    """Encode the initial corpus and freeze the codebook."""
+    tables.replace_table(pq_codebook(embeddings), f"{root}/_codebook")
     cb = _read_codebook(embeddings.sparkSession, root)
-    pq_assign(embeddings, cb).write.mode("overwrite").parquet(f"{root}/codes")
+    DX.init_index(pq_assign(embeddings, cb), root)
 
 
 def _read_codebook(
     spark: SparkSession, root: str, name: str = "_codebook"
 ) -> np.ndarray:
     cb = np.zeros((C.PQ_M, C.PQ_K, C.PQ_SUB), dtype=np.int64)
-    for r in spark.read.parquet(f"{root}/{name}").collect():
+    for r in tables.read_table(spark, f"{root}/{name}").collect():
         cb[r["m"], r["code"], :] = r["cw"]
     return cb
 
 
 def make_pq_batch_processor(root: str) -> Callable[[DataFrame, int], None]:
     """``foreachBatch`` body: encode the batch's vectors against the frozen
-    codebook and write them as a batch_id delta partition."""
+    codebook and write them as its delta partition."""
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        bid = int(batch_id)
-        cb = _read_codebook(spark, root)
-        out = pq_assign(batch_df, cb).withColumn(
-            "batch_id", F.lit(bid).cast("long")
-        )
-        tables.clear_partitions(spark, f"{root}/delta", "batch_id", [bid])
-        tables.overwrite_partitions(out, f"{root}/delta", ["batch_id"])
+        cb = _read_codebook(batch_df.sparkSession, root)
+        DX.write_delta(pq_assign(batch_df, cb), root, batch_id)
 
     return process_batch
 
@@ -97,10 +89,7 @@ def pq_topk_merged(
     ``vectors`` — the primary (vec_id, embedding) table, which must cover
     every indexed vector (base corpus plus streamed rows; the stream ingest
     that feeds the index deltas appends the raw rows there)."""
-    codes = spark.read.parquet(f"{root}/codes").select("vec_id", "codes")
-    delta = _read_delta(spark, f"{root}/delta")
-    if delta is not None:
-        codes = codes.unionByName(delta.select("vec_id", "codes"))
+    codes = DX.read_merged(spark, root, _COLS)
     cb = _read_codebook(spark, root)
     qrow = (
         vectors.where(F.col("vec_id") == query_vec_id)
@@ -136,28 +125,23 @@ def ivfpq_stream_init(embeddings: DataFrame, root: str) -> None:
 def make_ivfpq_batch_processor(root: str) -> Callable[[DataFrame, int], None]:
     """``foreachBatch`` body: assign the batch's vectors to the frozen
     centroids AND encode them against the frozen codebook, writing
-    (batch_id, cent_id) delta partitions — exactly-once via clear +
-    partition-overwrite, probe-prunable on cent_id like the base."""
+    (batch_id, cent_id) delta partitions, probe-prunable on cent_id like
+    the base."""
     from ..operators.pq import _encode_kernel
     from ..operators.search import assign_to_centroids
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        bid = int(batch_id)
-        cents = spark.read.parquet(f"{root}/_centroids")
+        cents = tables.read_table(spark, f"{root}/_centroids")
         cb = _read_codebook(spark, root, name="codebook")
         cand = batch_df.select(
             "vec_id", fixed_point_vec(F.col("embedding")).alias("ev")
         )
         assigned = assign_to_centroids(cand, cents)
         out = assigned.select(
-            "vec_id",
-            "cent_id",
-            _encode_kernel(cb)(F.col("ev")).alias("codes"),
-            F.lit(bid).cast("long").alias("batch_id"),
+            "vec_id", "cent_id", _encode_kernel(cb)(F.col("ev")).alias("codes")
         )
-        tables.clear_partitions(spark, f"{root}/delta", "batch_id", [bid])
-        tables.overwrite_partitions(out, f"{root}/delta", ["batch_id", "cent_id"])
+        DX.write_delta(out, _ivfpq(root), batch_id, ["cent_id"])
 
     return process_batch
 
@@ -174,7 +158,7 @@ def ivfpq_topk_merged(
     """IVFADC top-k over base ∪ deltas: probe prune on cent_id on BOTH
     sides, literal-LUT ADC over the surviving codes, exact re-rank against
     the primary ``vectors`` table."""
-    cents = spark.read.parquet(f"{root}/_centroids")
+    cents = tables.read_table(spark, f"{root}/_centroids")
     q = vectors.where(F.col("vec_id") == query_vec_id).select(
         fixed_point_vec(F.col("embedding")).alias("qv")
     )
@@ -187,15 +171,10 @@ def ivfpq_topk_merged(
     )
     probe_ids = [r["cent_id"] for r in probe_rows]
     codes = (
-        spark.read.parquet(f"{root}/codes")
+        DX.read_merged(spark, _ivfpq(root), _IVFPQ_COLS)
         .where(F.col("cent_id").isin(probe_ids))
         .select("vec_id", "codes")
     )
-    delta = _read_delta(spark, f"{root}/delta")
-    if delta is not None:
-        codes = codes.unionByName(
-            delta.where(F.col("cent_id").isin(probe_ids)).select("vec_id", "codes")
-        )
     cb = _read_codebook(spark, root, name="codebook")
     qv = np.array(q.collect()[0]["qv"], dtype=np.int64)
     lut = query_lut(cb, qv)
@@ -214,37 +193,12 @@ def ivfpq_topk_merged(
 
 
 def ivfpq_compact(spark: SparkSession, root: str) -> None:
-    """Fold delta codes into the base's cent_id partitions (partition-
-    aligned by construction — both sides assigned to the same frozen
-    centroids)."""
-    delta = _read_delta(spark, f"{root}/delta")
-    if delta is None:
-        return
-    base = spark.read.parquet(f"{root}/codes")
-    merged = base.select("vec_id", "cent_id", "codes").unionByName(
-        delta.select("vec_id", "cent_id", "codes")
-    )
-    tmp = f"{root}/codes__compact"
-    merged.write.mode("overwrite").partitionBy("cent_id").parquet(tmp)
-    shutil.rmtree(f"{root}/codes")
-    shutil.move(tmp, f"{root}/codes")
-    shutil.rmtree(f"{root}/delta", ignore_errors=True)
-    spark.catalog.refreshByPath(root)
+    """Fold delta codes into a new version of the cent_id-partitioned base
+    (partition-aligned by construction — both sides assigned to the same
+    frozen centroids)."""
+    DX.compact(spark, _ivfpq(root), _IVFPQ_COLS, partition_cols=["cent_id"])
 
 
 def pq_compact(spark: SparkSession, root: str) -> None:
-    """Fold delta codes into the base table and clear them (parquet-backend
-    non-atomicity caveat as in streaming/fts.fts_compact)."""
-    delta = _read_delta(spark, f"{root}/delta")
-    if delta is None:
-        return
-    base = spark.read.parquet(f"{root}/codes")
-    merged = base.select("vec_id", "codes").unionByName(
-        delta.select("vec_id", "codes")
-    )
-    tmp = f"{root}/codes__compact"
-    merged.write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(f"{root}/codes")
-    shutil.move(tmp, f"{root}/codes")
-    shutil.rmtree(f"{root}/delta", ignore_errors=True)
-    spark.catalog.refreshByPath(root)
+    """Fold delta codes into a new base version (see streaming/deltaindex)."""
+    DX.compact(spark, root, _COLS)

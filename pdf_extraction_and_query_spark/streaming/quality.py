@@ -16,7 +16,7 @@ Layout under one index root:
            wave; tests pin the rule).
   scores/index, scores/delta/batch_id=N — the scored corpus through the
            watermarked summary-delta engine (streaming/deltaindex.py,
-           identity merge): scores are per-doc ROWS, so the folded_max
+           identity merge): scores are per-doc ROWS, so the fold
            watermark — not deduplication — is what keeps a batch replayed
            AFTER a maintenance compact from duplicating its rows (the
            duppassage precedent; pinned in the replay-after-compact test).
@@ -30,16 +30,13 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.classifier import quality_classify
 from ..operators.textstats import ccnet_model, ccnet_score
+from ..sources import tables
 from . import deltaindex as DX
 
 from pyspark.sql import functions as F
 
 _MODEL_PARTS = ("c2", "c1", "cuts")
 _SCORE_COLS = ["doc_id", "lang", "fluency_e6", "bucket", "cls_score_e6", "label"]
-
-
-def _identity(df: DataFrame) -> DataFrame:
-    return df
 
 
 def _score(docs: DataFrame, model) -> DataFrame:
@@ -60,13 +57,13 @@ def quality_stream_init(docs: DataFrame, root: str) -> None:
     the corpus under it."""
     model = ccnet_model(docs)
     for name, df in zip(_MODEL_PARTS, model):
-        df.write.mode("overwrite").parquet(f"{root}/_model/{name}")
+        tables.replace_table(df, f"{root}/_model/{name}")
     DX.init_index(_score(docs, model).select(*_SCORE_COLS), f"{root}/scores")
 
 
 def _read_model(spark: SparkSession, root: str):
     return tuple(
-        spark.read.parquet(f"{root}/_model/{name}") for name in _MODEL_PARTS
+        tables.read_table(spark, f"{root}/_model/{name}") for name in _MODEL_PARTS
     )
 
 
@@ -88,10 +85,10 @@ def quality_scores_merged(spark: SparkSession, root: str) -> DataFrame:
     """Base ∪ unfolded delta scores — equals one-shot scoring of the union
     corpus under the frozen model (scoring is per-doc pure given the
     model)."""
-    return DX.read_merged(spark, f"{root}/scores", _SCORE_COLS, _identity)
+    return DX.read_merged(spark, f"{root}/scores", _SCORE_COLS)
 
 
 def quality_compact(spark: SparkSession, root: str) -> None:
     """Fold delta scores into the base table under the watermark
     (snapshot-pinned, crash-safe — see streaming/deltaindex.compact)."""
-    DX.compact(spark, f"{root}/scores", _SCORE_COLS, _identity)
+    DX.compact(spark, f"{root}/scores", _SCORE_COLS)

@@ -25,7 +25,6 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from .. import contract as C
 from ..operators.packing import exact_sample
@@ -85,21 +84,3 @@ def sample_compact(spark: SparkSession, root: str) -> None:
     """Fold unfolded deltas into the base (idempotent merge — the
     watermark is belt-and-braces here, the sketches/HLL argument)."""
     deltaindex.compact(spark, f"{root}/sample", _COLS, _bottom_k)
-
-
-def stream_sample_maintenance(
-    spark: SparkSession,
-    input_dir: str,
-    root: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Watch ``input_dir`` for new document parquet files and keep the
-    live sample current."""
-    stream = spark.readStream.schema(DOCS_SCHEMA).parquet(input_dir)
-    writer = stream.writeStream.foreachBatch(
-        make_sample_batch_processor(root)
-    ).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

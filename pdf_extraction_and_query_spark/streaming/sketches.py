@@ -8,7 +8,7 @@ all three merge laws are associative integer folds (CMS: sum, HLL: max,
 Bloom: OR), the merged sketch is EXACTLY the one-shot sketch over every
 document ever ingested (equality tested, not approximately-equal).
 
-The exactly-once / compaction discipline (folded_max watermark,
+The exactly-once / compaction discipline (fold watermark,
 snapshot-pinned partition clears) lives in the shared engine
 ``streaming/deltaindex.py`` — CMS reuses it like linkgraph's counts
 (sum-merged, non-idempotent under re-fold, so the watermark matters);
@@ -24,7 +24,6 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.sketches import (
     bloom_build,
@@ -149,31 +148,11 @@ def sketch_compact(spark: SparkSession, root: str) -> None:
     deltaindex.compact(spark, f"{root}/hll", _HLL_COLS, _merge_hll)
     deltaindex.compact(spark, f"{root}/bloom", _BLOOM_COLS, _merge_bloom)
 
-
-def stream_sketch_maintenance(
-    spark: SparkSession,
-    input_dir: str,
-    root: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Watch ``input_dir`` for new document parquet files (doc_id, text)
-    and keep all three sketches current (delta appends; run ``sketch_compact``
-    on a maintenance cadence)."""
-    stream = spark.readStream.schema(DOCS_SCHEMA).parquet(input_dir)
-    writer = stream.writeStream.foreachBatch(
-        make_sketch_batch_processor(root)
-    ).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 # ---------------------------------------------------------------------------
 # HDR value-quantile sketch over a live EVENTS stream (telemetry latency /
 # value distributions): per-batch log-bucket histograms into batch_id
 # deltas — the merge law is a per-(key, bucket) count SUM (associative,
-# non-idempotent under re-fold, so it rides the same folded_max watermark
+# non-idempotent under re-fold, so it rides the same fold watermark
 # as CMS/linkgraph), and the merged cells are EXACTLY the one-shot sketch
 # over every event ever ingested.  The live read tail is the batch side's
 # hdr_estimates_from_sketch — estimates only (the stream never kept raw
@@ -220,26 +199,6 @@ def hdr_estimates_merged(spark: SparkSession, root: str) -> DataFrame:
 
 def value_sketch_compact(spark: SparkSession, root: str) -> None:
     deltaindex.compact(spark, f"{root}/hdr", _HDR_COLS, _merge_hdr)
-
-
-def stream_value_sketch_maintenance(
-    spark: SparkSession,
-    input_dir: str,
-    root: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Watch ``input_dir`` for new event parquet files and keep the HDR
-    value sketch current (delta appends; run ``value_sketch_compact`` on
-    a maintenance cadence)."""
-    stream = spark.readStream.schema(EVENTS_SCHEMA).parquet(input_dir)
-    writer = stream.writeStream.foreachBatch(
-        make_value_sketch_batch_processor(root)
-    ).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
 
 # ---------------------------------------------------------------------------
 # Theta distinct-token sample over a live ingest WITH a source column:
@@ -298,21 +257,3 @@ def theta_overlap_merged(spark: SparkSession, root: str) -> DataFrame:
 def theta_compact(spark: SparkSession, root: str) -> None:
     """Fold unfolded deltas into the base sample."""
     deltaindex.compact(spark, f"{root}/theta", _THETA_COLS, _merge_theta)
-
-
-def stream_theta_maintenance(
-    spark: SparkSession,
-    input_dir: str,
-    root: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Watch ``input_dir`` for new document parquet files
-    (doc_id, text, source) and keep the theta sample current."""
-    stream = spark.readStream.schema(THETA_DOCS_SCHEMA).parquet(input_dir)
-    writer = stream.writeStream.foreachBatch(
-        make_theta_batch_processor(root)
-    ).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -2,7 +2,9 @@
 the scalar-quantized sibling of ``streaming/pq.py``'s LSM shape.
 
 Layout under one index root:
-  codes/   (vec_id, codes)   — the compacted 8x-compressed base
+  index/, delta/             — (vec_id, codes), the 8x-compressed row
+           index on the delta-index engine (``streaming/deltaindex.py``,
+           identity merge)
   _bounds  (dim, mn, mx)     — FROZEN at init; new vectors encode against
            them (the standard SQ insert rule — re-deriving bounds is a
            rebuild, not maintenance).  A streamed value outside the frozen
@@ -11,22 +13,15 @@ Layout under one index root:
            merged == one-shot-under-frozen-bounds equality holds by
            construction (production would widen bounds at the next rebuild;
            tests/test_sq.py pins the seam semantics).
-  delta/   batch_id=N        — per-micro-batch encoded appends; clear +
-           batch_id partition-overwrite = exactly-once on replay.
 
 ``sq_topk_merged`` scores base ∪ deltas with the asymmetric integer
 kernel (codes only through the scan) and re-ranks the shortlist against
 the PRIMARY vector table the caller passes — the index never stores raw
 vectors, exactly the streaming/pq.py split.  ``sq_compact`` folds deltas.
-
-PARQUET-BACKEND-ONLY: like the sibling maintainers, this module manages
-its LSM layout directly on the filesystem by design (see streaming/pq.py's
-module docstring for the Iceberg-native equivalent).
 """
 
 from __future__ import annotations
 
-import shutil
 from typing import Callable
 
 import numpy as np
@@ -37,24 +32,27 @@ from .. import contract as C
 from ..operators.search import _dot, _rank_topk, fixed_point_vec
 from ..operators.sq import _qv_np, _score_kernel, sq_assign, sq_bounds_np
 from ..sources import tables
-from ..sources.tables import read_optional as _read_delta
+from . import deltaindex as DX
+
+_COLS = ["vec_id", "codes"]
 
 
 def sq_stream_init(embeddings: DataFrame, root: str) -> None:
     """Encode the initial corpus and freeze the per-dimension bounds."""
     mn, mx = sq_bounds_np(embeddings)
     spark = embeddings.sparkSession
-    spark.createDataFrame(
+    bounds = spark.createDataFrame(
         [(int(d), int(mn[d]), int(mx[d])) for d in range(C.EMBED_DIM)],
         "dim long, mn long, mx long",
-    ).write.mode("overwrite").parquet(f"{root}/_bounds")
-    sq_assign(embeddings, (mn, mx)).write.mode("overwrite").parquet(f"{root}/codes")
+    )
+    tables.replace_table(bounds, f"{root}/_bounds")
+    DX.init_index(sq_assign(embeddings, (mn, mx)), root)
 
 
 def _read_bounds(spark: SparkSession, root: str) -> tuple[np.ndarray, np.ndarray]:
     mn = np.zeros(C.EMBED_DIM, dtype=np.int64)
     mx = np.zeros(C.EMBED_DIM, dtype=np.int64)
-    for r in spark.read.parquet(f"{root}/_bounds").collect():
+    for r in tables.read_table(spark, f"{root}/_bounds").collect():
         mn[r.dim] = r.mn
         mx[r.dim] = r.mx
     return mn, mx
@@ -62,17 +60,11 @@ def _read_bounds(spark: SparkSession, root: str) -> tuple[np.ndarray, np.ndarray
 
 def make_sq_batch_processor(root: str) -> Callable[[DataFrame, int], None]:
     """``foreachBatch`` body: encode the batch's vectors against the FROZEN
-    bounds and write them as a batch_id delta partition."""
+    bounds and write them as its delta partition."""
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        bid = int(batch_id)
-        bounds = _read_bounds(spark, root)
-        out = sq_assign(batch_df, bounds).withColumn(
-            "batch_id", F.lit(bid).cast("long")
-        )
-        tables.clear_partitions(spark, f"{root}/delta", "batch_id", [bid])
-        tables.overwrite_partitions(out, f"{root}/delta", ["batch_id"])
+        bounds = _read_bounds(batch_df.sparkSession, root)
+        DX.write_delta(sq_assign(batch_df, bounds), root, batch_id)
 
     return process_batch
 
@@ -88,10 +80,7 @@ def sq_topk_merged(
     """Asymmetric-scored top-k over base ∪ delta codes with the exact
     re-rank against ``vectors`` — the primary (vec_id, embedding) table,
     which must cover every indexed vector."""
-    codes = spark.read.parquet(f"{root}/codes").select("vec_id", "codes")
-    delta = _read_delta(spark, f"{root}/delta")
-    if delta is not None:
-        codes = codes.unionByName(delta.select("vec_id", "codes"))
+    codes = DX.read_merged(spark, root, _COLS)
     mn, mx = _read_bounds(spark, root)
     qv = _qv_np(vectors, query_vec_id)
     w = qv * (mx - mn)
@@ -112,18 +101,5 @@ def sq_topk_merged(
 
 
 def sq_compact(spark: SparkSession, root: str) -> None:
-    """Fold delta codes into the base table and clear them (parquet-backend
-    non-atomicity caveat as in streaming/fts.fts_compact)."""
-    delta = _read_delta(spark, f"{root}/delta")
-    if delta is None:
-        return
-    base = spark.read.parquet(f"{root}/codes")
-    merged = base.select("vec_id", "codes").unionByName(
-        delta.select("vec_id", "codes")
-    )
-    tmp = f"{root}/codes__compact"
-    merged.write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(f"{root}/codes")
-    shutil.move(tmp, f"{root}/codes")
-    shutil.rmtree(f"{root}/delta", ignore_errors=True)
-    spark.catalog.refreshByPath(root)
+    """Fold delta codes into a new base version (see streaming/deltaindex)."""
+    DX.compact(spark, root, _COLS)

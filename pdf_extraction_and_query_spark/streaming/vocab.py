@@ -11,7 +11,7 @@ Two summary sidecars on the shared watermark engine
   everywhere, the sketches/HLL argument);
 * ``mass`` — per-threshold (n_docs, n_tokens) partials; merge = SUM
   (non-idempotent under re-fold — exactly the crash window the engine's
-  ``folded_max`` watermark exists for).
+  fold watermark exists for).
 
 Because every document lands in exactly one micro-batch, the min-merged
 first-occurrence table and the sum-merged mass partials are each
@@ -32,7 +32,6 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.textstats import (
     vg_first_occurrence,
@@ -101,21 +100,3 @@ def vocab_compact(spark: SparkSession, root: str) -> None:
     """Fold unfolded deltas of both sidecars into their bases."""
     deltaindex.compact(spark, f"{root}/first", _FIRST_COLS, _merge_first)
     deltaindex.compact(spark, f"{root}/mass", _MASS_COLS, _merge_mass)
-
-
-def stream_vocab_maintenance(
-    spark: SparkSession,
-    input_dir: str,
-    root: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Watch ``input_dir`` for new document parquet files (doc_id, text)
-    and keep the vocabulary-growth summaries current."""
-    stream = spark.readStream.schema(DOCS_SCHEMA).parquet(input_dir)
-    writer = stream.writeStream.foreachBatch(
-        make_vocab_batch_processor(root)
-    ).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -4,6 +4,7 @@ These tests pin the PLAN, not just the rows: a correct-but-single-task
 plan at gate scale is a scale-killer at 10^12 docs (round-3 verdict
 What's-wrong #2 — paginate's global no-partition-key window)."""
 
+import ast
 import os
 import pathlib
 
@@ -78,6 +79,58 @@ def test_no_rdd_conversion_in_package():
         src = py.read_text()
         if ".rdd" in src:
             offenders.append(str(py.relative_to(pkg)))
+    assert offenders == [], offenders
+
+
+def _is_overwrite_write(node):
+    """``<df>.write.mode("overwrite")``"""
+    f = node.func
+    return (
+        isinstance(f, ast.Attribute)
+        and f.attr == "mode"
+        and isinstance(f.value, ast.Attribute)
+        and f.value.attr == "write"
+        and any(getattr(a, "value", None) == "overwrite" for a in node.args)
+    )
+
+
+def test_streaming_maintainers_ride_the_engine():
+    """Every streaming maintainer stores its index through
+    streaming/deltaindex: no hand-rolled directory swaps (shutil), no
+    whole-table overwrite writes, and every ``*_compact`` folds through
+    ``deltaindex.compact``."""
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "pdf_extraction_and_query_spark"
+    offenders = []
+    for py in sorted((pkg / "streaming").glob("*.py")):
+        tree = ast.parse(py.read_text())
+        engine = {
+            a.asname or a.name
+            for n in ast.walk(tree)
+            if isinstance(n, ast.ImportFrom)
+            for a in n.names
+            if a.name == "deltaindex"
+        }
+        for n in ast.walk(tree):
+            where = f"{py.name}:{getattr(n, 'lineno', 0)}"
+            if isinstance(n, ast.Import) and any(a.name == "shutil" for a in n.names):
+                offenders.append(f"{where} imports shutil")
+            if isinstance(n, ast.ImportFrom) and n.module == "shutil":
+                offenders.append(f"{where} imports shutil")
+            if isinstance(n, ast.Call) and _is_overwrite_write(n):
+                offenders.append(f"{where} overwrite write")
+            if isinstance(n, ast.FunctionDef) and n.name.endswith("_compact"):
+                calls = [
+                    c.func
+                    for c in ast.walk(n)
+                    if isinstance(c, ast.Call) and isinstance(c.func, ast.Attribute)
+                ]
+                if not any(
+                    f.attr == "compact"
+                    and isinstance(f.value, ast.Name)
+                    and f.value.id in engine
+                    for f in calls
+                ):
+                    offenders.append(f"{where} {n.name} bypasses deltaindex.compact")
     assert offenders == [], offenders
 
 

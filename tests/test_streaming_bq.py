@@ -12,6 +12,7 @@ from pdf_extraction_and_query_spark.streaming.bq import (
     bq_topk_merged,
     make_bq_batch_processor,
 )
+from pdf_extraction_and_query_spark.streaming import deltaindex as DX
 
 SF = "/root/testdata/sf0.001"
 
@@ -48,6 +49,9 @@ def test_replay_exactly_once_and_compact(spark, tmp_path):
     proc(batch, 0)  # crash replay
     assert _key(bq_topk_merged(spark, emb, root)) == once
     bq_stream_compact(spark, root)
-    assert not os.path.exists(f"{root}/delta")
+    assert not os.path.exists(f"{root}/delta/batch_id=0")
     assert _key(bq_topk_merged(spark, emb, root)) == once
     bq_stream_compact(spark, root)  # idempotent when nothing to fold
+    proc(batch, 0)  # replay after compact: below the watermark, ignored
+    assert _key(bq_topk_merged(spark, emb, root)) == once
+    assert DX.read_merged(spark, root, ["vec_id"]).count() == emb.count()

@@ -19,8 +19,8 @@ from pdf_extraction_and_query_spark.streaming.cascade import (
     cascade_merged,
     hourly_merged,
     make_cascade_batch_processor,
-    stream_cascade_maintenance,
 )
+from pdf_extraction_and_query_spark.streaming.deltaindex import start_maintenance
 
 _H = 3600
 
@@ -99,8 +99,12 @@ def test_available_now_end_to_end(spark, tmp_path):
     _events(spark, _B1 + _B2).coalesce(1).write.mode("append").parquet(
         str(inp)
     )
-    q = stream_cascade_maintenance(
-        spark, str(inp), root, str(tmp_path / "ckpt")
+    q = start_maintenance(
+        spark,
+        EVENTS_SCHEMA,
+        str(inp),
+        make_cascade_batch_processor(root),
+        str(tmp_path / "ckpt"),
     )
     q.awaitTermination(120)
     every = _events(spark, _BASE + _B1 + _B2)

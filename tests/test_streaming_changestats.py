@@ -19,8 +19,8 @@ from pdf_extraction_and_query_spark.streaming.changestats import (
     change_stats_init,
     change_stats_merged,
     make_change_batch_processor,
-    stream_change_stats_maintenance,
 )
+from pdf_extraction_and_query_spark.streaming.deltaindex import start_maintenance
 
 from pdf_extraction_and_query_spark import contract as C
 
@@ -111,8 +111,12 @@ def test_streaming_end_to_end(spark, tmp_path):
     root = _setup(spark, tmp_path)
     inbox = str(tmp_path / "inbox")
     _pages(spark, _BATCH1).write.parquet(inbox)
-    q = stream_change_stats_maintenance(
-        spark, inbox, root, str(tmp_path / "ckpt"), available_now=True
+    q = start_maintenance(
+        spark,
+        PAGES_TS_SCHEMA,
+        inbox,
+        make_change_batch_processor(root),
+        str(tmp_path / "ckpt"),
     )
     q.awaitTermination(120)
     assert _rows(change_stats_merged(spark, root)) == _rows(

@@ -18,8 +18,8 @@ from pdf_extraction_and_query_spark.streaming.crawlindex import (
     crawl_index_init,
     crawl_index_merged,
     make_crawl_batch_processor,
-    stream_crawl_maintenance,
 )
+from pdf_extraction_and_query_spark.streaming.deltaindex import start_maintenance
 
 _M = C.HTML_CANONICAL_MOD
 
@@ -97,7 +97,7 @@ def test_folded_delta_replay_never_double_counts(spark, tmp_path):
     """The two count-corruption windows: (a) compact crashed AFTER the
     base write but BEFORE clearing its deltas; (b) a micro-batch whose
     delta was already folded gets replayed after a restart.  Both leave a
-    delta partition at batch_id <= folded_max on disk — the watermark must
+    delta partition at batch_id <= the watermark on disk — it must
     make the merged reader and a re-run of compact ignore it (keep-latest
     COUNTS are not idempotent under re-merge, unlike the max winner)."""
     root = _setup(spark, tmp_path)
@@ -118,7 +118,7 @@ def test_folded_delta_replay_never_double_counts(spark, tmp_path):
 
 
 def test_pre_watermark_index_migrates(spark, tmp_path):
-    """A base index written before the folded_max column existed (bare
+    """A base index written before the versioned layout existed (bare
     summary output) must stay readable: merged treats it as
     nothing-folded and compact upgrades it in place."""
     from pdf_extraction_and_query_spark.streaming.crawlindex import (
@@ -211,8 +211,12 @@ def test_streaming_end_to_end(spark, tmp_path):
     root = _setup(spark, tmp_path)
     inbox = str(tmp_path / "inbox")
     _pages(spark, _BATCH1).write.parquet(inbox)
-    q = stream_crawl_maintenance(
-        spark, inbox, root, str(tmp_path / "ckpt"), available_now=True
+    q = start_maintenance(
+        spark,
+        PAGES_TS_SCHEMA,
+        inbox,
+        make_crawl_batch_processor(root),
+        str(tmp_path / "ckpt"),
     )
     q.awaitTermination(120)
     time.sleep(0.2)

@@ -69,15 +69,14 @@ def test_retroactive_evidence_and_merged_equals_one_shot(spark, base, batch, tmp
 
 
 def _no_unfolded_deltas(spark, root):
-    from pdf_extraction_and_query_spark.sources.tables import read_optional
+    from pdf_extraction_and_query_spark.sources.tables import (
+        read_optional,
+        read_versioned,
+    )
 
     for fam in ("occ", "df"):
         d = read_optional(spark, f"{root}/{fam}/delta")
-        fm = (
-            spark.read.parquet(f"{root}/{fam}/index")
-            .agg({"folded_max": "max"})
-            .collect()[0][0]
-        )
+        _, fm = read_versioned(spark, f"{root}/{fam}/index")
         if d is not None:
             assert d.where(f"batch_id > {fm}").count() == 0
     return True
@@ -102,7 +101,7 @@ def test_replay_after_compact_never_double_counts(spark, base, batch, tmp_path):
     """The race the watermark exists for: a batch replayed AFTER a
     maintenance compact already folded it (crash between foreachBatch
     returning and the checkpoint commit) must not inflate df counts or
-    duplicate occurrence rows — without folded_max, doc 0/10's single
+    duplicate occurrence rows — without the watermark, doc 0/10's single
     shared passage would read as extra evidence and duplicated islands."""
     root = str(tmp_path / "dp")
     dup_stream_init(base, root)

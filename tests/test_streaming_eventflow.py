@@ -23,8 +23,8 @@ from pdf_extraction_and_query_spark.streaming.eventflow import (
     funnel_report_merged,
     make_eventlog_batch_processor,
     merged_log,
-    stream_eventlog_maintenance,
 )
+from pdf_extraction_and_query_spark.streaming.deltaindex import start_maintenance
 
 
 def _events(spark, rows):
@@ -101,7 +101,7 @@ def test_replay_and_compact_invariance(spark, tmp_path):
     assert _rows(merged_log(spark, root)) == once
     eventlog_compact(spark, root)
     assert _rows(merged_log(spark, root)) == once
-    proc(_events(spark, _B1), 0)  # replay AFTER compact: dedup immunity
+    proc(_events(spark, _B1), 0)  # replay after compact: below the watermark
     assert _rows(merged_log(spark, root)) == once
     rep = funnel_report_merged(spark, root).collect()[0]
     assert rep["n_step1"] == 2  # users 1 and 3 have signups so far
@@ -115,8 +115,12 @@ def test_available_now_end_to_end(spark, tmp_path):
     _events(spark, _B1 + _B2).coalesce(1).write.mode("append").parquet(
         str(inp)
     )
-    q = stream_eventlog_maintenance(
-        spark, str(inp), root, str(tmp_path / "ckpt")
+    q = start_maintenance(
+        spark,
+        EVENTS_SCHEMA,
+        str(inp),
+        make_eventlog_batch_processor(root),
+        str(tmp_path / "ckpt"),
     )
     q.awaitTermination(120)
     every = _events(spark, _BASE + _B1 + _B2)

@@ -16,8 +16,9 @@ from pdf_extraction_and_query_spark.streaming.fts import (
     bm25_topk_merged,
     fts_compact,
     make_fts_batch_processor,
-    stream_fts_maintenance,
 )
+from pdf_extraction_and_query_spark.sources.formats import DOCUMENTS_SCHEMA
+from pdf_extraction_and_query_spark.streaming.deltaindex import start_maintenance
 
 _BASE = [
     (0, "apple banana apple cherry"),
@@ -65,12 +66,16 @@ def test_compact_preserves_scores_and_clears_deltas(spark, tmp_path):
     make_fts_batch_processor(path)(_docs(spark, _BATCH1), 0)
     before = sorted(map(tuple, bm25_topk_merged(spark, path, queries=_QS).collect()))
     fts_compact(spark, path)
-    assert not os.path.exists(f"{path}/delta_postings")
+    for sub in ("delta_postings", "delta_doclen", "delta_stats"):
+        assert not os.path.exists(f"{path}/{sub}/batch_id=0")
     # merged reader (no deltas left) AND the plain prebuilt reader agree
     assert sorted(map(tuple, bm25_topk_merged(spark, path, queries=_QS).collect())) == before
     assert sorted(map(tuple, bm25_topk_prebuilt(spark, path, queries=_QS).collect())) == before
     # idempotent when nothing to fold
     fts_compact(spark, path)
+    # replay after compact: below every table's watermark, ignored
+    make_fts_batch_processor(path)(_docs(spark, _BATCH1), 0)
+    assert sorted(map(tuple, bm25_topk_merged(spark, path, queries=_QS).collect())) == before
 
 
 def test_streaming_end_to_end(spark, tmp_path):
@@ -84,8 +89,12 @@ def test_streaming_end_to_end(spark, tmp_path):
         .select("doc_id", "lang", "source", "n_chars", "text")
     )
     docs.write.parquet(inbox)
-    q = stream_fts_maintenance(
-        spark, inbox, path, str(tmp_path / "ckpt"), available_now=True
+    q = start_maintenance(
+        spark,
+        DOCUMENTS_SCHEMA,
+        inbox,
+        make_fts_batch_processor(path),
+        str(tmp_path / "ckpt"),
     )
     q.awaitTermination(120)
     got = sorted(map(tuple, bm25_topk_merged(spark, path, queries=_QS).collect()))

@@ -9,6 +9,7 @@ from pdf_extraction_and_query_spark.streaming.ivf import (
     ivf_topk_merged,
     make_ivf_batch_processor,
 )
+from pdf_extraction_and_query_spark.streaming import deltaindex as DX
 
 import os
 
@@ -46,9 +47,12 @@ def test_replay_exactly_once_and_compact(spark, tmp_path):
     proc(batch, 0)  # crash replay
     assert sorted(map(tuple, ivf_topk_merged(spark, root).collect())) == once
     ivf_compact(spark, root)
-    assert not os.path.exists(f"{root}/delta")
+    assert not os.path.exists(f"{root}/delta/batch_id=0")
     assert sorted(map(tuple, ivf_topk_merged(spark, root).collect())) == once
     ivf_compact(spark, root)  # idempotent when nothing to fold
+    proc(batch, 0)  # replay after compact: below the watermark, ignored
+    assert sorted(map(tuple, ivf_topk_merged(spark, root).collect())) == once
+    assert DX.read_merged(spark, root, ["vec_id"]).count() == emb.count()
 
 
 def test_hybrid_rrf_prebuilt_fuses_component_lists(spark, tmp_path):

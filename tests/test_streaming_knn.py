@@ -89,10 +89,13 @@ def test_two_batches_replay_and_compact(spark, tmp_path):
     assert _graph(knn_graph_merged(spark, root)) == once
 
     knn_compact(spark, root)
-    assert not os.path.exists(f"{root}/assign/delta")
-    assert not os.path.exists(f"{root}/edges/delta")
+    for bid in (0, 1):
+        assert not os.path.exists(f"{root}/assign/delta/batch_id={bid}")
+        assert not os.path.exists(f"{root}/edges/delta/batch_id={bid}")
     assert _graph(knn_graph_merged(spark, root)) == once
     knn_compact(spark, root)  # idempotent when nothing to fold
+    assert _graph(knn_graph_merged(spark, root)) == once
+    proc(batches[0], 0)  # replay after compact: below both watermarks
     assert _graph(knn_graph_merged(spark, root)) == once
 
 
@@ -137,8 +140,7 @@ def got_rows(rows):
 
 
 def test_compact_between_batches_then_more_batches(spark, tmp_path):
-    """The legal compact schedule: fold at a committed boundary, keep
-    streaming.  Edges folded to k rows/query must still merge exactly
+    """Fold mid-stream, keep streaming.  Edges folded to k rows/query must still merge exactly
     with later batches' deltas (top-k-over-unions soundness after a
     fold)."""
     emb, base, batches = _split(spark, cuts=(350, 425))

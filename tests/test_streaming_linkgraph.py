@@ -16,8 +16,8 @@ from pdf_extraction_and_query_spark.streaming.linkgraph import (
     linkgraph_init,
     linkgraph_merged,
     make_linkgraph_batch_processor,
-    stream_linkgraph_maintenance,
 )
+from pdf_extraction_and_query_spark.streaming.deltaindex import start_maintenance
 
 _BASE = ["1", "2", "3"]
 _BATCH1 = ["4", "5"]
@@ -76,8 +76,12 @@ def test_streaming_end_to_end(spark, tmp_path):
     root = _setup(spark, tmp_path)
     inbox = str(tmp_path / "inbox")
     _pages(spark, _BATCH1).write.parquet(inbox)
-    q = stream_linkgraph_maintenance(
-        spark, inbox, root, str(tmp_path / "ckpt"), available_now=True
+    q = start_maintenance(
+        spark,
+        PAGES_SCHEMA,
+        inbox,
+        make_linkgraph_batch_processor(root),
+        str(tmp_path / "ckpt"),
     )
     q.awaitTermination(120)
     got = _rows(linkgraph_merged(spark, root))

@@ -14,8 +14,8 @@ from pdf_extraction_and_query_spark.streaming.minhash import (
     minhash_compact,
     minhash_pairs_merged,
     minhash_stream_init,
-    stream_minhash_maintenance,
 )
+from pdf_extraction_and_query_spark.streaming.deltaindex import start_maintenance
 
 _ARTICLE = (
     "the quarterly review board convened to examine the updated extraction "
@@ -70,10 +70,13 @@ def test_replay_exactly_once_and_compact(spark, tmp_path):
     proc(_docs(spark, _BATCH1), 0)  # crash replay of the same batch id
     assert _pairs(minhash_pairs_merged(spark, root)) == once
     minhash_compact(spark, root)
-    assert not os.path.exists(f"{root}/delta")
+    assert not os.path.exists(f"{root}/delta/batch_id=0")
     assert _pairs(minhash_pairs_merged(spark, root)) == once
     minhash_compact(spark, root)  # idempotent when nothing to fold
     assert _pairs(minhash_pairs_merged(spark, root)) == once
+    proc(_docs(spark, _BATCH1), 0)  # replay after compact: ignored
+    assert _pairs(minhash_pairs_merged(spark, root)) == once
+    assert merged_signatures(spark, root).count() == len(_BASE) + len(_BATCH1)
 
 
 def test_stream_end_to_end(spark, tmp_path):
@@ -81,8 +84,12 @@ def test_stream_end_to_end(spark, tmp_path):
     root = str(tmp_path / "mh")
     minhash_stream_init(_docs(spark, _BASE), root)
     _docs(spark, _BATCH1).write.mode("append").parquet(inbox)
-    q = stream_minhash_maintenance(
-        spark, inbox, root, str(tmp_path / "ckpt"), available_now=True
+    q = start_maintenance(
+        spark,
+        DOCS_SCHEMA,
+        inbox,
+        make_minhash_batch_processor(root),
+        str(tmp_path / "ckpt"),
     )
     q.awaitTermination(120)
     got = _pairs(minhash_pairs_merged(spark, root))

@@ -11,6 +11,7 @@ from pdf_extraction_and_query_spark.streaming.pq import (
     pq_stream_init,
     pq_topk_merged,
 )
+from pdf_extraction_and_query_spark.streaming import deltaindex as DX
 
 SF = "/root/testdata/sf0.001"
 
@@ -46,9 +47,12 @@ def test_replay_exactly_once_and_compact(spark, tmp_path):
     proc(batch, 0)  # crash replay
     assert sorted(map(tuple, pq_topk_merged(spark, emb, root).collect())) == once
     pq_compact(spark, root)
-    assert not os.path.exists(f"{root}/delta")
+    assert not os.path.exists(f"{root}/delta/batch_id=0")
     assert sorted(map(tuple, pq_topk_merged(spark, emb, root).collect())) == once
     pq_compact(spark, root)  # idempotent when nothing to fold
+    proc(batch, 0)  # replay after compact: below the watermark, ignored
+    assert sorted(map(tuple, pq_topk_merged(spark, emb, root).collect())) == once
+    assert DX.read_merged(spark, root, ["vec_id"]).count() == emb.count()
 
 
 def test_ivfpq_merged_equals_one_shot_and_replay(spark, tmp_path):
@@ -74,5 +78,11 @@ def test_ivfpq_merged_equals_one_shot_and_replay(spark, tmp_path):
     proc(batch, 0)  # crash replay
     assert sorted(map(tuple, ivfpq_topk_merged(spark, emb, root).collect())) == got
     ivfpq_compact(spark, root)
-    assert not os.path.exists(f"{root}/delta")
+    assert not os.path.exists(f"{root}/delta/batch_id=0")
     assert sorted(map(tuple, ivfpq_topk_merged(spark, emb, root).collect())) == got
+    proc(batch, 0)  # replay after compact: below the watermark, ignored
+    assert sorted(map(tuple, ivfpq_topk_merged(spark, emb, root).collect())) == got
+    merged = DX.read_merged(
+        spark, (f"{root}/codes", f"{root}/delta"), ["vec_id"]
+    )
+    assert merged.count() == emb.count()

@@ -77,6 +77,6 @@ def test_replay_exactly_once_and_compact(spark, base, batch, tmp_path):
     quality_compact(spark, root)  # idempotent when nothing to fold
     assert _key(quality_scores_merged(spark, root)) == once
     proc(batch, 0)  # replay of the already-FOLDED batch (post-compact
-    # crash window): the folded_max watermark must make it a no-op —
+    # crash window): the fold watermark must make it a no-op —
     # without it every replayed score row would appear twice
     assert _key(quality_scores_merged(spark, root)) == once

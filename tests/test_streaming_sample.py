@@ -12,8 +12,8 @@ from pdf_extraction_and_query_spark.streaming.sample import (
     make_sample_batch_processor,
     sample_compact,
     sample_init,
-    stream_sample_maintenance,
 )
+from pdf_extraction_and_query_spark.streaming.deltaindex import start_maintenance
 
 _BASE = [(i, f"doc {i}", "en") for i in range(0, 300)]
 _B1 = [(i, f"doc {i}", "fr") for i in range(300, 600)]
@@ -79,7 +79,13 @@ def test_available_now_end_to_end(spark, tmp_path):
     sample_init(_docs(spark, _BASE), root)
     _docs(spark, _B1).coalesce(1).write.parquet(f"{inbox}/w1")
     _docs(spark, _B2).coalesce(1).write.parquet(f"{inbox}/w2")
-    q = stream_sample_maintenance(spark, f"{inbox}/*", root, ckpt)
+    q = start_maintenance(
+        spark,
+        DOCS_SCHEMA,
+        f"{inbox}/*",
+        make_sample_batch_processor(root),
+        ckpt,
+    )
     q.awaitTermination(120)
     assert _rows(exact_sample_merged(spark, root)) == _rows(
         exact_sample(_docs(spark, _BASE + _B1 + _B2))

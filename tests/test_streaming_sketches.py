@@ -18,8 +18,8 @@ from pdf_extraction_and_query_spark.streaming.sketches import (
     make_sketch_batch_processor,
     sketch_compact,
     sketch_init,
-    stream_sketch_maintenance,
 )
+from pdf_extraction_and_query_spark.streaming.deltaindex import start_maintenance
 
 _BASE = [(0, "apple banana apple cherry"), (1, "banana durian banana")]
 _B1 = [(2, "cherry cherry apple fig"), (3, "grape banana fig fig kiwi")]
@@ -88,8 +88,12 @@ def test_available_now_end_to_end(spark, tmp_path):
     inp = tmp_path / "in"
     inp.mkdir()
     _docs(spark, _B1).write.parquet(str(inp / "b1"))
-    q = stream_sketch_maintenance(
-        spark, str(inp) + "/*", root, str(tmp_path / "ckpt")
+    q = start_maintenance(
+        spark,
+        DOCS_SCHEMA,
+        str(inp) + "/*",
+        make_sketch_batch_processor(root),
+        str(tmp_path / "ckpt"),
     )
     q.awaitTermination(120)
     every = _docs(spark, _BASE + _B1)
@@ -141,7 +145,6 @@ from pdf_extraction_and_query_spark.streaming.sketches import (
     hdr_estimates_merged,
     hdr_merged,
     make_value_sketch_batch_processor,
-    stream_value_sketch_maintenance,
     value_sketch_compact,
     value_sketch_init,
 )
@@ -190,8 +193,12 @@ def test_hdr_available_now_end_to_end(spark, tmp_path):
     inp.mkdir()
     value_sketch_init(_events(spark, _EV_BASE), root)
     _events(spark, _EV_B1).coalesce(1).write.mode("append").parquet(str(inp))
-    q = stream_value_sketch_maintenance(
-        spark, str(inp), root, str(tmp_path / "ckpt")
+    q = start_maintenance(
+        spark,
+        EVENTS_SCHEMA,
+        str(inp),
+        make_value_sketch_batch_processor(root),
+        str(tmp_path / "ckpt"),
     )
     q.awaitTermination(120)
     every = _events(spark, _EV_BASE + _EV_B1)

@@ -14,6 +14,7 @@ from pdf_extraction_and_query_spark.streaming.sq import (
     sq_stream_init,
     sq_topk_merged,
 )
+from pdf_extraction_and_query_spark.streaming import deltaindex as DX
 
 SF = "/root/testdata/sf0.001"
 
@@ -50,6 +51,9 @@ def test_replay_exactly_once_and_compact(spark, tmp_path):
     proc(batch, 0)  # crash replay
     assert _key(sq_topk_merged(spark, emb, root)) == once
     sq_compact(spark, root)
-    assert not os.path.exists(f"{root}/delta")
+    assert not os.path.exists(f"{root}/delta/batch_id=0")
     assert _key(sq_topk_merged(spark, emb, root)) == once
     sq_compact(spark, root)  # idempotent when nothing to fold
+    proc(batch, 0)  # replay after compact: below the watermark, ignored
+    assert _key(sq_topk_merged(spark, emb, root)) == once
+    assert DX.read_merged(spark, root, ["vec_id"]).count() == emb.count()

@@ -12,11 +12,11 @@ from pdf_extraction_and_query_spark.streaming.vocab import (
     DOCS_SCHEMA,
     first_occurrence_merged,
     make_vocab_batch_processor,
-    stream_vocab_maintenance,
     vocab_compact,
     vocab_growth_merged,
     vocab_init,
 )
+from pdf_extraction_and_query_spark.streaming.deltaindex import start_maintenance
 
 # doc_ids straddle the first VG threshold (64) so the curve is non-trivial
 _BASE = [(0, "alpha beta alpha gamma"), (40, "beta delta beta")]
@@ -93,7 +93,13 @@ def test_available_now_end_to_end(spark, tmp_path):
     vocab_init(_docs(spark, _BASE), root)
     _docs(spark, _B1).coalesce(1).write.parquet(f"{inbox}/w1")
     _docs(spark, _B2).coalesce(1).write.parquet(f"{inbox}/w2")
-    q = stream_vocab_maintenance(spark, f"{inbox}/*", root, ckpt)
+    q = start_maintenance(
+        spark,
+        DOCS_SCHEMA,
+        f"{inbox}/*",
+        make_vocab_batch_processor(root),
+        ckpt,
+    )
     q.awaitTermination(120)
     every = _docs(spark, _BASE + _B1 + _B2)
     assert _rows(vocab_growth_merged(spark, root)) == _rows(

@@ -54,3 +54,26 @@ def test_clear_partitions_issues_partition_delete():
     spark.sql.assert_called_once_with(
         "DELETE FROM lake.db.docs WHERE bucket IN (3, 7)"
     )
+
+
+def test_replace_versioned_carries_version_as_table_property():
+    df = mock.MagicMock()
+    tables.replace_versioned(df, "db.idx", 7, ["bucket"])
+    df.writeTo.assert_called_once_with("lake.db.idx")
+    prop = df.writeTo.return_value.tableProperty
+    prop.assert_called_once_with("folded_max", "7")
+    prop.return_value.partitionedBy.assert_called_once_with("bucket")
+    replace = prop.return_value.partitionedBy.return_value.createOrReplace
+    replace.assert_called_once_with()
+    df.write.parquet.assert_not_called()
+
+
+def test_read_versioned_reads_version_property():
+    spark = mock.MagicMock()
+    spark.sql.return_value.collect.return_value = [
+        {"key": "format-version", "value": "2"},
+        {"key": "folded_max", "value": "7"},
+    ]
+    df, version = tables.read_versioned(spark, "db.idx")
+    spark.sql.assert_called_once_with("SHOW TBLPROPERTIES lake.db.idx")
+    assert version == 7 and df is spark.read.table.return_value
