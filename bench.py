@@ -219,7 +219,6 @@ def main() -> None:
     from pdf_extraction_and_query_spark.operators import pq as PQ
     from pdf_extraction_and_query_spark.plans.extract import (
         extract_spans,
-        extract_spans_routed,
         write_spans_routed,
     )
     from pdf_extraction_and_query_spark.plans.registry import QUERIES
@@ -255,7 +254,8 @@ def main() -> None:
     routed_path = f"{tmp_root}/spans_routed.parquet"
     write_spans_routed(spans, routed_path)
     routed_sec, routed_rows = bench(
-        lambda: extract_spans_routed(spark, routed_path).count(), name="extract_routed"
+        lambda: extract_spans(spark.read.parquet(routed_path), mode="hybrid").count(),
+        name="extract_routed",
     )
 
     query_times: dict[str, float] = {
@@ -291,7 +291,7 @@ def main() -> None:
     synth_routed = f"{tmp_root}/synth_routed.parquet"
     write_spans_routed(synth, synth_routed)
     synth_routed_sec, synth_routed_rows = bench(
-        lambda: extract_spans_routed(spark, synth_routed).count(),
+        lambda: extract_spans(spark.read.parquet(synth_routed), mode="hybrid").count(),
         reps=max(REPS, 5),
         name="extract_routed_synth_skewed",
         probe=True,

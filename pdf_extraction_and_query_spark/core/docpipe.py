@@ -53,7 +53,6 @@ class ExtractConfig:
     chunk_overlap: int = DEFAULT_CHUNK_OVERLAP
     use_section_awareness: bool = True
     boilerplate_min_pages: int = bp.DEFAULT_MIN_PAGES
-    strip_boilerplate: bool = True
 
 
 # parallel per-span columns, in this order, are the kernel's input
@@ -69,9 +68,11 @@ def span_columns(spans: Sequence[Dict[str, Any]]) -> Tuple[List[Any], ...]:
 def _pages_and_segments(
     kinds: Sequence[str], offsets: Sequence[int], pages: Sequence[Any]
 ) -> List[Tuple[int, int, int]]:
-    """``(index, page, seg)`` per non-marker span in offset order (stable):
-    ``page`` is the explicit field when set, else the running page-marker
-    count (at least 1); ``seg`` counts the media spans before the span."""
+    """``(index, page, seg)`` per text or media span in offset order
+    (stable): ``page`` is the explicit field when set, else the running
+    page-marker count (at least 1); ``seg`` counts the media spans before
+    the span. Spans of any other kind are ignored, as on the staged path
+    (``process_documents`` reports them as "unknown span kinds ignored")."""
     out: List[Tuple[int, int, int]] = []
     markers_seen = 0
     media_seen = 0
@@ -79,6 +80,8 @@ def _pages_and_segments(
         kind = kinds[i]
         if kind == "page_marker":
             markers_seen += 1
+            continue
+        if kind != "text" and kind not in MEDIA_KINDS:
             continue
         page = pages[i]
         out.append((i, max(1, markers_seen) if page is None else int(page), media_seen))
@@ -93,7 +96,7 @@ def _line_records(
     """Stage 1-2 over span columns: page/segment derivation, page font
     mode, boilerplate strip, per-line features. Returns, in offset order,
     feature records for the kept text lines and ``{kind, text, media_ref,
-    offset, page, seg}`` records for every other non-marker span."""
+    offset, page, seg}`` records for the media spans."""
     kinds, texts, refs, offsets, pages, sizes, bolds = cols
     prepared = _pages_and_segments(kinds, offsets, pages)
     text_rows = [(i, page) for i, page, _ in prepared if kinds[i] == "text"]
@@ -113,9 +116,7 @@ def _line_records(
     # the result reused for the membership test (was ~30% of kernel CPU).
     boiler: set = set()
     norms: Dict[str, str] = {}
-    if cfg.strip_boilerplate and len(
-        {page for _, page in text_rows}
-    ) >= cfg.boilerplate_min_pages:
+    if len({page for _, page in text_rows}) >= cfg.boilerplate_min_pages:
         norms = {t: bp.normalize_line(t) for t in set(lines.values())}
         boiler = bp.boilerplate_keys_from_norms(
             ((norms[lines[i]], page) for i, page in text_rows),
@@ -171,8 +172,8 @@ def _segments(
     cols: Sequence[Sequence[Any]], cfg: ExtractConfig
 ) -> Tuple[int, Dict[int, List[Dict[str, Any]]], Dict[int, Dict[str, Any]]]:
     """Stages 1-3 grouped by media segment: ``(n_segs, blocks_by_seg,
-    media_by_seg)``. Blocks keep offset order; a segment's media record is
-    the last non-text span that carries its index."""
+    media_by_seg)``. Blocks keep offset order; media span k closes
+    segment k."""
     media_by_seg: Dict[int, Dict[str, Any]] = {}
     text_lines: List[Dict[str, Any]] = []
     for r in _line_records(cols, cfg):
@@ -185,14 +186,6 @@ def _segments(
         blocks_by_seg.setdefault(b["seg"], []).append(b)
     n_segs = max(max(blocks_by_seg, default=-1), max(media_by_seg, default=-1)) + 1
     return n_segs, blocks_by_seg, media_by_seg
-
-
-def _chunker(cfg: ExtractConfig) -> SectionChunker:
-    return SectionChunker(
-        max_chunk_size=cfg.max_chunk_size,
-        chunk_overlap=cfg.chunk_overlap,
-        use_section_awareness=cfg.use_section_awareness,
-    )
 
 
 def extract_columns(
@@ -215,7 +208,11 @@ def extract_columns(
     n_segs, blocks_by_seg, media_by_seg = _segments(
         (kinds, texts, refs, offsets, pages, sizes, bolds), cfg
     )
-    chunker = _chunker(cfg)
+    chunker = SectionChunker(
+        max_chunk_size=cfg.max_chunk_size,
+        chunk_overlap=cfg.chunk_overlap,
+        use_section_awareness=cfg.use_section_awareness,
+    )
     out: List[Tuple[str, Optional[str], Optional[str]]] = []
     for seg in range(n_segs):
         blocks = blocks_by_seg.get(seg)
@@ -238,29 +235,3 @@ def extract_document(
         {"kind": k, "text": t, "media_ref": r, "order": i}
         for i, (k, t, r) in enumerate(extract_columns(*span_columns(spans), cfg))
     ]
-
-
-def chunk_records(
-    spans: Sequence[Dict[str, Any]], cfg: ExtractConfig = ExtractConfig()
-) -> List[Dict[str, Any]]:
-    """Chunk rows with full metadata (analog of the reference's chunks table,
-    ``src/vector_store/schema.py:55-78``): ``{seg, chunk_index, text,
-    chunk_size, metadata}`` with doc-global chunk_index."""
-    _, blocks_by_seg, _ = _segments(span_columns(spans), cfg)
-    chunker = _chunker(cfg)
-    out: List[Dict[str, Any]] = []
-    idx = 0
-    for seg in sorted(blocks_by_seg):
-        cleaned, _ = clean(blocks_to_marked_text(blocks_by_seg[seg]), validate=False)
-        for ch in chunker.chunk(cleaned):
-            out.append(
-                {
-                    "seg": seg,
-                    "chunk_index": idx,
-                    "text": ch["text"],
-                    "chunk_size": ch["chunk_size"],
-                    "metadata": ch["metadata"],
-                }
-            )
-            idx += 1
-    return out

@@ -511,12 +511,13 @@ def connected_components(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
     See :func:`dedup_clusters` for the algorithmic contract; factored out
     so chain-shaped graphs (multi-round convergence) are unit-testable
     independent of the LSH pair generator."""
-    edges = pairs.select(
+    # pair generation runs ONCE: both orientations read one checkpoint
+    p = pairs.select("doc_a", "doc_b").localCheckpoint()
+    edges = p.select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     ).unionByName(
-        pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
+        p.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
     )
-    edges = edges.localCheckpoint()  # pair generation runs ONCE, not per round
     labels = edges.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )
@@ -596,7 +597,10 @@ def connected_components_star(pairs: DataFrame, max_iters: int = 60) -> DataFram
     Lineage is truncated per round with localCheckpoint; convergence is an
     edge-set signature match (the fixpoint star is invariant under both
     phases)."""
-    raw = pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
+    # pair generation runs ONCE: nodes and edges both read one checkpoint
+    raw = pairs.select(
+        F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
+    ).localCheckpoint()
     # every node that appears in ANY pair gets an output row — including a
     # node whose only pair is a self-loop (same contract as minlabel)
     nodes = (

@@ -200,11 +200,16 @@ def flag_boilerplate(lines_df: DataFrame, min_pages: int = bp.DEFAULT_MIN_PAGES)
     distinct pages of the same document (north-rule boilerplate strip).
 
     Normalization mirrors ``core.boilerplate.normalize_line``: lowercase,
-    digit runs -> '0', whitespace runs -> ' ', trimmed. Spark-native: one
-    window with ``collect_set(page)`` per (doc_id, norm)."""
+    digit runs -> '0', whitespace runs -> ' ', trimmed. Java's digit and
+    whitespace classes are ASCII-only; ``(?U)`` makes them Unicode, and
+    U+001C-U+001F, which Python's ``str.split`` treats as whitespace and
+    Java's Unicode class does not, are added to it. Spark-native: one window
+    with ``collect_set(page)`` per (doc_id, norm)."""
     norm = F.trim(
         F.regexp_replace(
-            F.regexp_replace(F.lower(F.col("text")), r"\d+", "0"), r"\s+", " "
+            F.regexp_replace(F.lower(F.col("text")), r"(?U)\d+", "0"),
+            r"(?U)[\s\x1c-\x1f]+",
+            " ",
         )
     )
     df = lines_df.withColumn(

@@ -11,8 +11,11 @@
   kernel per document straight from Arrow span batches — zero shuffles,
   best raw throughput when the corpus is mostly small documents; no
   intra-document parallelism.
+* ``mode='hybrid'``: the one whale router — small docs fused, whale docs
+  staged with the banded stage 1; routed by the ``is_whale`` partition
+  column of a :func:`write_spans_routed` table, else by a size probe.
 
-Both must produce identical span sequences (enforced by
+All must produce identical span sequences (enforced by
 tests/test_pipeline_equality.py against the eager oracle).
 """
 
@@ -37,11 +40,18 @@ from ..operators.extraction import (
 # MEMORY bound: fused streams the whole doc through one Arrow row, so the
 # threshold caps per-row footprint (~200k spans ~= 20 MB of text). Since
 # round 3 the staged branch is no longer a latency sacrifice either: with
-# the banded stage 1 (hybrid passes banded_stage1=True) a single 408k-span
-# whale measured staged 5.1 s vs fused 7.5 s on 32 cores (was 30.2 vs
-# 4.8 s with the doc-serial stage-1 windows) — above the threshold the
-# staged path is both the bounded-memory AND the faster route.
+# the banded stage 1 (the hybrid whale branch) a single 408k-span whale
+# measured staged 5.1 s vs fused 7.5 s on 32 cores (was 30.2 vs 4.8 s with
+# the doc-serial stage-1 windows) — above the threshold the staged path is
+# both the bounded-memory AND the faster route.
 HYBRID_SPAN_THRESHOLD = 200_000
+
+
+def _staged(spans_df: DataFrame, cfg: ExtractConfig, banded: bool) -> DataFrame:
+    lines = flag_boilerplate(
+        explode_spans(spans_df, banded=banded), cfg.boilerplate_min_pages
+    )
+    return interleave(chunk_blocks(reconstruct_blocks(lines), cfg), lines)
 
 
 def extract_spans(
@@ -49,8 +59,6 @@ def extract_spans(
     cfg: ExtractConfig = ExtractConfig(),
     mode: str = "staged",
     hybrid_threshold: int = HYBRID_SPAN_THRESHOLD,
-    banded_stage1: bool | None = None,
-    probe_whales: bool = True,
 ) -> DataFrame:
     """Ordered output spans (doc_id, order, kind, text, media_ref).
 
@@ -61,47 +69,39 @@ def extract_spans(
     narrow path while oversized docs get intra-document page parallelism;
     per-doc outputs are identical on every path, so the union is safe).
 
-    ``probe_whales`` (hybrid only, default on): one cheap codegen-only
-    ``max(size(spans))`` aggregate decides the routing BEFORE the plan is
-    built — a whale-free corpus gets the pure fused plan with no
-    ``size(spans)`` filter and NO planned-but-empty staged branch (whose
-    fixed cost is a second full source scan + empty shuffle stages).
-    Measured on the 25.6k-doc whale-free skewed bench corpus, interleaved
-    best-of-5 on a quiet local[32]: probe ON 3.27 s vs OFF 4.33 s — the
-    0.24 s probe buys back ~1.3 s of dead branch.  The probe snapshot is
-    per-invocation — a table that gains whales afterwards re-probes on the
-    next call; the ingest-time answer to the same problem is
-    :func:`write_spans_routed`, whose partition pruning needs no probe at
-    all."""
+    Hybrid routes from the input itself. A table written by
+    :func:`write_spans_routed` carries the ingest-time ``is_whale``
+    partition column: both branch scans are partition-pruned, nothing is
+    probed, and ``hybrid_threshold`` is the one the table was written with.
+    Any other input pays one codegen-only ``max(size(spans))`` aggregate
+    before the plan is built, and a whale-free corpus gets the pure fused
+    plan with no ``size(spans)`` filter and NO planned-but-empty staged
+    branch (whose fixed cost is a second full source scan + empty shuffle
+    stages). Measured on the 25.6k-doc whale-free skewed bench corpus,
+    interleaved best-of-5 on a quiet local[32]: probe 3.27 s vs no probe
+    4.33 s — the 0.24 s probe buys back ~1.3 s of dead branch. The probe
+    snapshot is per-invocation: a table that gains whales afterwards
+    re-probes on the next call. The whale branch runs the staged stages
+    with the banded stage 1 (intra-doc parallelism from the first shuffle;
+    the extra source pass it costs is paid only by whales)."""
     from ..sources.packaging import ensure_shipped
 
     ensure_shipped(spans_df.sparkSession)
     if mode == "fused":
         return fused_extract(spans_df, cfg)
-    if mode == "hybrid":
-        n = F.size("spans")
-        if probe_whales:
-            mx = spans_df.agg(F.max(F.size("spans")).alias("mx")).collect()[0]["mx"]
-            if mx is None or mx <= hybrid_threshold:
-                return fused_extract(spans_df, cfg)
-        small = fused_extract(spans_df.where(n <= hybrid_threshold), cfg)
-        # the staged branch receives ONLY whale docs, so its stage 1 uses
-        # the banded prefix scan (intra-doc parallelism from the first
-        # shuffle; the extra source pass it costs is paid only by whales)
-        big = extract_spans(
-            spans_df.where(n > hybrid_threshold), cfg, mode="staged",
-            banded_stage1=True,
-        )
-        return small.unionByName(big)
-    if mode != "staged":
+    if mode == "staged":
+        return _staged(spans_df, cfg, banded=False)
+    if mode != "hybrid":
         raise ValueError(f"unknown mode: {mode}")
-    lines = explode_spans(spans_df, banded=bool(banded_stage1))
-    lines = flag_boilerplate(lines, cfg.boilerplate_min_pages) if cfg.strip_boilerplate else lines.withColumn(
-        "is_boiler", F.lit(False)
-    )
-    blocks = reconstruct_blocks(lines)
-    chunks = chunk_blocks(blocks, cfg)
-    return interleave(chunks, lines)
+    if "is_whale" in spans_df.columns:
+        whale = F.col("is_whale") == 1
+    else:
+        mx = spans_df.agg(F.max(F.size("spans")).alias("mx")).collect()[0]["mx"]
+        if mx is None or mx <= hybrid_threshold:
+            return fused_extract(spans_df, cfg)
+        whale = F.size("spans") > hybrid_threshold
+    small = fused_extract(spans_df.where(~whale), cfg)
+    return small.unionByName(_staged(spans_df.where(whale), cfg, banded=True))
 
 
 # validation guard: the reference rejects oversize inputs at ingest
@@ -213,32 +213,11 @@ def write_spans_routed(
     read exactly once by exactly one branch, and a whale-free corpus makes
     the whale branch zero files -> zero tasks.  On the Iceberg backend the
     same column is simply part of the table's partition spec
-    (``PARTITIONED BY (is_whale)``)."""
+    (``PARTITIONED BY (is_whale)``). Read it back with
+    ``extract_spans(spark.read.parquet(path), cfg, mode="hybrid")``."""
     # int 0/1, not boolean: Spark's partition-value type inference covers
     # numerics/dates only — a boolean flag reads back as the STRING
     # 'true'/'false'
     spans_df.withColumn(
         "is_whale", (F.size("spans") > threshold).cast("int")
     ).write.mode("overwrite").partitionBy("is_whale").parquet(path)
-
-
-def extract_spans_routed(
-    spark,
-    path: str,
-    cfg: ExtractConfig = ExtractConfig(),
-) -> DataFrame:
-    """Hybrid extraction over a :func:`write_spans_routed` table: the fused
-    branch scans only ``is_whale=false`` files, the banded staged branch
-    only ``is_whale=true`` files (both pruned — asserted by
-    tests/test_partitioned_routing.py on the query plans).  Span-for-span
-    equal to every other mode."""
-    from ..sources.packaging import ensure_shipped
-
-    ensure_shipped(spark)
-    t = spark.read.parquet(path)
-    small = fused_extract(t.where(F.col("is_whale") == 0).drop("is_whale"), cfg)
-    big = extract_spans(
-        t.where(F.col("is_whale") == 1).drop("is_whale"), cfg, mode="staged",
-        banded_stage1=True,
-    )
-    return small.unionByName(big)

@@ -13,8 +13,7 @@ API surface used by the engine:
   * ``read_table(spark, ident)``          — scan
   * ``append(df, ident)``                 — append rows
   * ``overwrite_partitions(df, ident, cols)`` — idempotent dynamic overwrite
-  * ``delete_where(spark, ident, cond)``  — delete (Iceberg DELETE / parquet
-                                            anti-filter rewrite)
+  * ``clear_partitions(spark, ident, col, values)`` — drop partitions
   * ``read_versioned`` / ``replace_versioned`` / ``drop_versions``
                                           — atomically swapped versioned
                                             base (streaming/deltaindex)
@@ -213,78 +212,3 @@ def clear_partitions(spark: SparkSession, ident: str, col: str, values: list) ->
         )
         fs = path.getFileSystem(hconf)
         fs.delete(path, True)  # no-op (returns False) if absent
-
-
-def _staged_swap(spark: SparkSession, ident: str, write_staged) -> None:
-    """Distributed rewrite of a parquet directory: write the replacement to
-    a sibling staging path with a normal cluster-parallel write, then swap
-    directories via the Hadoop FileSystem API (works on HDFS/S3A as well as
-    local). Never collects to the driver, so table size is bounded by the
-    cluster, not driver memory. The swap is not atomic (parquet has no
-    transactional metadata — that is what the Iceberg backend is for); a
-    crash between delete and rename leaves the staged copy intact for
-    manual recovery.
-
-    RECOVERY: if a reader finds the table path missing, look for sibling
-    ``<ident>__old_<tag>`` (pre-swap data — rename it back to ``<ident>``)
-    or ``<ident>__staging_<tag>`` (the finished replacement — rename it in).
-    At most one swap's directories exist per tag; deployments needing
-    concurrent readers during maintenance should run the Iceberg backend
-    (``SPARK_GRAFT_CATALOG``), whose DELETE/rewrite are snapshot-atomic."""
-    import uuid
-
-    tag = uuid.uuid4().hex[:8]
-    staging = f"{ident}__staging_{tag}"
-    write_staged(staging)
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    Path = jvm.org.apache.hadoop.fs.Path
-    fs = Path(ident).getFileSystem(hconf)
-    # rename-aside / rename-in / delete (NOT delete-then-rename): the table
-    # path is missing only between the two renames — metadata ops — instead
-    # of for the duration of a recursive delete; a crash leaves either the
-    # old or the staged copy intact under a predictable name
-    old = f"{ident}__old_{tag}"
-    if not fs.rename(Path(ident), Path(old)):
-        raise IOError(f"staged swap: rename {ident} -> {old} failed")
-    if not fs.rename(Path(staging), Path(ident)):
-        raise IOError(
-            f"staged swap: rename {staging} -> {ident} failed; previous data at {old}"
-        )
-    fs.delete(Path(old), True)
-
-
-def delete_where(spark: SparkSession, ident: str, condition: str) -> None:
-    """Row-level delete. Iceberg: native DELETE. Parquet: distributed
-    staged rewrite of the kept rows + directory swap (see _staged_swap)."""
-    if _is_iceberg():
-        spark.sql(f"DELETE FROM {CATALOG}.{ident} WHERE {condition}")
-        return
-    kept = spark.read.parquet(ident).where(f"NOT ({condition})")
-    _staged_swap(spark, ident, lambda p: kept.write.parquet(p))
-
-
-def compact(spark: SparkSession, ident: str, target_file_mb: int = 128) -> int:
-    """Small-files compaction — the standing maintenance job of any
-    long-running ingest (every streaming micro-batch / checkpoint wave adds
-    files; scan cost at 100 TB is driven by file count as much as bytes).
-    Iceberg: rewrite_data_files. Parquet: coalesce to ceil(bytes/target)
-    output files via a staged rewrite (coalesce, not repartition — no
-    shuffle, upstream tasks just concatenate). Returns the target file
-    count."""
-    if _is_iceberg():
-        spark.sql(
-            f"CALL {CATALOG}.system.rewrite_data_files("
-            f"table => '{ident}', "
-            f"options => map('target-file-size-bytes', '{target_file_mb * 1024 * 1024}'))"
-        )
-        return -1
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    Path = jvm.org.apache.hadoop.fs.Path
-    fs = Path(ident).getFileSystem(hconf)
-    total_bytes = fs.getContentSummary(Path(ident)).getLength()
-    n_files = max(1, -(-total_bytes // (target_file_mb * 1024 * 1024)))
-    df = spark.read.parquet(ident).coalesce(int(n_files))
-    _staged_swap(spark, ident, lambda p: df.write.parquet(p))
-    return int(n_files)

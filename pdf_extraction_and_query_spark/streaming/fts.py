@@ -13,8 +13,9 @@ folds leaves every table complete.
 
 Contract: the corpus is APPEND-ONLY on doc_id (the same assumption the
 streaming ingest makes) — a doc_id re-appearing in a later batch would
-sum-merge rather than replace.  Document updates belong to the batch
-``delete_where`` + re-ingest path, not the streaming appender.
+sum-merge rather than replace.  Document updates belong to a batch
+rebuild (``fulltext.fts_build`` over the updated corpus), not the
+streaming appender.
 
 Scale: the base is the bucket-pruned search path; deltas stay small
 between compactions, so a merged query reads (pruned base) + (pruned

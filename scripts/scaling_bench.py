@@ -38,7 +38,7 @@ _WORKER = r"""
 import json, sys, time
 sys.path.insert(0, {repo!r})
 from pyspark.sql import SparkSession
-from pdf_extraction_and_query_spark.plans.extract import extract_spans, extract_spans_routed
+from pdf_extraction_and_query_spark.plans.extract import extract_spans
 from pdf_extraction_and_query_spark.sources.packaging import attach_package
 if {executors}:
     # real separate executor JVMs: the faithful N-vs-4N-EXECUTOR simulation
@@ -64,7 +64,7 @@ n_docs = df.count()
 if {mode!r} == "routed":
     # production table layout: corpus partitioned by is_whale at ingest,
     # both hybrid branches partition-pruned (PLANS.md #10)
-    job = lambda: extract_spans_routed(spark, {corpus!r}).count()
+    job = lambda: extract_spans(spark.read.parquet({corpus!r}), mode="hybrid").count()
 elif {mode!r} == "html":
     # north-rule HTML surface: DOM-heuristic main-content parse over a
     # (doc_id, html) page table — one shuffle-free Arrow stage
@@ -188,8 +188,8 @@ def main() -> None:
                     help="use local-cluster[N,4,*] (separate executor JVMs) "
                          "instead of local[cores]")
     ap.add_argument("--routed", action="store_true",
-                    help="run over the is_whale-partitioned table via "
-                         "extract_spans_routed (production ingest layout)")
+                    help="run hybrid over the is_whale-partitioned table "
+                         "(production ingest layout)")
     ap.add_argument("--cores-per-exec", type=int, default=4,
                     help="executor size for --executors mode; use 2 to keep "
                          "N and 4N total cores inside this VM's linear "

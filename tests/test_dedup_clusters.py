@@ -4,6 +4,7 @@ multi-round label propagation, and the fixpoint guard must trip when the
 diameter exceeds max_iters."""
 
 import pytest
+from pyspark.sql import functions as F
 
 from pdf_extraction_and_query_spark.operators.dedup import (
     connected_components,
@@ -74,6 +75,26 @@ def test_star_matches_minlabel(spark, name):
     assert _rows(connected_components_star(pairs)) == _rows(
         connected_components(pairs)
     )
+
+
+@pytest.mark.parametrize("cc", [connected_components, connected_components_star])
+def test_pair_source_evaluated_once_per_pair(spark, cc):
+    """The pair source (the whole MinHash-LSH pipeline in dedup_clusters)
+    is evaluated once: both edge orientations and the node set derive from
+    one checkpoint. A counting UDF on the source counts the evaluations."""
+    evals = spark.sparkContext.accumulator(0)
+
+    def counted(x):
+        evals.add(1)
+        return x
+
+    n = 50
+    pairs = spark.range(n).select(
+        F.udf(counted, "long")(F.col("id") * 2).alias("doc_a"),
+        (F.col("id") * 2 + 1).alias("doc_b"),
+    )
+    assert len(cc(pairs).collect()) == 2 * n
+    assert evals.value == n
 
 
 def test_star_bounded_rounds_on_10k_chain(spark):

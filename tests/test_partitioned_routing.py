@@ -1,14 +1,13 @@
 """Storage-level whale routing: write_spans_routed partitions the corpus by
-is_whale, and extract_spans_routed's two branches must each be PARTITION-
-PRUNED scans (no read amplification), with output span-equal to the eager
-kernel and to in-plan hybrid."""
+is_whale, and hybrid extraction over that table must route by the flag: both
+branches PARTITION-PRUNED scans (no read amplification), no probe job, and
+output span-equal to the eager kernel."""
 
 from pyspark.sql import functions as F
 
 from pdf_extraction_and_query_spark.core.docpipe import ExtractConfig, extract_document
 from pdf_extraction_and_query_spark.plans.extract import (
     extract_spans,
-    extract_spans_routed,
     write_spans_routed,
 )
 from pdf_extraction_and_query_spark.sources.corpus import docs_to_df, synth_doc
@@ -44,7 +43,7 @@ def test_routed_table_span_equality_and_pruning(spark, tmp_path):
     parts = {p for p in os.listdir(path) if p.startswith("is_whale=")}
     assert parts == {"is_whale=0", "is_whale=1"}
 
-    out = extract_spans_routed(spark, path, cfg)
+    out = extract_spans(spark.read.parquet(path), cfg, mode="hybrid")
     got = {
         (r["doc_id"], r["order"], r["kind"], r["text"], r["media_ref"])
         for r in out.collect()
@@ -72,9 +71,25 @@ def test_whale_free_corpus_whale_branch_scans_nothing(spark, tmp_path):
     # without touching data
     assert whale_side.rdd.getNumPartitions() == 0 or whale_side.isEmpty()
 
-    out = extract_spans_routed(spark, path, cfg)
+    out = extract_spans(t, cfg, mode="hybrid")
     got = {
         (r["doc_id"], r["order"], r["kind"], r["text"], r["media_ref"])
         for r in out.collect()
     }
     assert got == _eager(docs, cfg)
+
+
+def test_routed_table_plans_without_a_job(spark, tmp_path):
+    """The ingest-time flag replaces the in-plan probe: building the hybrid
+    plan over a routed table starts no Spark job."""
+    _, df = _corpus(spark, with_whale=True)
+    path = str(tmp_path / "routed_noprobe")
+    write_spans_routed(df, path, threshold=THRESHOLD)
+    t = spark.read.parquet(path)
+    sc = spark.sparkContext
+    sc.setJobGroup("routed-plan", "hybrid planning over a routed table")
+    try:
+        extract_spans(t, ExtractConfig(), mode="hybrid")
+    finally:
+        sc.setJobGroup("routed-plan-done", "")
+    assert list(sc.statusTracker().getJobIdsForGroup("routed-plan")) == []

@@ -8,14 +8,22 @@ import pytest
 from pdf_extraction_and_query_spark.core.docpipe import ExtractConfig, extract_document
 from pdf_extraction_and_query_spark.plans.extract import extract_spans
 from pdf_extraction_and_query_spark.sources.corpus import docs_to_df, synth_docs
+from tests.test_kernel_golden import EDGE
 
 N_DOCS = 40
 CFG = ExtractConfig(max_chunk_size=400, chunk_overlap=80)
+# golden edge docs on which the staged path once disagreed with the kernel:
+# unknown span kinds are ignored, and boilerplate normalization is Unicode
+# (digits, whitespace incl. U+001C-U+001F)
+SPEC_DOCS = ("unknown_kind", "unicode_boilerplate")
 
 
 @pytest.fixture(scope="module")
 def corpus():
-    return synth_docs(N_DOCS, seed=42)
+    fields = dict.fromkeys(("page", "font_size", "bold"))
+    return synth_docs(N_DOCS, seed=42) + [
+        (d, [{**fields, **s} for s in EDGE[d]]) for d in SPEC_DOCS
+    ]
 
 
 @pytest.fixture(scope="module")
@@ -58,9 +66,10 @@ def test_pipeline_matches_oracle(spark, corpus, oracle_out, mode):
     # low threshold so the hybrid run genuinely routes docs down BOTH paths
     kw = {"hybrid_threshold": 60} if mode == "hybrid" else {}
     if mode == "staged_banded":
-        # the whale stage-1 path (distributed prefix scan) must be
-        # span-identical to the plain doc_id-window derivation
-        mode, kw = "staged", {"banded_stage1": True}
+        # threshold 0 sends every non-empty doc down the whale branch: the
+        # banded stage 1 (distributed prefix scan) must be span-identical
+        # to the plain doc_id-window derivation
+        mode, kw = "hybrid", {"hybrid_threshold": 0}
     got = _collect(extract_spans(df, CFG, mode=mode, **kw))
     _assert_equal(got, oracle_out)
 

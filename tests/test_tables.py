@@ -1,63 +1,7 @@
-"""Table-catalog shim: distributed delete rewrite, partition clearing, and
-conf hygiene of the dynamic-overwrite path."""
+"""Table-catalog shim: partition clearing and conf hygiene of the
+dynamic-overwrite path."""
 
 from pyspark.sql import functions as F
-
-
-def test_delete_where_distributed_rewrite(spark, tmp_path_factory):
-    """Parquet delete = distributed staged rewrite + directory swap — no
-    driver-side collect, so it must handle a table far larger than any
-    sane collect would. Cascade shape: same predicate as the documents-side
-    delete applied to the dependent chunk-shaped table."""
-    from pdf_extraction_and_query_spark.sources import tables
-
-    path = str(tmp_path_factory.mktemp("tbl") / "chunks")
-    n = 200_000
-    spark.range(n).select(
-        F.col("id").alias("chunk_id"),
-        (F.col("id") % 1000).alias("doc_id"),
-        F.md5(F.col("id").cast("string")).alias("text"),
-    ).repartition(8).write.parquet(path)
-
-    tables.delete_where(spark, path, "doc_id % 7 = 0")
-
-    out = spark.read.parquet(path)
-    assert out.where("doc_id % 7 = 0").count() == 0
-    expected = sum(1 for i in range(n) if (i % 1000) % 7 != 0)
-    assert out.count() == expected
-    # no staging leftovers
-    import os
-
-    parent = os.path.dirname(path)
-    assert [d for d in os.listdir(parent) if "__staging_" in d] == []
-
-
-def test_compact_merges_small_files(spark, tmp_path_factory):
-    """Streaming/checkpoint appends accumulate small files; compact must
-    reduce file count without changing content."""
-    import os
-
-    from pdf_extraction_and_query_spark.sources import tables
-
-    path = str(tmp_path_factory.mktemp("tbl") / "frag")
-    for i in range(6):  # six tiny appends, several files each
-        spark.range(i * 1000, (i + 1) * 1000).repartition(4).write.mode(
-            "append"
-        ).parquet(path)
-    files_before = [f for f in os.listdir(path) if f.endswith(".parquet")]
-    before = spark.read.parquet(path)
-    total = before.count()
-    checksum = before.agg(F.sum("id")).first()[0]
-
-    tables.compact(spark, path, target_file_mb=128)
-
-    files_after = [f for f in os.listdir(path) if f.endswith(".parquet")]
-    assert len(files_after) < len(files_before)
-    after = spark.read.parquet(path)
-    assert after.count() == total
-    assert after.agg(F.sum("id")).first()[0] == checksum
-    parent = os.path.dirname(path)
-    assert [d for d in os.listdir(parent) if "__staging_" in d] == []
 
 
 def test_overwrite_partitions_leaves_session_conf_alone(spark, tmp_path_factory):

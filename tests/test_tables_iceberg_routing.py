@@ -39,15 +39,6 @@ def test_overwrite_partitions_routes_to_overwritePartitions():
     df.sparkSession.conf.set.assert_not_called()
 
 
-def test_delete_where_issues_row_level_delete():
-    spark = mock.MagicMock()
-    tables.delete_where(spark, "db.docs", "doc_id % 7 = 0")
-    spark.sql.assert_called_once_with(
-        "DELETE FROM lake.db.docs WHERE doc_id % 7 = 0"
-    )
-    spark.read.parquet.assert_not_called()
-
-
 def test_clear_partitions_issues_partition_delete():
     spark = mock.MagicMock()
     tables.clear_partitions(spark, "db.docs", "bucket", [3, 7])
