@@ -18,8 +18,9 @@ CALIBRATION (round 4): the round-3 official skewed number (1,253 docs/s)
 contradicted three calm-box measurements of identical code (3.8-6.6k
 docs/s); BENCH.md documents 12-161 s swings of the same call on this
 shared VM.  The artifact now carries its own noise denominator: a fixed
-single-core numpy probe (``cal_ms_*``) interleaved with the skewed
-passes.  ``cal_ms_best`` is the box's quiet-floor; ``cal_ms_med`` >>
+single-core numpy probe (``cal_ms_*``) interleaved with every query's
+timed passes (per query: ``query_cal_ms`` in data/bench_full.json).
+``cal_ms_best`` is the box's quiet-floor; ``cal_ms_med`` >>
 ``cal_ms_best`` means the run was contended and every wall-clock number
 in the same JSON line is inflated by roughly that ratio.  The probe is
 pure CPU (no Spark, no IO) so it cannot flatter the engine.
@@ -144,9 +145,8 @@ _TRIM_ORDER = [
 
 _MEDIANS: dict[str, float] = {}
 _CAL_MS: list[float] = []
-# per-query interleaved calibration windows (probe=True with a name):
-# the denominator that distinguishes "the engine regressed" from "the
-# box was warm" for watch-listed queries (round-4 verdict Next #4)
+# per-query interleaved calibration windows: the denominator that
+# distinguishes "the engine regressed" from "the box was warm"
 _QUERY_CAL: dict[str, list[float]] = {}
 
 
@@ -167,28 +167,24 @@ def cal_probe() -> float:
     return ms
 
 
-def bench(fn, reps: int | None = None, name: str | None = None, probe: bool = False) -> tuple[float, int]:
-    """Warmup pass + reps (default $SPARK_GRAFT_BENCH_REPS) timed passes;
-    returns (best_sec, rows).  The per-query MEDIAN is recorded for
-    data/bench_full.json (the best-vs-median spread is the VM-noise
-    indicator).  ``probe=True`` interleaves a CPU calibration probe with
-    the timed passes (used on the headline skewed workload)."""
+def bench(fn, name: str, reps: int | None = None) -> tuple[float, int]:
+    """Warmup pass + reps (default $SPARK_GRAFT_BENCH_REPS) timed passes,
+    each preceded (and the last followed) by a CPU calibration probe;
+    returns (best_sec, rows).  The per-query MEDIAN and calibration window
+    are recorded for data/bench_full.json (the best-vs-median spread is
+    the VM-noise indicator, the window its denominator)."""
     rows = fn()  # warmup: full pass, not limit() — see PLANS.md / memory trap 5
     times = []
     cals = []
     for _ in range(reps or REPS):
-        if probe:
-            cals.append(cal_probe())
+        cals.append(cal_probe())
         t0 = time.monotonic()
         rows = fn()
         times.append(time.monotonic() - t0)
-    if probe:
-        cals.append(cal_probe())
-    if probe and name:
-        _QUERY_CAL[name] = [round(c, 1) for c in cals]
+    cals.append(cal_probe())
+    _QUERY_CAL[name] = [round(c, 1) for c in cals]
     times.sort()
-    if name:
-        _MEDIANS[name] = round(times[len(times) // 2], 3)
+    _MEDIANS[name] = round(times[len(times) // 2], 3)
     return times[0], rows
 
 
@@ -277,13 +273,12 @@ def main() -> None:
         synth_docs_df(spark, 25600, seed=42).write.parquet(synth_path)
     synth = spark.read.parquet(synth_path)
     n_synth = synth.count()
-    # the north-rule headline workload gets extra reps + interleaved CPU
-    # probes: this VM's noise floor is wider than the 4-5 s the pass takes
+    # the north-rule headline workload gets extra reps: this VM's noise
+    # floor is wider than the 4-5 s the pass takes
     synth_sec, synth_rows = bench(
         lambda: extract_spans(synth, mode="hybrid").count(),
         reps=max(REPS, 5),
         name="extract_hybrid_synth_skewed",
-        probe=True,
     )
     query_times["extract_hybrid_synth_skewed"] = round(synth_sec, 2)
 
@@ -294,7 +289,6 @@ def main() -> None:
         lambda: extract_spans(spark.read.parquet(synth_routed), mode="hybrid").count(),
         reps=max(REPS, 5),
         name="extract_routed_synth_skewed",
-        probe=True,
     )
     query_times["extract_routed_synth_skewed"] = round(synth_routed_sec, 2)
 
@@ -408,14 +402,7 @@ def main() -> None:
         "exact_sample",
         "c4_clean",
     ):
-        sec, _ = bench(
-            lambda n=name: QUERIES[n](spark, SF_DIR).count(),
-            name=name,
-            # r4 watch item: doc_listing regressed 2x in the official r4
-            # artifact with no code change; carry its own interleaved
-            # calibration window so the r5 artifact has the denominator
-            probe=(name == "doc_listing"),
-        )
+        sec, _ = bench(lambda n=name: QUERIES[n](spark, SF_DIR).count(), name=name)
         query_times[name] = round(sec, 2)
 
     # prebuilt index probes: build ONCE untimed, measure the SEARCH — the
@@ -450,7 +437,6 @@ def main() -> None:
         sf_val = sf
 
     cal_sorted = sorted(_CAL_MS)
-    doc_cal = _QUERY_CAL.get("doc_listing")  # absent if that query is dropped
     compact = {
         "metric": "derive+hybrid span extraction (equality-verified)",
         "value": round(derive_sec + hybrid_sec, 3),
@@ -469,9 +455,6 @@ def main() -> None:
         "synth_skewed_out_rows": synth_rows,
         "cal_ms_best": round(cal_sorted[0], 1),
         "cal_ms_med": round(cal_sorted[len(cal_sorted) // 2], 1),
-        "doc_listing_cal_ms": (
-            sorted(doc_cal)[len(doc_cal) // 2] if doc_cal else None
-        ),
         "cpus": CPUS,
         "reps": REPS,
     }
@@ -484,8 +467,9 @@ def main() -> None:
     full["cal_ms_all"] = [round(x, 1) for x in _CAL_MS]
     full["query_cal_ms"] = _QUERY_CAL
     full["methodology"] = (
-        "best-of-%d after 1 full warmup pass per query; skewed workloads "
-        "best-of-%d with interleaved CPU calibration probes" % (REPS, max(REPS, 5))
+        "best-of-%d after 1 full warmup pass per query (skewed workloads "
+        "best-of-%d), every timed pass after a CPU calibration probe"
+        % (REPS, max(REPS, 5))
     )
     spark.stop()
     _emit(compact, full)

@@ -19,7 +19,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from .. import contract as C
@@ -518,8 +518,20 @@ def connected_components(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
     ).unionByName(
         p.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
     )
-    labels = edges.select(F.col("src").alias("node")).distinct().select(
-        "node", F.col("node").alias("label")
+
+    def checkpoint_with_sum(df: DataFrame) -> tuple:
+        # labels only decrease over a fixed node set, so their sum is
+        # unchanged exactly when no label changed (decimal: no ANSI
+        # overflow); observed on the checkpoint's own pass, no extra job
+        obs = Observation()
+        total = F.sum(F.col("label").cast("decimal(38,0)")).alias("total")
+        df = df.observe(obs, total).localCheckpoint()
+        return df, obs.get["total"]
+
+    labels, total = checkpoint_with_sum(
+        edges.select(F.col("src").alias("node")).distinct().select(
+            "node", F.col("node").alias("label")
+        )
     )
     for _ in range(max_iters):
         nbr_min = (
@@ -532,24 +544,16 @@ def connected_components(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
             .groupBy("src")
             .agg(F.min("dst_label").alias("nbr_label"))
         )
-        new_labels = (
-            labels.join(nbr_min, labels["node"] == nbr_min["src"], "left")
-            .select(
+        prev = total
+        labels, total = checkpoint_with_sum(
+            labels.join(nbr_min, labels["node"] == nbr_min["src"], "left").select(
                 "node",
                 F.least(
                     F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
                 ).alias("label"),
             )
-            .localCheckpoint()
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .where(F.col("n.label") != F.col("o.label"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
+        if total == prev:
             break
     else:
         raise RuntimeError(

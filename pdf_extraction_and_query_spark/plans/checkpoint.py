@@ -10,13 +10,15 @@ Iceberg-compatible layout otherwise):
 
   * the corpus is bucketed by ``pmod(xxhash64(doc_id), n_buckets)`` — the
     bucket is the unit of completion (stable under any input ordering);
-  * buckets are processed in WAVES (each wave = one Spark action over
-    ``waves_size`` buckets, full cluster parallelism inside the wave);
+  * buckets are processed in WAVES (each wave = one write over
+    ``buckets_per_wave`` buckets, full cluster parallelism inside the wave);
   * each wave writes its output with dynamic partition-overwrite on the
     bucket column (idempotent: a re-run of a half-written bucket replaces
-    it), THEN appends per-bucket ledger rows (n_docs, output span/chunk
-    counts, wall seconds, run id). Crash between the two steps -> bucket
-    is re-done and overwritten; never double-counted, never lost;
+    it); the write itself observes the per-bucket counts (n_docs, output
+    span/chunk counts) through a ``pyspark.sql.Observation``, so the sink
+    is never read back. THEN the wave appends its ledger rows (counts,
+    wall seconds, run id). Crash between the two steps -> bucket is
+    re-done and overwritten; never double-counted, never lost;
   * resume = anti-join the bucket list against ledger rows with
     status='done' for the same job_id.
 
@@ -29,9 +31,10 @@ from __future__ import annotations
 import time
 import uuid
 from dataclasses import dataclass, field
+from datetime import datetime, timezone
 from typing import Callable, List, Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -59,10 +62,9 @@ def bucket_of(doc_id_col, n_buckets: int):
 
 
 def read_ledger(spark: SparkSession, ledger_dir: str) -> DataFrame:
-    try:
-        return spark.read.schema(LEDGER_SCHEMA).parquet(ledger_dir) if not tables._is_iceberg() else tables.read_table(spark, ledger_dir)
-    except Exception:
+    if not tables.exists(spark, ledger_dir):
         return spark.createDataFrame([], LEDGER_SCHEMA)
+    return tables.read_table(spark, ledger_dir)
 
 
 def completed_buckets(spark: SparkSession, ledger_dir: str, job_id: str) -> List[int]:
@@ -74,6 +76,17 @@ def completed_buckets(spark: SparkSession, ledger_dir: str, job_id: str) -> List
         .collect()
     )
     return sorted(r["bucket"] for r in rows)
+
+
+def _bucket_counts(b: int) -> list:
+    """Observed counts of bucket ``b`` in a wave's output: docs (one
+    ``order == 0`` row each), output spans, text chunks."""
+    in_b = F.col("bucket") == b
+    return [
+        F.count_if(in_b & (F.col("order") == 0)).alias(f"docs_{b}"),
+        F.count_if(in_b).alias(f"spans_{b}"),
+        F.count_if(in_b & (F.col("kind") == "text")).alias(f"text_{b}"),
+    ]
 
 
 @dataclass
@@ -96,9 +109,8 @@ def run_checkpointed(
     buckets_per_wave: int = 16,
     max_waves: Optional[int] = None,
     cfg: ExtractConfig = ExtractConfig(),
-    mode: str = "staged",
+    mode: str = "hybrid",
     transform: Optional[Callable[[DataFrame], DataFrame]] = None,
-    files_per_bucket: int = 1,
 ) -> RunReport:
     """Extract ``spans_df`` to ``out_dir`` (parquet partitioned by bucket),
     resuming past completed buckets recorded in ``ledger_dir``.
@@ -113,7 +125,8 @@ def run_checkpointed(
     (bucket filter ALREADY applied — crucial when the input is a raw
     source like (doc_id, html) whose per-doc derivation is expensive: the
     wave pays parse cost only for its own buckets) and must return rows
-    carrying ``doc_id`` and ``kind``. Used by :func:`run_checkpointed_html`.
+    carrying ``doc_id``, ``order`` and ``kind`` (the ledger counts a doc
+    by its ``order == 0`` row). Used by :func:`run_checkpointed_html`.
     The input frame only needs a ``doc_id`` column."""
     from .extract import extract_spans
 
@@ -144,52 +157,38 @@ def run_checkpointed(
         # align output partitions with the sink's bucket directories BEFORE
         # the write: without this every upstream task writes a file into
         # every bucket it touches (tasks x buckets small files), and the
-        # driver-side commit + the metrics re-read pay a per-file cost that
-        # is CONSTANT in cluster size — measured as the Amdahl floor that
-        # capped the spark-submit N->4N run at ~0.70.  One span-row
-        # exchange (which scales with cores) buys a (wave x
-        # files_per_bucket)-file layout; files_per_bucket salts doc_id so
-        # a whale bucket can still spread over several writer tasks.
-        fpb = max(1, int(files_per_bucket))
-        out = out.repartition(
-            len(wave) * fpb,
-            F.col("bucket"),
-            F.pmod(F.xxhash64(F.col("doc_id").cast("string")), F.lit(fpb)),
-        )
+        # driver-side commit pays a per-file cost that is CONSTANT in
+        # cluster size — measured as the Amdahl floor that capped the
+        # spark-submit N->4N run at ~0.70.  One span-row exchange (which
+        # scales with cores) buys a one-file-per-bucket layout.
+        out = out.repartition(len(wave), "bucket")
+        # the ledger counts ride on the write: observed AFTER the exchange,
+        # so they are merged once per result task (a retried map stage
+        # could count twice; a retried result task cannot)
+        obs = Observation()
+        out = out.observe(obs, *[c for b in wave for c in _bucket_counts(b)])
         # 1) idempotent data write. Dynamic overwrite only replaces buckets
         # PRESENT in the output — a bucket that legitimately yields zero rows
         # would leave a stale half-written partition from a crashed prior
         # attempt in place, so the wave's buckets are cleared first.
         tables.clear_partitions(spark, out_dir, "bucket", wave)
         tables.overwrite_partitions(out, out_dir, ["bucket"])
-        # 2) per-bucket lineage/metrics, appended AFTER the data is durable
-        wall = time.monotonic() - t0
-        agg = (
-            tables.read_table(spark, out_dir)
-            .where(F.col("bucket").isin(wave))
-            .groupBy("bucket")
-            .agg(
-                F.count_distinct("doc_id").alias("n_docs"),
-                F.count("*").alias("n_out_spans"),
-                F.sum((F.col("kind") == "text").cast("long")).alias("n_text_chunks"),
-                F.sum((F.col("kind") != "text").cast("long")).alias("n_media"),
+        # 2) per-bucket lineage/metrics, appended AFTER the data is durable;
+        # every wave bucket gets a 'done' row, an empty one with zeros
+        # (else it would re-run forever)
+        wall = round(time.monotonic() - t0, 3)
+        m = obs.get
+        now = datetime.now(timezone.utc)
+        rows = [
+            (
+                job_id, run_id, b, "done",
+                m[f"docs_{b}"], m[f"spans_{b}"], m[f"text_{b}"],
+                m[f"spans_{b}"] - m[f"text_{b}"],
+                wall, now,
             )
-        )
-        # empty buckets still get a 'done' row (else they re-run forever)
-        wave_df = spark.createDataFrame(
-            [(b,) for b in wave], T.StructType([T.StructField("bucket", T.IntegerType(), False)])
-        )
-        metrics = (
-            wave_df.join(agg, "bucket", "left")
-            .fillna(0, subset=["n_docs", "n_out_spans", "n_text_chunks", "n_media"])
-            .withColumn("job_id", F.lit(job_id))
-            .withColumn("run_id", F.lit(run_id))
-            .withColumn("status", F.lit("done"))
-            .withColumn("wall_sec", F.lit(round(wall, 3)))
-            .withColumn("completed_at", F.current_timestamp())
-            .select([f.name for f in LEDGER_SCHEMA.fields])
-        )
-        tables.append(metrics, ledger_dir)
+            for b in wave
+        ]
+        tables.append(spark.createDataFrame(rows, LEDGER_SCHEMA), ledger_dir)
         report.processed_buckets.extend(wave)
         report.waves_run += 1
 

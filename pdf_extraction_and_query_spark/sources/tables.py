@@ -10,6 +10,7 @@ Iceberg catalog (e.g. ``spark.sql.catalog.lake = org.apache.iceberg...``)
 switches the storage layer without touching operator code.
 
 API surface used by the engine:
+  * ``exists(spark, ident)``              — does the table exist yet
   * ``read_table(spark, ident)``          — scan
   * ``append(df, ident)``                 — append rows
   * ``overwrite_partitions(df, ident, cols)`` — idempotent dynamic overwrite
@@ -37,6 +38,16 @@ def read_table(spark: SparkSession, ident: str) -> DataFrame:
     if _is_iceberg():
         return spark.read.table(f"{CATALOG}.{ident}")
     return spark.read.parquet(ident)
+
+
+def exists(spark: SparkSession, ident: str) -> bool:
+    """Whether ``ident`` exists, asked without a failing read (once a
+    session holds an ``Observation``, every failed query logs a listener
+    error)."""
+    if _is_iceberg():
+        return spark.catalog.tableExists(f"{CATALOG}.{ident}")
+    fs, Path = _fs(spark, ident)
+    return bool(fs.exists(Path(ident)))
 
 
 def read_optional(spark: SparkSession, ident: str) -> DataFrame | None:

@@ -7,7 +7,7 @@
         --output <output table dir> \
         --ledger <checkpoint ledger dir> \
         --job-id nightly-extract \
-        [--mode hybrid] [--n-buckets 64] [--buckets-per-wave 16]
+        [--n-buckets 64] [--buckets-per-wave 16]
 
 Build the zip with::
 
@@ -15,9 +15,9 @@ Build the zip with::
                import build_package_zip; print(build_package_zip())"
 
 The job is checkpoint-resumable: rerunning with the same --job-id and
---ledger skips completed buckets (plans/checkpoint.py). On a cluster, pass
---master / executor confs to spark-submit as usual; this script only sets
-job-level SQL confs.
+--ledger skips completed buckets (plans/checkpoint.py, hybrid extraction).
+On a cluster, pass --master / executor confs to spark-submit as usual; this
+script only sets job-level SQL confs.
 """
 
 from __future__ import annotations
@@ -32,7 +32,6 @@ def main() -> None:
     ap.add_argument("--output", required=True)
     ap.add_argument("--ledger", required=True)
     ap.add_argument("--job-id", required=True)
-    ap.add_argument("--mode", default="hybrid")
     ap.add_argument("--n-buckets", type=int, default=64)
     ap.add_argument("--buckets-per-wave", type=int, default=16)
     ap.add_argument("--max-chunk-size", type=int, default=1000)
@@ -70,7 +69,6 @@ def main() -> None:
         n_buckets=args.n_buckets,
         buckets_per_wave=args.buckets_per_wave,
         cfg=cfg,
-        mode=args.mode,
     )
     print(
         json.dumps(

@@ -45,6 +45,19 @@ def test_disjoint_components_keep_separate_reps(spark):
     }
 
 
+def test_chain_rounds_converge_without_a_label_join(spark):
+    """Each round's convergence test is the label sum, observed on the
+    round's own checkpoint: no old-vs-new label join and no extra count
+    job per round (the 6-node chain took 74 jobs with the join)."""
+    sc = spark.sparkContext
+    sc.setJobGroup("cc-chain", "min-label on the 6-node chain")
+    try:
+        connected_components(_pairs(spark, [(i, i + 1) for i in range(5)])).collect()
+    finally:
+        sc.setJobGroup("cc-chain-done", "")
+    assert len(sc.statusTracker().getJobIdsForGroup("cc-chain")) <= 46
+
+
 def test_max_iters_guard_trips_on_long_chains(spark):
     with pytest.raises(RuntimeError, match="fixpoint"):
         connected_components(

@@ -1,6 +1,8 @@
 """Mirror of the driver's correctness gate: run every SQL-checkable query
 from the registry on Spark AND its DuckDB oracle twin over the same parquet
 tables, and compare row count + schema (column names) + exact values.
+The registry's driver-schema checks (scalar-only, unique column names;
+tests/test_registry_contract.py) run here too, on the same built frame.
 
 Column comparison mirrors the driver: columns sorted by name, rows sorted by
 all columns, exact value equality (all ranking keys are integer fixed-point
@@ -15,6 +17,7 @@ import pandas as pd
 import pytest
 
 from pdf_extraction_and_query_spark.plans.registry import ORACLE_SQL, QUERIES
+from tests.test_registry_contract import assert_unique_columns, non_scalar_columns
 
 import os
 SF_DIR = os.environ.get("PARITY_SF_DIR", "/root/testdata/sf0.001")
@@ -42,7 +45,10 @@ def _canon(df: pd.DataFrame) -> pd.DataFrame:
 
 @pytest.mark.parametrize("name", sorted(ORACLE_SQL))
 def test_query_matches_oracle(name, spark, duck):
-    spark_pdf = QUERIES[name](spark, SF_DIR).toPandas()
+    df = QUERIES[name](spark, SF_DIR)
+    assert not non_scalar_columns(df.schema), (name, df.schema)
+    assert_unique_columns(name, df.schema)
+    spark_pdf = df.toPandas()
     duck_pdf = duck.sql(ORACLE_SQL[name]).fetchdf()
 
     assert sorted(spark_pdf.columns) == sorted(duck_pdf.columns), name

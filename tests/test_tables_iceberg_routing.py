@@ -68,3 +68,11 @@ def test_read_versioned_reads_version_property():
     df, version = tables.read_versioned(spark, "db.idx")
     spark.sql.assert_called_once_with("SHOW TBLPROPERTIES lake.db.idx")
     assert version == 7 and df is spark.read.table.return_value
+
+
+def test_exists_asks_the_catalog():
+    spark = mock.MagicMock()
+    spark.catalog.tableExists.return_value = False
+    assert tables.exists(spark, "db.ledger") is False
+    spark.catalog.tableExists.assert_called_once_with("lake.db.ledger")
+    spark.read.table.assert_not_called()
