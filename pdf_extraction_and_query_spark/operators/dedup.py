@@ -19,11 +19,12 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Observation, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import contract as C
 from .textstats import poly_hash
+from .util import iterate
 
 
 def _norm(t: Column) -> Column:
@@ -476,11 +477,10 @@ def dedup_clusters(
     drop when duplicates chain A~B~C without A~C).
 
     Algorithm (``algorithm='minlabel'``, default): min-label propagation to
-    fixpoint. Each round is one edge-join + min-aggregate (a (dst)-keyed
-    shuffle and a (src)-keyed shuffle); lineage is truncated per round with
-    localCheckpoint so the plan stays O(1) deep. Rounds needed = graph
-    diameter — LSH duplicate clusters are near-cliques, so 2-3 in practice;
-    ``max_iters`` bounds the pathological chain.
+    fixpoint under :func:`.util.iterate`. Each round is one edge-join +
+    min-aggregate (a (dst)-keyed and a (src)-keyed shuffle). Rounds needed
+    = graph diameter — LSH duplicate clusters are near-cliques, so 2-3 in
+    practice; ``max_iters`` bounds the pathological chain.
 
     ``algorithm='star'`` runs the alternating large-star/small-star rounds
     (:func:`connected_components_star`, Kiveris et al. SoCC 2014) — the
@@ -519,21 +519,7 @@ def connected_components(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
         p.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
     )
 
-    def checkpoint_with_sum(df: DataFrame) -> tuple:
-        # labels only decrease over a fixed node set, so their sum is
-        # unchanged exactly when no label changed (decimal: no ANSI
-        # overflow); observed on the checkpoint's own pass, no extra job
-        obs = Observation()
-        total = F.sum(F.col("label").cast("decimal(38,0)")).alias("total")
-        df = df.observe(obs, total).localCheckpoint()
-        return df, obs.get["total"]
-
-    labels, total = checkpoint_with_sum(
-        edges.select(F.col("src").alias("node")).distinct().select(
-            "node", F.col("node").alias("label")
-        )
-    )
-    for _ in range(max_iters):
+    def step(labels: DataFrame) -> DataFrame:
         nbr_min = (
             edges.join(
                 labels.select(
@@ -544,40 +530,28 @@ def connected_components(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
             .groupBy("src")
             .agg(F.min("dst_label").alias("nbr_label"))
         )
-        prev = total
-        labels, total = checkpoint_with_sum(
-            labels.join(nbr_min, labels["node"] == nbr_min["src"], "left").select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
-                ).alias("label"),
-            )
+        return labels.join(nbr_min, labels["node"] == nbr_min["src"], "left").select(
+            "node",
+            F.least(
+                F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
+            ).alias("label"),
         )
-        if total == prev:
-            break
-    else:
-        raise RuntimeError(
-            f"dedup_clusters: no fixpoint within {max_iters} rounds "
-            "(component diameter exceeds the bound — raise max_iters or "
-            "switch to large-star/small-star)"
-        )
+
+    # labels only decrease over a fixed node set, so their sum is unchanged
+    # exactly when no label changed (decimal: no ANSI overflow)
+    labels = iterate(
+        edges.select(F.col("src").alias("node")).distinct().select(
+            "node", F.col("node").alias("label")
+        ),
+        step,
+        max_iters,
+        signature=F.sum(F.col("label").cast("decimal(38,0)")),
+    )
     return labels.select(
         F.col("node").cast("long").alias("doc_id"),
         F.col("label").cast("long").alias("cluster_rep"),
         (F.col("node") == F.col("label")).alias("is_keeper"),
     )
-
-
-def _edge_signature(e: DataFrame) -> tuple:
-    """(count, xxhash64-XOR) of an edge set — the O(1)-row convergence
-    probe (an exceptAll comparison would shuffle both edge sets per round).
-    XOR, not sum: order-insensitive like sum but cannot overflow under
-    ANSI mode, and the working set is distinct so nothing cancels."""
-    r = e.agg(
-        F.count("*").alias("n"),
-        F.coalesce(F.expr("bit_xor(xxhash64(u, v))"), F.lit(0)).alias("h"),
-    ).collect()[0]
-    return (r["n"], r["h"])
 
 
 def connected_components_star(pairs: DataFrame, max_iters: int = 60) -> DataFrame:
@@ -598,9 +572,9 @@ def connected_components_star(pairs: DataFrame, max_iters: int = 60) -> DataFram
     re-points every smaller neighbor (and ``u`` itself) at the round's
     minimum — two groupBy/join pairs over the current EDGE SET, which only
     shrinks toward the final star forest (node -> component minimum).
-    Lineage is truncated per round with localCheckpoint; convergence is an
-    edge-set signature match (the fixpoint star is invariant under both
-    phases)."""
+    Rounds run under :func:`.util.iterate`; convergence is a match of the
+    edge set's (count, xxhash64-XOR) signature, observed on each round's
+    own checkpoint (the fixpoint star is invariant under both phases)."""
     # pair generation runs ONCE: nodes and edges both read one checkpoint
     raw = pairs.select(
         F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
@@ -613,15 +587,8 @@ def connected_components_star(pairs: DataFrame, max_iters: int = 60) -> DataFram
         .distinct()
         .localCheckpoint()
     )
-    # working set: oriented (big, small) distinct edges, self-loops dropped
-    e = (
-        raw.where(F.col("u") != F.col("v"))
-        .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
-        .distinct()
-        .localCheckpoint()
-    )
-    sig = _edge_signature(e)
-    for _ in range(max_iters):
+
+    def step(e: DataFrame) -> DataFrame:
         # ---- large-star: over the undirected view, for each u connect
         # every neighbor v > u to m = min(N(u) ∪ {u})
         und = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
@@ -634,6 +601,7 @@ def connected_components_star(pairs: DataFrame, max_iters: int = 60) -> DataFram
                 F.least(F.col("u"), F.col("mn")).alias("v"),
             )
             .distinct()
+            # two consumers below (the min and the re-point join)
             .localCheckpoint()
         )
         # ---- small-star: edges are (u > v)-oriented; for each u point
@@ -645,15 +613,20 @@ def connected_components_star(pairs: DataFrame, max_iters: int = 60) -> DataFram
             .select(F.col("v").alias("u"), F.col("mn").alias("v"))
         )
         sm_self = mins2.select("u", F.col("mn").alias("v"))
-        e = sm_nbrs.unionByName(sm_self).distinct().localCheckpoint()
-        new_sig = _edge_signature(e)
-        if new_sig == sig:
-            break
-        sig = new_sig
-    else:
-        raise RuntimeError(
-            f"connected_components_star: no fixpoint within {max_iters} rounds"
-        )
+        return sm_nbrs.unionByName(sm_self).distinct()
+
+    # working set: oriented (big, small) distinct edges, self-loops dropped;
+    # XOR cannot overflow under ANSI, and a distinct set cancels nothing
+    e = iterate(
+        raw.where(F.col("u") != F.col("v"))
+        .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
+        .distinct(),
+        step,
+        max_iters,
+        signature=F.struct(
+            F.count("*"), F.coalesce(F.expr("bit_xor(xxhash64(u, v))"), F.lit(0))
+        ),
+    )
     # fixpoint edge set is the star forest (node, component-min root);
     # roots appear only on the v side — they label themselves
     labels = nodes.join(

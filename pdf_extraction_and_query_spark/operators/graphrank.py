@@ -17,15 +17,15 @@ fixed point — pr starts at ``PR_SCALE``, per-edge contribution is
 operands, so an UNROLLED-SQL oracle value-hashes the result exactly —
 no float sums, no order dependence (int64 addition is associative).
 
-Scale shape (10^12 pages): the edge list is the big table.  It is
-materialized ONCE (``localCheckpoint``, the :func:`dedup.connected_components`
-precedent — without it every unrolled iteration would re-run the HTML
-parse that feeds it); each iteration is one (src)-keyed broadcast-or-shuffle
-join pr⋈edges, one (dst)-keyed hash aggregation (map-side combined), and
-one left join back to the node list; pr lineage is truncated per iteration
-so the plan stays O(1) deep.  Iteration count is FIXED (``PR_ITERS``), the
-crawl-scheduling convention (a frontier wants a stable, cheap, reproducible
-score, not convergence to machine epsilon).
+Scale shape (10^12 pages): the edge list is the big table.  It and the
+node list are materialized ONCE (:func:`_graph`); each iteration is one
+(src)-keyed broadcast-or-shuffle join pr⋈edges, one (dst)-keyed hash
+aggregation (map-side combined), and one left join back to the node list.
+The rounds run under :func:`.util.iterate`, which truncates lineage per
+round so the plan stays O(1) deep.  Iteration count is FIXED
+(``PR_ITERS``, ``HITS_ITERS``), the crawl-scheduling convention (a frontier
+wants a stable, cheap, reproducible score, not convergence to machine
+epsilon).
 """
 
 from __future__ import annotations
@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import contract as C
+from .util import iterate
 
 
 def link_edges(pairs: DataFrame) -> DataFrame:
@@ -49,28 +50,31 @@ def link_edges(pairs: DataFrame) -> DataFrame:
     )
 
 
-def pagerank(edges: DataFrame, iters: int = C.PR_ITERS) -> DataFrame:
-    """Fixed-point integer PageRank over a weighted edge list
-    ``(src, dst, n)`` -> ``(node, pr)`` for every node that appears as a
-    source or target.  See the module docstring for the arithmetic and
-    scale contracts."""
-    e = edges.select(
-        "src", "dst", F.col("n").cast("long").alias("n")
-    )
-    # materialize edges once: every unrolled iteration references them, and
-    # multiple DataFrame references to one subtree are planned independently
-    # (PLANS.md #11) — without this the upstream parse would run per round
-    e = e.localCheckpoint()
-    outw = e.groupBy("src").agg(F.sum("n").cast("long").alias("outw"))
-    ew = e.join(outw, "src").localCheckpoint()
+def _graph(edges: DataFrame) -> tuple:
+    """(edges, nodes) of a weighted edge list, each materialized ONCE: every
+    round references them, and multiple DataFrame references to one subtree
+    are planned independently (PLANS.md #11) — without this the upstream
+    parse would run per round."""
+    e = edges.select("src", "dst", F.col("n").cast("long").alias("n")).localCheckpoint()
     nodes = (
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
         .localCheckpoint()
     )
-    pr = nodes.select("node", F.lit(C.PR_SCALE).cast("long").alias("pr"))
-    for it in range(int(iters)):
+    return e, nodes
+
+
+def pagerank(edges: DataFrame, iters: int = C.PR_ITERS) -> DataFrame:
+    """Fixed-point integer PageRank over a weighted edge list
+    ``(src, dst, n)`` -> ``(node, pr)`` for every node that appears as a
+    source or target.  See the module docstring for the arithmetic and
+    scale contracts."""
+    e, nodes = _graph(edges)
+    outw = e.groupBy("src").agg(F.sum("n").cast("long").alias("outw"))
+    ew = e.join(outw, "src").localCheckpoint()
+
+    def step(pr: DataFrame) -> DataFrame:
         contrib = (
             ew.join(pr, ew["src"] == pr["node"])
             .select(
@@ -80,25 +84,22 @@ def pagerank(edges: DataFrame, iters: int = C.PR_ITERS) -> DataFrame:
             .groupBy("dst")
             .agg(F.sum("c").cast("long").alias("s"))
         )
-        pr = (
-            nodes.join(contrib, nodes["node"] == contrib["dst"], "left")
-            .select(
-                "node",
-                (
-                    F.lit(C.PR_BASE).cast("long")
-                    + F.expr(
-                        f"({C.PR_DAMP_NUM} * coalesce(s, cast(0 as bigint))) "
-                        f"div {C.PR_DAMP_DEN}"
-                    )
-                ).cast("long").alias("pr"),
-            )
+        return nodes.join(contrib, nodes["node"] == contrib["dst"], "left").select(
+            "node",
+            (
+                F.lit(C.PR_BASE).cast("long")
+                + F.expr(
+                    f"({C.PR_DAMP_NUM} * coalesce(s, cast(0 as bigint))) "
+                    f"div {C.PR_DAMP_DEN}"
+                )
+            ).cast("long").alias("pr"),
         )
-        # truncate lineage so every round's plan stays O(1) deep; the
-        # FINAL round returns lazy — its one consumer materializes it and
-        # an eager checkpoint there would just double that work
-        if it + 1 < int(iters):
-            pr = pr.localCheckpoint()
-    return pr
+
+    return iterate(
+        nodes.select("node", F.lit(C.PR_SCALE).cast("long").alias("pr")),
+        step,
+        int(iters),
+    )
 
 
 def link_hits(edges: DataFrame, iters: int = C.HITS_ITERS) -> DataFrame:
@@ -118,29 +119,19 @@ def link_hits(edges: DataFrame, iters: int = C.HITS_ITERS) -> DataFrame:
     ``div`` == DuckDB ``//`` and the unrolled-SQL oracle value-hashes the
     result exactly.
 
-    Scale shape (10^12 pages): edges localCheckpointed ONCE (the
-    :func:`pagerank` precedent); each half-step is one node-keyed
-    broadcast-or-shuffle join score⋈edges, one map-side-combined hash
-    aggregation on the other endpoint, a 1-row max broadcast back, and a
-    left join to the node list; score lineage truncates per half-step so
-    the plan stays O(1) deep."""
-    e = edges.select(
-        "src", "dst", F.col("n").cast("long").alias("n")
-    ).localCheckpoint()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
-    norm = (
-        f"({C.HITS_SCALE} * coalesce(s, cast(0 as bigint))) div greatest(mx, 1)"
-    )
-    hub = nodes.select("node", F.lit(C.HITS_SCALE).cast("long").alias("hub"))
-    auth = None
-    for it in range(int(iters)):
+    Scale shape (10^12 pages): edges and nodes materialized ONCE
+    (:func:`_graph`); each half-step is one node-keyed broadcast-or-shuffle
+    join score⋈edges, one map-side-combined hash aggregation on the other
+    endpoint, a 1-row max broadcast back, and a left join to a node list.
+    The state is ``(node, hub, auth)``; the auth half-step's checkpoint
+    holds every node, so it is the hub half-step's node list.  The rounds
+    run under :func:`.util.iterate` (lineage truncated per round)."""
+    e, nodes = _graph(edges)
+    norm = f"({C.HITS_SCALE} * coalesce(s, cast(0 as bigint))) div greatest(mx, 1)"
+
+    def step(state: DataFrame) -> DataFrame:
         araw = (
-            e.join(hub, e["src"] == hub["node"])
+            e.join(state, e["src"] == state["node"])
             .select("dst", F.expr("hub * n").cast("long").alias("c"))
             .groupBy("dst")
             .agg(F.sum("c").cast("long").alias("s"))
@@ -150,7 +141,7 @@ def link_hits(edges: DataFrame, iters: int = C.HITS_ITERS) -> DataFrame:
             nodes.join(araw, nodes["node"] == araw["dst"], "left")
             .crossJoin(F.broadcast(amax))
             .select("node", F.expr(norm).cast("long").alias("auth"))
-            # two consumers (hub half-step + the final join) — PLANS.md #11
+            # two consumers (the hub half-step's join and node list), PLANS.md #11
             .localCheckpoint()
         )
         hraw = (
@@ -160,16 +151,18 @@ def link_hits(edges: DataFrame, iters: int = C.HITS_ITERS) -> DataFrame:
             .agg(F.sum("c").cast("long").alias("s"))
         )
         hmax = hraw.agg(F.max("s").cast("long").alias("mx"))
-        hub = (
-            nodes.join(hraw, nodes["node"] == hraw["src"], "left")
+        return (
+            auth.join(hraw, auth["node"] == hraw["src"], "left")
             .crossJoin(F.broadcast(hmax))
-            .select("node", F.expr(norm).cast("long").alias("hub"))
+            .select("node", F.expr(norm).cast("long").alias("hub"), "auth")
         )
-        # truncate lineage each round; the final round's hub has ONE
-        # consumer (the join below) so it may stay lazy
-        if it + 1 < int(iters):
-            hub = hub.localCheckpoint()
-    return hub.join(auth, "node").select("node", "hub", "auth")
+
+    scale = F.lit(C.HITS_SCALE).cast("long")
+    return iterate(
+        nodes.select("node", scale.alias("hub"), scale.alias("auth")),
+        step,
+        int(iters),
+    )
 
 
 def crawl_frontier(

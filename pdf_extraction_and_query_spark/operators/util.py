@@ -2,7 +2,9 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame, Observation
 
 
 def _parse_bytes(s: str | int) -> int:
@@ -79,3 +81,34 @@ def fan_out(docs: DataFrame, target: int | None = None) -> DataFrame:
         return docs
     # small scan, or an in-memory source with no file metadata: fan out
     return docs.repartition(target)
+
+
+def iterate(
+    state: DataFrame, step: Callable, rounds: int, signature: Column | None = None
+) -> DataFrame:
+    """Run ``state = step(state)`` for at most ``rounds`` rounds; the one
+    place that truncates lineage, tests convergence and bounds rounds.
+    Without ``signature``: exactly ``rounds`` rounds, each localCheckpointed
+    but the last, which stays lazy (its one consumer materializes it).
+    With ``signature``, an aggregate Column equal on two states exactly when
+    they are equal, the initial state and each round are materialized by
+    ``observe(signature).localCheckpoint()`` (convergence costs no extra
+    job): returns the first round whose signature equals the previous one,
+    raises RuntimeError after ``rounds`` rounds without one."""
+    if signature is None:
+        for r in range(rounds):
+            state = step(state.localCheckpoint() if r else state)
+        return state
+
+    def materialize(df: DataFrame) -> tuple:
+        obs = Observation()
+        df = df.observe(obs, signature.alias("sig")).localCheckpoint()
+        return df, obs.get["sig"]
+
+    state, sig = materialize(state)
+    for _ in range(rounds):
+        prev = sig
+        state, sig = materialize(step(state))
+        if sig == prev:
+            return state
+    raise RuntimeError(f"iterate: no fixpoint within {rounds} rounds")

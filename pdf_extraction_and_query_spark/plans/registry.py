@@ -1162,9 +1162,13 @@ def _bpe_ctes() -> str:
     generate_series list — empty for 1-symbol words), top pair by
     (freq DESC, pair ASC — binary UTF-8 order in both engines), merge
     applied as plain replace (every symbol is one codepoint, see
-    operators/bpe.py)."""
+    operators/bpe.py).  The chain's CTEs are MATERIALIZED (so are the
+    HITS, MMR, kNN, k-center and dedup_clusters chains): DuckDB re-plans an
+    unmaterialized CTE at each reference, and each round references the
+    previous one more than once, so planning would grow exponentially in
+    the rounds."""
     parts = [
-        f"""wc0 AS (
+        f"""wc0 AS MATERIALIZED (
   SELECT token AS sym, cast(count(*) as bigint) AS cnt FROM (
     SELECT unnest(regexp_split_to_array(trim(lower(text)), '{C.WS_SPLIT_RE}')) AS token
     FROM documents)
@@ -1174,14 +1178,15 @@ def _bpe_ctes() -> str:
     for t in range(C.BPE_ROUNDS):
         mk = chr(C.BPE_MARKER_BASE + t)
         parts.append(
-            f"""p{t} AS (
+            f"""p{t} AS MATERIALIZED (
   SELECT unnest(list_transform(generate_series(1, length(sym) - 1),
                                i -> substring(sym, i, 2))) AS pair, cnt
   FROM wc{t}),
-m{t} AS (SELECT pair, cast(sum(cnt) as bigint) AS freq FROM p{t}
-         GROUP BY pair ORDER BY freq DESC, pair ASC LIMIT 1),
-wc{t + 1} AS (SELECT replace(sym, (SELECT pair FROM m{t}), '{mk}') AS sym, cnt
-              FROM wc{t})"""
+m{t} AS MATERIALIZED (
+  SELECT pair, cast(sum(cnt) as bigint) AS freq FROM p{t}
+  GROUP BY pair ORDER BY freq DESC, pair ASC LIMIT 1),
+wc{t + 1} AS MATERIALIZED (
+  SELECT replace(sym, (SELECT pair FROM m{t}), '{mk}') AS sym, cnt FROM wc{t})"""
         )
     return ",\n".join(parts)
 
@@ -2140,13 +2145,13 @@ FROM cf
 QUALIFY doc_id = min(doc_id) OVER (PARTITION BY h)""",
     "dedup_clusters": f"""
 WITH RECURSIVE {_SH_CTE},{_minhash_sig_sql()},
-bands AS ({_band_union_sql()}),
-pairs AS (
+bands AS MATERIALIZED ({_band_union_sql()}),
+pairs AS MATERIALIZED (
   SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
   FROM bands a JOIN bands b USING (band, val)
   WHERE a.doc_id < b.doc_id),
-edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
-          UNION SELECT doc_b AS src, doc_a AS dst FROM pairs),
+edges AS MATERIALIZED (SELECT doc_a AS src, doc_b AS dst FROM pairs
+                       UNION SELECT doc_b AS src, doc_a AS dst FROM pairs),
 reach AS (
   SELECT src, src AS dst FROM (SELECT DISTINCT src FROM edges) t
   UNION
@@ -4325,20 +4330,20 @@ SELECT node, pr FROM pr{C.PR_ITERS}"""
 # to HITS_SCALE.  All non-negative int64: `//` == Spark `div`; hugeint
 # sums cast at every aggregation (sharp-edges rule).
 _HITS_ITER = lambda k: f"""
-ar{k} AS (
+ar{k} AS MATERIALIZED (
   SELECT e.dst, cast(sum(h{k - 1}.hub * e.n) as bigint) AS s
   FROM e JOIN h{k - 1} ON e.src = h{k - 1}.node GROUP BY e.dst),
-am{k} AS (SELECT cast(greatest(max(s), 1) as bigint) AS mx FROM ar{k}),
-a{k} AS (
+am{k} AS MATERIALIZED (SELECT cast(greatest(max(s), 1) as bigint) AS mx FROM ar{k}),
+a{k} AS MATERIALIZED (
   SELECT nodes.node,
          cast(({C.HITS_SCALE} * coalesce(ar{k}.s, 0)) // am{k}.mx as bigint)
            AS auth
   FROM nodes LEFT JOIN ar{k} ON nodes.node = ar{k}.dst, am{k}),
-hr{k} AS (
+hr{k} AS MATERIALIZED (
   SELECT e.src, cast(sum(a{k}.auth * e.n) as bigint) AS s
   FROM e JOIN a{k} ON e.dst = a{k}.node GROUP BY e.src),
-hm{k} AS (SELECT cast(greatest(max(s), 1) as bigint) AS mx FROM hr{k}),
-h{k} AS (
+hm{k} AS MATERIALIZED (SELECT cast(greatest(max(s), 1) as bigint) AS mx FROM hr{k}),
+h{k} AS MATERIALIZED (
   SELECT nodes.node,
          cast(({C.HITS_SCALE} * coalesce(hr{k}.s, 0)) // hm{k}.mx as bigint)
            AS hub
@@ -4347,8 +4352,8 @@ h{k} AS (
 ORACLE_SQL["link_hits"] = f"""
 WITH {_HTML_META},
 {_PR_EDGES},
-nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
-h0 AS (SELECT node, cast({C.HITS_SCALE} as bigint) AS hub FROM nodes),
+nodes AS MATERIALIZED (SELECT src AS node FROM e UNION SELECT dst FROM e),
+h0 AS MATERIALIZED (SELECT node, cast({C.HITS_SCALE} as bigint) AS hub FROM nodes),
 {",".join(_HITS_ITER(k) for k in range(1, C.HITS_ITERS + 1))}
 SELECT nodes.node, h{C.HITS_ITERS}.hub, a{C.HITS_ITERS}.auth
 FROM nodes JOIN h{C.HITS_ITERS} USING (node) JOIN a{C.HITS_ITERS} USING (node)"""
@@ -4448,7 +4453,7 @@ scored AS (
          cast(list_sum(list_transform(generate_series(1, {C.EMBED_DIM}),
               i -> ev[i] * cv[i])) as bigint) AS cdot
   FROM c, cents),
-ranked AS (
+ranked AS MATERIALIZED (
   SELECT vec_id, ev, cent_id, rn FROM (
     SELECT *, row_number() OVER (PARTITION BY vec_id
                                  ORDER BY cdot DESC, cent_id) AS rn
@@ -4462,7 +4467,7 @@ pairs AS (
               i -> pqv[i] * nv[i])) as bigint) AS dot_e12
   FROM probes JOIN assigned USING (cent_id)
   WHERE q_id <> nb_id),
-g AS (
+g AS MATERIALIZED (
   SELECT q_id, nb_id, rank, dot_e12
   FROM (SELECT *, row_number() OVER (PARTITION BY q_id
                                      ORDER BY dot_e12 DESC, nb_id) AS rank
@@ -4573,9 +4578,9 @@ def _mmr_sql() -> str:
     parts = [
         f"""WITH c AS (SELECT vec_id, {_FP_VEC} AS ev FROM embeddings),
 q AS (SELECT {_FP_VEC} AS qv FROM embeddings WHERE vec_id = 0),
-pool AS (SELECT vec_id, ev, {_DOT} AS rel
+pool AS MATERIALIZED (SELECT vec_id, ev, {_DOT} AS rel
          FROM c, q ORDER BY rel DESC, vec_id LIMIT {C.MMR_POOL}),
-p1 AS (SELECT cast(1 as bigint) AS rank, vec_id, ev, rel,
+p1 AS MATERIALIZED (SELECT cast(1 as bigint) AS rank, vec_id, ev, rel,
               cast(0 as bigint) AS ms,
               cast({C.MMR_LAMBDA_NUM} as bigint) * rel AS score
        FROM pool ORDER BY score DESC, vec_id LIMIT 1)"""
@@ -4585,7 +4590,7 @@ p1 AS (SELECT cast(1 as bigint) AS rank, vec_id, ev, rel,
             f"SELECT vec_id, ev FROM p{i}" for i in range(1, k)
         )
         parts.append(
-            f"""p{k} AS (
+            f"""p{k} AS MATERIALIZED (
   SELECT cast({k} as bigint) AS rank, po.vec_id, po.ev, po.rel, m.ms,
          cast({C.MMR_LAMBDA_NUM} as bigint) * po.rel
            - cast({C.MMR_LAMBDA_COMP} as bigint) * m.ms AS score
@@ -4764,12 +4769,12 @@ scored AS (
          cast(list_sum(list_transform(generate_series(1, {C.EMBED_DIM}),
               i -> ev[i] * qv[i])) as bigint) AS rel
   FROM c, qs),
-pool AS (
+pool AS MATERIALIZED (
   SELECT q_id, vec_id, ev, rel FROM (
     SELECT *, row_number() OVER (PARTITION BY q_id
                                  ORDER BY rel DESC, vec_id) AS rn
     FROM scored) WHERE rn <= {C.MMR_POOL}),
-p1 AS (
+p1 AS MATERIALIZED (
   SELECT q_id, cast(1 as bigint) AS rank, vec_id, ev, rel,
          cast(0 as bigint) AS ms,
          cast({C.MMR_LAMBDA_NUM} as bigint) * rel AS score
@@ -4782,7 +4787,7 @@ p1 AS (
             f"SELECT q_id, vec_id, ev FROM p{i}" for i in range(1, k)
         )
         parts.append(
-            f"""p{k} AS (
+            f"""p{k} AS MATERIALIZED (
   SELECT po.q_id, cast({k} as bigint) AS rank, po.vec_id, po.ev, po.rel,
          m.ms,
          cast({C.MMR_LAMBDA_NUM} as bigint) * po.rel

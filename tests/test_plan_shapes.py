@@ -8,6 +8,7 @@ import ast
 import os
 import pathlib
 
+import pytest
 from pyspark.sql import functions as F
 
 from pdf_extraction_and_query_spark.operators.search import paginate_documents
@@ -365,11 +366,13 @@ def test_dup_passages_single_stream_single_gram_exchange(spark):
     assert plan.count("hashpartitioning(gram") <= 2, plan[:2000]
 
 
-def test_pagerank_plan_depth_constant_in_rounds(spark):
+@pytest.mark.parametrize("op", ["pagerank", "link_hits"])
+def test_pagerank_plan_depth_constant_in_rounds(spark, op):
     """Round-4 verdict Next #7: per-round localCheckpoint keeps the
     iterative plan O(1) deep — the FINAL plan of a 6-round run is the
     same shape (same exchange count, same checkpoint-scan count) as a
-    2-round run, instead of growing linearly."""
+    2-round run, instead of growing linearly. Pinned for both fixed-round
+    rankers (PageRank and HITS)."""
     from pdf_extraction_and_query_spark.operators import graphrank as G
 
     edges = (
@@ -382,7 +385,7 @@ def test_pagerank_plan_depth_constant_in_rounds(spark):
     )
     shapes = []
     for iters in (2, 6):
-        plan = _formatted(G.pagerank(edges, iters=iters))
+        plan = _formatted(getattr(G, op)(edges, iters=iters))
         shapes.append(
             (plan.count("Exchange"), plan.count("Scan ExistingRDD"))
         )
