@@ -2,10 +2,11 @@
 
 North rule (BASELINE.json): the pipeline includes "HTML boilerplate strip
 ... DOM heuristics". The kernel (``core/htmlmain.py``) is a streaming
-stdlib-parser pass — here it runs as one narrow ``mapInPandas`` stage over
-the (doc_id, html) table: Arrow-batched, per-task memory bounded by the
-largest single page, embarrassingly parallel at 10^12 docs. The only
-possible exchange is the conditional ``_balanced`` fan-out below (a
+stdlib-parser pass — here every operator runs it in ONE parse stage,
+:func:`_parse_pass`: one narrow ``mapInArrow`` pass over the (doc_id, html)
+table that parses each page once, per-task memory bounded by the largest
+single page, embarrassingly parallel at 10^12 docs. The only
+possible exchange is the conditional :func:`balance_for_parse` fan-out (a
 one-time round-robin of raw pages on under-split small corpora; a no-op
 whenever the scan itself guarantees enough partitions) — never a keyed
 shuffle.
@@ -17,19 +18,15 @@ Output schemas are scalar-only (driver canonicalizer contract):
 
 from __future__ import annotations
 
-from typing import Iterable, Iterator
+from typing import Callable, Iterable, Sequence
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .. import contract as C
-from ..core.htmlmain import (
-    extract_links,
-    extract_links_text,
-    extract_main_html_report,
-)
-from .util import fan_out
+from ..core.htmlmain import main_content_hash, parse_page
+from .util import arrow_rows, fan_out
 
 # The parse amplifies compute ~30x over input BYTES (~0.3 s/MB of python
 # parsing vs ~0.01 s/MB of scanning), so byte-sized scan splits schedule it
@@ -63,7 +60,27 @@ def balance_for_parse(df: DataFrame) -> DataFrame:
     return out
 
 
-_balanced = balance_for_parse
+def _parse_pass(
+    html_df: DataFrame,
+    schema: str | StructType,
+    rows: Callable[[str, object], Iterable[tuple]],
+    carry: Sequence[str] = (),
+) -> DataFrame:
+    """THE HTML parse stage: every page of a (doc_id, html) frame is parsed
+    once by ``core.htmlmain.parse_page`` and ``rows(doc_id, parsed)`` yields
+    its output tuples in ``schema`` order, in one narrow Arrow pass
+    (:func:`operators.util.arrow_rows`; ``carry`` columns ride along
+    untouched). A batch frame is balanced first; a streaming frame has no
+    scan to size, so it is parsed as it arrives."""
+    if not html_df.isStreaming:
+        html_df = balance_for_parse(html_df)
+    return arrow_rows(
+        html_df,
+        ("doc_id", "html"),
+        schema,
+        lambda d, h: rows(str(d), parse_page(h)),
+        carry,
+    )
 
 
 _SPAN_SCHEMA = (
@@ -82,21 +99,11 @@ EMPTY_CONTENT_HASH = "d41d8cd98f00b204e9800998ecf8427e"
 def html_extract(html_df: DataFrame) -> DataFrame:
     """Main-content span sequence per document, DOM order (0-based
     ``span_order``); media spans carry (alt, src) as (text, media_ref)."""
-
-    def run(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "span_order": [], "kind": [], "text": [], "media_ref": []}
-            for d, h in zip(pdf["doc_id"], pdf["html"]):
-                spans, _, _ = extract_main_html_report(h)
-                for j, (kind, text, ref) in enumerate(spans):
-                    out["doc_id"].append(str(d))
-                    out["span_order"].append(j)
-                    out["kind"].append(kind)
-                    out["text"].append(text)
-                    out["media_ref"].append(ref)
-            yield pd.DataFrame(out)
-
-    return _balanced(html_df).mapInPandas(run, schema=_SPAN_SCHEMA)
+    return _parse_pass(
+        html_df,
+        _SPAN_SCHEMA,
+        lambda d, p: ((d, j, *span) for j, span in enumerate(p.spans)),
+    )
 
 
 _LINKS_SCHEMA = "doc_id string, link_order long, href string, in_main boolean"
@@ -107,19 +114,11 @@ def html_links(html_df: DataFrame) -> DataFrame:
     ``in_main`` (enclosing block survived both keep heuristics) — the
     link-graph / domain-filter input of a crawl pipeline. Same single
     Arrow-pass shape as the extraction."""
-
-    def run(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "link_order": [], "href": [], "in_main": []}
-            for d, h in zip(pdf["doc_id"], pdf["html"]):
-                for j, (href, in_main) in enumerate(extract_links(h)):
-                    out["doc_id"].append(str(d))
-                    out["link_order"].append(j)
-                    out["href"].append(href)
-                    out["in_main"].append(in_main)
-            yield pd.DataFrame(out)
-
-    return _balanced(html_df).mapInPandas(run, schema=_LINKS_SCHEMA)
+    return _parse_pass(
+        html_df,
+        _LINKS_SCHEMA,
+        lambda d, p: ((d, j, h, m) for j, (h, _t, m) in enumerate(p.links)),
+    )
 
 
 _LINKS_TEXT_SCHEMA = (
@@ -131,28 +130,11 @@ _LINKS_TEXT_SCHEMA = (
 def html_links_text(html_df: DataFrame) -> DataFrame:
     """:func:`html_links` plus the anchor TEXT per link — what the linking
     page calls the target. Same narrow Arrow pass."""
-
-    def run(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "doc_id": [],
-                "link_order": [],
-                "href": [],
-                "anchor_text": [],
-                "in_main": [],
-            }
-            for d, h in zip(pdf["doc_id"], pdf["html"]):
-                for j, (href, text, in_main) in enumerate(
-                    extract_links_text(h)
-                ):
-                    out["doc_id"].append(str(d))
-                    out["link_order"].append(j)
-                    out["href"].append(href)
-                    out["anchor_text"].append(text)
-                    out["in_main"].append(in_main)
-            yield pd.DataFrame(out)
-
-    return _balanced(html_df).mapInPandas(run, schema=_LINKS_TEXT_SCHEMA)
+    return _parse_pass(
+        html_df,
+        _LINKS_TEXT_SCHEMA,
+        lambda d, p: ((d, j, *link) for j, link in enumerate(p.links)),
+    )
 
 
 _LINKS_META_SCHEMA = (
@@ -167,31 +149,13 @@ def html_links_with_meta(html_df: DataFrame) -> DataFrame:
     Arrow pass: at 10^12 pages a join of two separate parse passes (links
     ⋈ report on doc_id) would parse every page twice and add a doc-keyed
     exchange; here the canonical rides out of the same parse."""
-
-    def run(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..core.htmlmain import parse_page
-
-        for pdf in batches:
-            out = {
-                "doc_id": [],
-                "link_order": [],
-                "href": [],
-                "anchor_text": [],
-                "in_main": [],
-                "canonical": [],
-            }
-            for d, h in zip(pdf["doc_id"], pdf["html"]):
-                p = parse_page(h)
-                for j, (href, text, in_main) in enumerate(p.links):
-                    out["doc_id"].append(str(d))
-                    out["link_order"].append(j)
-                    out["href"].append(href)
-                    out["anchor_text"].append(text)
-                    out["in_main"].append(in_main)
-                    out["canonical"].append(p.canonical)
-            yield pd.DataFrame(out)
-
-    return _balanced(html_df).mapInPandas(run, schema=_LINKS_META_SCHEMA)
+    return _parse_pass(
+        html_df,
+        _LINKS_META_SCHEMA,
+        lambda d, p: (
+            (d, j, *link, p.canonical) for j, link in enumerate(p.links)
+        ),
+    )
 
 
 def anchor_text_agg(html_df: DataFrame) -> DataFrame:
@@ -277,21 +241,11 @@ def html_main_text(html_df: DataFrame) -> DataFrame:
     family (minhash, simhash, quality, tokens) at extracted MAIN content
     instead of raw pages: chrome stops polluting shingles. One narrow
     Arrow pass."""
-    from ..core.htmlmain import extract_main_html
-
-    def run(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, texts = [], []
-            for d, h in zip(pdf["doc_id"], pdf["html"]):
-                ids.append(str(d))
-                texts.append(
-                    "\n".join(
-                        s[1] for s in extract_main_html(h) if s[0] == "text"
-                    )
-                )
-            yield pd.DataFrame({"doc_id": ids, "text": texts})
-
-    return _balanced(html_df).mapInPandas(run, schema=_MAIN_TEXT_SCHEMA)
+    return _parse_pass(
+        html_df,
+        _MAIN_TEXT_SCHEMA,
+        lambda d, p: [(d, "\n".join(s[1] for s in p.spans if s[0] == "text"))],
+    )
 
 
 def html_canonical_dups(html_df: DataFrame) -> DataFrame:
@@ -638,67 +592,46 @@ def html_extract_span_corpus(html_df: DataFrame) -> DataFrame:
     pipeline, two source formats, per the north rule."""
     from ..sources.corpus import SPANS_SCHEMA
 
-    def run(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, arrs = [], []
-            for d, h in zip(pdf["doc_id"], pdf["html"]):
-                spans, _, _ = extract_main_html_report(h)
-                ids.append(str(d))
-                arrs.append(
-                    [
-                        {
-                            "kind": kind,
-                            "text": text,
-                            "media_ref": ref or None,
-                            "offset": j,
-                            "page": None,
-                            "font_size": None,
-                            "bold": None,
-                        }
-                        for j, (kind, text, ref) in enumerate(spans)
-                    ]
-                )
-            yield pd.DataFrame({"doc_id": ids, "spans": arrs})
+    def rows(d, p):
+        yield d, [
+            {
+                "kind": kind,
+                "text": text,
+                "media_ref": ref or None,
+                "offset": j,
+                "page": None,
+                "font_size": None,
+                "bold": None,
+            }
+            for j, (kind, text, ref) in enumerate(p.spans)
+        ]
 
-    return _balanced(html_df).mapInPandas(run, schema=SPANS_SCHEMA)
+    return _parse_pass(html_df, SPANS_SCHEMA, rows)
 
 
 def html_extract_report(html_df: DataFrame) -> DataFrame:
     """Per-document extraction report: kept text/figure counts, main-text
     char total, the two drop counters (structural strip vs link density),
     and the head metadata a crawl pipeline keys on (canonical URL,
-    robots-noindex). One row per input document, including empty ones."""
-    from ..core.htmlmain import main_content_hash, parse_page
+    robots-noindex). One row per input document, including empty ones.
+    Every input column other than ``doc_id`` and ``html`` (a crawl's
+    ``fetched_at_ts``, a stream's event time) is carried to the page's row
+    unchanged."""
 
-    def run(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "doc_id": [],
-                "n_spans": [],
-                "n_text": [],
-                "n_figures": [],
-                "n_chars_main": [],
-                "n_dropped_structural": [],
-                "n_dropped_linkdense": [],
-                "canonical": [],
-                "noindex": [],
-                "content_hash": [],
-            }
-            for d, h in zip(pdf["doc_id"], pdf["html"]):
-                p = parse_page(h)
-                n_text = sum(1 for s in p.spans if s[0] == "text")
-                out["doc_id"].append(str(d))
-                out["n_spans"].append(len(p.spans))
-                out["n_text"].append(n_text)
-                out["n_figures"].append(len(p.spans) - n_text)
-                out["n_chars_main"].append(
-                    sum(len(s[1]) for s in p.spans if s[0] == "text")
-                )
-                out["n_dropped_structural"].append(p.n_dropped_structural)
-                out["n_dropped_linkdense"].append(p.n_dropped_linkdense)
-                out["canonical"].append(p.canonical)
-                out["noindex"].append(p.noindex)
-                out["content_hash"].append(main_content_hash(p.spans))
-            yield pd.DataFrame(out)
+    def rows(d, p):
+        text = [s[1] for s in p.spans if s[0] == "text"]
+        yield (
+            d,
+            len(p.spans),
+            len(text),
+            len(p.spans) - len(text),
+            sum(map(len, text)),
+            p.n_dropped_structural,
+            p.n_dropped_linkdense,
+            p.canonical,
+            p.noindex,
+            main_content_hash(p.spans),
+        )
 
-    return _balanced(html_df).mapInPandas(run, schema=_REPORT_SCHEMA)
+    carry = [c for c in html_df.columns if c not in ("doc_id", "html")]
+    return _parse_pass(html_df, _REPORT_SCHEMA, rows, carry)

@@ -2,9 +2,10 @@
 
 from __future__ import annotations
 
-from typing import Callable
+from typing import Callable, Iterable, Sequence
 
 from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql.types import StructType
 
 
 def _parse_bytes(s: str | int) -> int:
@@ -81,6 +82,47 @@ def fan_out(docs: DataFrame, target: int | None = None) -> DataFrame:
         return docs
     # small scan, or an in-memory source with no file metadata: fan out
     return docs.repartition(target)
+
+
+def arrow_rows(
+    df: DataFrame,
+    args: Sequence[str],
+    schema: str | StructType,
+    rows: Callable[..., Iterable[tuple]],
+    carry: Sequence[str] = (),
+) -> DataFrame:
+    """One narrow ``mapInArrow`` pass that calls Python once per input row:
+    ``rows(*values of args)`` yields output tuples in ``schema`` order (a
+    DDL string or a StructType). Each ``carry`` column is copied to every
+    tuple its row yields by an Arrow ``take`` on the input column, so its
+    nulls and 64-bit values cross the Python boundary untouched (a nullable
+    bigint through pandas becomes float64 and rounds above 2^53). Output
+    columns: ``schema``'s, then ``carry``'s with their input types."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    st = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
+    types = [f.type for f in to_arrow_schema(st)]
+    names = st.names + list(carry)
+
+    def run(batches):
+        for batch in batches:
+            out, idx = [], []
+            values = zip(*(batch.column(a).to_pylist() for a in args))
+            for i, vals in enumerate(values):
+                for t in rows(*vals):
+                    out.append(t)
+                    idx.append(i)
+            cols = list(zip(*out)) or [()] * len(types)
+            take = pa.array(idx, pa.int32())
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, t) for c, t in zip(cols, types)]
+                + [batch.column(c).take(take) for c in carry],
+                names=names,
+            )
+
+    out_schema = StructType(st.fields + [df.schema[c] for c in carry])
+    return df.select(*dict.fromkeys([*args, *carry])).mapInArrow(run, out_schema)
 
 
 def iterate(

@@ -160,8 +160,12 @@ def run_checkpointed(
         # driver-side commit pays a per-file cost that is CONSTANT in
         # cluster size — measured as the Amdahl floor that capped the
         # spark-submit N->4N run at ~0.70.  One span-row exchange (which
-        # scales with cores) buys a one-file-per-bucket layout.
-        out = out.repartition(len(wave), "bucket")
+        # scales with cores) buys a one-file-per-bucket layout. The
+        # partition id is the bucket's index in the wave, so each bucket
+        # gets its own writer task (hashing buckets into len(wave)
+        # partitions lets two buckets share one).
+        slot = F.array_position(F.array(*map(F.lit, wave)), F.col("bucket"))
+        out = out.repartitionById(len(wave), slot.cast("int") - 1)
         # the ledger counts ride on the write: observed AFTER the exchange,
         # so they are merged once per result task (a retried map stage
         # could count twice; a retried result task cannot)

@@ -245,20 +245,16 @@ def synth_docs_df(
     """Distributed synthetic corpus: doc ids fan out via spark.range and each
     executor synthesizes its documents (synth_doc is a pure function of
     (seed, doc_id)) — no driver-side generation loop, scales to any n_docs."""
-    import pandas as pd
+    from ..operators.util import arrow_rows
 
     partitions = partitions or max(32, n_docs // 100)
 
-    def gen(batches):
-        for pdf in batches:
-            ids = [f"doc{int(i):07d}" for i in pdf["id"]]
-            yield pd.DataFrame(
-                {"doc_id": ids, "spans": [synth_doc(d, seed) for d in ids]}
-            )
+    def gen(i):
+        d = f"doc{i:07d}"
+        yield d, synth_doc(d, seed)
 
-    return (
-        spark.range(0, n_docs, numPartitions=partitions)
-        .mapInPandas(gen, schema=SPANS_SCHEMA)
+    return arrow_rows(
+        spark.range(0, n_docs, numPartitions=partitions), ("id",), SPANS_SCHEMA, gen
     )
 
 
@@ -272,31 +268,23 @@ def docs_to_df(
 
 def spans_table_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Span corpus derived from the driver's documents.parquet (doc_id, text)
-    — distributed derivation via mapInPandas, no driver-side loop."""
+    — distributed derivation in one Arrow pass, no driver-side loop."""
     from .packaging import ensure_shipped
 
     ensure_shipped(spark)
-    from ..operators.util import fan_out
+    from ..operators.util import arrow_rows, fan_out
 
     # the driver table is physically ONE small parquet file — without the
     # fan-out the whole python-side derivation runs as a single task
-    # (PLANS.md #13; mapInPandas amplifies compute over bytes even harder
-    # than the gram explodes)
+    # (PLANS.md #13; the Python derivation amplifies compute over bytes
+    # even harder than the gram explodes)
     docs = fan_out(
         spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
     )
 
-    def derive(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            out = {
-                "doc_id": [str(d) for d in pdf["doc_id"]],
-                "spans": [
-                    spans_from_text(str(d), t or "")
-                    for d, t in zip(pdf["doc_id"], pdf["text"])
-                ],
-            }
-            yield pd.DataFrame(out)
-
-    return docs.mapInPandas(derive, schema=SPANS_SCHEMA)
+    return arrow_rows(
+        docs,
+        ("doc_id", "text"),
+        SPANS_SCHEMA,
+        lambda d, t: [(str(d), spans_from_text(str(d), t or ""))],
+    )

@@ -121,31 +121,23 @@ def html_table_from_texts(docs_df: DataFrame) -> DataFrame:
     """(doc_id, html) from any (doc_id, text) frame — one Arrow pass, no
     shuffle of its own (callers balance the INPUT; the generation is
     python compute amplified over bytes just like the parse)."""
+    from ..operators.util import arrow_rows
 
-    def derive(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": [str(d) for d in pdf["doc_id"]],
-                    "html": [
-                        html_from_text(str(d), t or "")
-                        for d, t in zip(pdf["doc_id"], pdf["text"])
-                    ],
-                }
-            )
-
-    return docs_df.mapInPandas(derive, schema=HTML_SCHEMA)
+    return arrow_rows(
+        docs_df,
+        ("doc_id", "text"),
+        HTML_SCHEMA,
+        lambda d, t: [(str(d), html_from_text(str(d), t or ""))],
+    )
 
 
 def html_table_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, html) derived from the driver's documents.parquet —
-    distributed derivation via mapInPandas, no driver-side loop. The RAW
+    distributed derivation in one Arrow pass, no driver-side loop. The RAW
     text rows are balanced to the parse target BEFORE generation, so the
     one exchange in the whole html chain moves source text (lighter than
-    the generated pages); the downstream operators' ``_balanced`` guard
-    sees the repartition in the plan and becomes a no-op."""
+    the generated pages); the downstream operators' ``balance_for_parse``
+    guard sees the marker and becomes a no-op."""
     from .packaging import ensure_shipped
 
     ensure_shipped(spark)

@@ -24,46 +24,17 @@ compaction); merged reads move summary rows only — never pages.
 
 from __future__ import annotations
 
-from typing import Callable, Iterable, Iterator
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..operators.htmlextract import TS_UNKNOWN
+from ..operators.htmlextract import TS_UNKNOWN, html_extract_report
 from . import deltaindex
 
 PAGES_TS_SCHEMA = "doc_id string, html string, fetched_at_ts long"
 
-_PARSED_SCHEMA = (
-    "doc_id string, canonical string, content_hash string, fetched_at_ts long"
-)
-
 _SUMMARY_COLS = ["canonical", "content_hash", "n", "ts1", "doc1", "ts2", "doc2"]
-
-
-def _parse(pages: DataFrame) -> DataFrame:
-    """(doc_id, html, fetched_at_ts) -> (doc_id, canonical, content_hash,
-    fetched_at_ts) in one narrow Arrow pass; canonical-less pages are kept
-    out downstream (same exclusion as the batch operator), null fetch
-    times coerce to TS_UNKNOWN."""
-    import pandas as pd
-
-    from ..core.htmlmain import main_content_hash, parse_page
-
-    def run(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "canonical": [], "content_hash": []}
-            for d, h in zip(pdf["doc_id"], pdf["html"]):
-                p = parse_page(h)
-                out["doc_id"].append(str(d))
-                out["canonical"].append(p.canonical)
-                out["content_hash"].append(main_content_hash(p.spans))
-            out["fetched_at_ts"] = (
-                pdf["fetched_at_ts"].fillna(TS_UNKNOWN).astype("int64")
-            )
-            yield pd.DataFrame(out)
-
-    return pages.mapInPandas(run, schema=_PARSED_SCHEMA)
 
 
 _TOP2 = "array<struct<ts:bigint,doc:string>>"
@@ -84,13 +55,15 @@ def _unpack(grouped: DataFrame) -> DataFrame:
     )
 
 
-def _summarize(parsed: DataFrame) -> DataFrame:
-    """Per-(canonical, content_hash) singleton summaries from parsed
-    fetch rows: count + top-2 (ts, doc) under the keep-latest order.
-    ONE hash aggregation; the collect_list is bounded by the version's
-    fetch count within the batch."""
+def _summarize(report: DataFrame) -> DataFrame:
+    """Per-(canonical, content_hash) singleton summaries from
+    ``html_extract_report`` rows carrying ``fetched_at_ts``: count + top-2
+    (ts, doc) under the keep-latest order (a null fetch time coerces to
+    TS_UNKNOWN; canonical-less pages are left out, as in the batch
+    operator). ONE hash aggregation; the collect_list is bounded by the
+    version's fetch count within the batch."""
     return _unpack(
-        parsed.where(F.col("canonical") != "")
+        report.where(F.col("canonical") != "")
         .select(
             "canonical",
             "content_hash",
@@ -142,7 +115,7 @@ def merge_change(summaries: DataFrame) -> DataFrame:
 
 def change_stats_init(pages: DataFrame, root: str) -> None:
     """One-shot base build over (doc_id, html, fetched_at_ts) pages."""
-    deltaindex.init_index(_summarize(_parse(pages)), root)
+    deltaindex.init_index(_summarize(html_extract_report(pages)), root)
 
 
 def make_change_batch_processor(root: str) -> Callable[[DataFrame, int], None]:
@@ -151,7 +124,9 @@ def make_change_batch_processor(root: str) -> Callable[[DataFrame, int], None]:
     watermark discipline)."""
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        deltaindex.write_delta(_summarize(_parse(batch_df)), root, batch_id)
+        deltaindex.write_delta(
+            _summarize(html_extract_report(batch_df)), root, batch_id
+        )
 
     return process_batch
 

@@ -17,37 +17,33 @@ is ever re-parsed to re-derive policy.
 Because keep-latest carries COUNTS (non-idempotent under re-merge), the
 exactly-once/compaction discipline — the fold watermark (the base version number),
 the snapshot-pinned partition-exact clear, the root+checkpoint durability
-contract — lives in the shared engine ``streaming/deltaindex.py``; this
-module contributes only the crawl-specific pieces: the head-metadata parse
-and the keep-latest merge.
+contract — lives in the shared engine ``streaming/deltaindex.py``, and
+the parse is the batch ``htmlextract.html_extract_report``; this module
+contributes only the keep-latest summaries and merge.
 
-Scale shape: the per-batch parse is one narrow Arrow pass carrying
-(doc_id, canonical, fetched_at_ts) — canonical extraction and the fetch
-timestamp travel in the SAME pass, no join back to the batch.  The batch
+Scale shape: the per-batch parse is the report's one narrow Arrow pass,
+which carries ``fetched_at_ts`` through untouched — canonical extraction
+and the fetch timestamp travel in the SAME pass, no join back to the
+batch.  The batch
 summary is one hash-agg on canonical (micro-batch sized); merged reads and
 compaction move summary rows only, never pages.
 """
 
 from __future__ import annotations
 
-from typing import Callable, Iterable, Iterator
+from typing import Callable
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.htmlextract import (
-    TS_UNKNOWN,
     corpus_gate,
+    html_extract_report,
     keep_latest_full_summaries,
     merge_keep_latest_full,
 )
 from . import deltaindex
 
 PAGES_TS_SCHEMA = "doc_id string, html string, fetched_at_ts long"
-_PARSED_SCHEMA = (
-    "doc_id string, canonical string, fetched_at_ts long, "
-    "noindex boolean, n_chars_main long"
-)
 
 # the index persists FULL summaries (winner payload included) so the live
 # index answers BOTH the keep-latest listing and the corpus gate
@@ -64,43 +60,10 @@ _SUMMARY_COLS = [
 _PUBLIC_COLS = _SUMMARY_COLS[:5]  # crawl_keep_latest's output contract
 
 
-def _parse_with_ts(pages: DataFrame) -> DataFrame:
-    """(doc_id, html, fetched_at_ts) -> (doc_id, canonical, fetched_at_ts,
-    noindex, n_chars_main) in one narrow Arrow pass — head metadata, the
-    policy payload, and the fetch time stay in the same row, so no join is
-    needed afterwards.  A null fetch time becomes TS_UNKNOWN (crawl
-    records without a timestamp must not kill the micro-batch, and must
-    never beat a timed fetch)."""
-    from ..core.htmlmain import parse_page
-
-    def run(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "doc_id": [],
-                "canonical": [],
-                "noindex": [],
-                "n_chars_main": [],
-            }
-            for d, h in zip(pdf["doc_id"], pdf["html"]):
-                p = parse_page(h)
-                out["doc_id"].append(str(d))
-                out["canonical"].append(p.canonical)
-                out["noindex"].append(p.noindex)
-                out["n_chars_main"].append(
-                    sum(len(s[1]) for s in p.spans if s[0] == "text")
-                )
-            out["fetched_at_ts"] = (
-                pdf["fetched_at_ts"].fillna(TS_UNKNOWN).astype("int64")
-            )
-            yield pd.DataFrame(out)
-
-    return pages.mapInPandas(run, schema=_PARSED_SCHEMA)
-
-
 # the one-shot twin the merged readers are tested against
 def _one_shot_summary(pages: DataFrame) -> DataFrame:
     return merge_keep_latest_full(
-        keep_latest_full_summaries(_parse_with_ts(pages))
+        keep_latest_full_summaries(html_extract_report(pages))
     )
 
 

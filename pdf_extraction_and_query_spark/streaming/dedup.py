@@ -55,27 +55,12 @@ def dedup_html_stream(
     other — their key is salted per doc_id so they always pass. Same
     bounded-state ``dropDuplicatesWithinWatermark`` contract as
     :func:`dedup_stream`; the batch twin over the sink is
-    ``operators/htmlextract.html_content_dups``."""
-    import pandas as pd
+    ``operators/htmlextract.html_content_dups``, and the content hash is
+    its ``html_extract_report``'s (which carries ``ts`` through)."""
+    from ..operators.htmlextract import EMPTY_CONTENT_HASH, html_extract_report
 
-    from ..core.htmlmain import main_content_hash, parse_page
-    from ..operators.htmlextract import EMPTY_CONTENT_HASH
-
-    def run(batches):
-        for pdf in batches:
-            hashes = [
-                main_content_hash(parse_page(h).spans) for h in pdf["html"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": [str(d) for d in pdf["doc_id"]],
-                    "ts": pdf["ts"],
-                    "content_hash": hashes,
-                }
-            )
-
-    hashed = pages_stream.mapInPandas(
-        run, "doc_id string, ts timestamp, content_hash string"
+    hashed = html_extract_report(pages_stream).select(
+        "doc_id", "ts", "content_hash"
     )
     return (
         hashed.withColumn(

@@ -142,3 +142,28 @@ def test_one_wave_job_count(spark, spans_df, tmp_path_factory):
         sc.setJobGroup("ckpt-one-wave-done", "")
     jobs = sc.statusTracker().getJobIdsForGroup("ckpt-one-wave")
     assert len(jobs) <= 6, sorted(jobs)  # with the sink re-read: 10 hybrid, 13 staged
+
+
+def test_wave_buckets_get_their_own_writer_task(spark, spans_df, tmp_path_factory):
+    """A wave's exchange puts each bucket in the partition of its index in
+    the wave, so every bucket is written by its own task and its one file
+    carries that task's part number (hashing the buckets of wave [4, 5]
+    into 2 partitions put both in one task)."""
+    import os
+
+    base = tmp_path_factory.mktemp("ckpt_tasks")
+    out_dir, ledger_dir = str(base / "out"), str(base / "ledger")
+    for per_wave in (4, 2):  # wave [0, 1, 2, 3], then wave [4, 5]
+        run_checkpointed(
+            spark, spans_df, out_dir, ledger_dir, "tasks-job",
+            n_buckets=N_BUCKETS, buckets_per_wave=per_wave, max_waves=1, cfg=CFG,
+        )
+    parts = {
+        b: sorted(
+            f.split("-")[1]
+            for f in os.listdir(os.path.join(out_dir, f"bucket={b}"))
+            if f.endswith(".parquet")
+        )
+        for b in (4, 5)
+    }
+    assert parts == {4: ["00000"], 5: ["00001"]}, parts

@@ -136,15 +136,12 @@ def test_streaming_maintainers_ride_the_engine():
 
 
 def test_html_extract_is_single_narrow_pass(spark, tmp_path):
-    """HTML main-content extraction must stay one Arrow stage over the
+    """Every HTML parse operator must stay one Arrow stage over the
     source scan. The ONLY admissible exchange is the conditional balanced
     fan-out (round-robin of raw pages when the scan is under-split for a
     python-amplified stage — PLANS.md #21); a keyed/hash shuffle here
     would mean the 10^12-doc parse pays data movement it never needs."""
-    from pdf_extraction_and_query_spark.operators.htmlextract import (
-        html_extract,
-        html_extract_report,
-    )
+    from pdf_extraction_and_query_spark.operators import htmlextract as HX
 
     p = str(tmp_path / "pages.parquet")
     _docs(spark).select(
@@ -154,12 +151,50 @@ def test_html_extract_is_single_narrow_pass(spark, tmp_path):
         ),
     ).write.parquet(p)
     pages = spark.read.parquet(p)
-    for op in (html_extract, html_extract_report):
+    for op in (
+        HX.html_extract,
+        HX.html_links,
+        HX.html_links_text,
+        HX.html_links_with_meta,
+        HX.html_main_text,
+        HX.html_extract_span_corpus,
+        HX.html_extract_report,
+    ):
         plan = op(pages)._jdf.queryExecution().executedPlan().toString()
         n_exchange = plan.count("Exchange")
         n_rr = plan.count("Exchange RoundRobinPartitioning")
         assert n_exchange == n_rr <= 1, plan  # fan-out only, never keyed
-        assert "MapInPandas" in plan, plan
+        assert plan.count("MapInArrow") == 1, plan
+
+
+def test_html_parse_has_one_stage():
+    """``parse_page`` is called only by the kernel module and by the one
+    HTML parse stage, ``htmlextract._parse_pass``; no pandas parse loop
+    is left in the HTML operators or their streaming twins."""
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "pdf_extraction_and_query_spark"
+    offenders = []
+    for py in sorted(pkg.rglob("*.py")):
+        rel = str(py.relative_to(pkg))
+        if rel == "core/htmlmain.py":
+            continue
+        # a call is attributed to the top-level statement that holds it
+        for top in ast.parse(py.read_text()).body:
+            where = (rel, getattr(top, "name", None))
+            for c in ast.walk(top):
+                f = getattr(c, "func", None)
+                name = getattr(f, "id", None) or getattr(f, "attr", None)
+                if name == "parse_page" and isinstance(c, ast.Call):
+                    if where != ("operators/htmlextract.py", "_parse_pass"):
+                        offenders.append(f"{rel}:{c.lineno} calls parse_page")
+    for rel in (
+        "operators/htmlextract.py",
+        "streaming/dedup.py",
+        "streaming/changestats.py",
+        "streaming/crawlindex.py",
+    ):
+        if "mapInPandas" in (pkg / rel).read_text():
+            offenders.append(f"{rel} uses mapInPandas")
+    assert offenders == [], offenders
 
 
 def test_crawl_rollups_have_single_keyed_exchange(spark, tmp_path):

@@ -172,3 +172,36 @@ def test_frontier_computes_fully_live(spark, tmp_path):
         crawl_frontier(crawl_corpus(rep), recrawl_change_stats(rep), pr)
     )
     assert got == want and got
+
+
+def test_fetch_times_above_2_53_keep_full_precision(spark, tmp_path):
+    """One micro-batch: an untimed fetch next to fetch times above 2^53
+    that a float64 round trip maps to one value (2^60). Exact int64 order
+    is doc "3" (2^60 + 100), then "9" (2^60 + 2), both "beta", so the
+    latest fetch did not change content; the rounded order (ties broken on
+    doc_id: "9", "7", "3") would compare "beta" with "gamma". Doc "7" is
+    there because swapping only the latest two fetches cannot change
+    ``latest_changed``."""
+    rows = [
+        ("1", "alpha", None),
+        ("3", "beta", 2**60 + 100),
+        ("9", "beta", 2**60 + 2),
+        ("7", "gamma", 2**60 + 1),
+    ]
+    data = [
+        (
+            d,
+            '<link rel="canonical" href="https://corp.example/doc/wide">'
+            f"<p>{text} main content prose</p>",
+            ts,
+        )
+        for d, text, ts in rows
+    ]
+    # one partition, so every page shares one Arrow batch with the null
+    pages = spark.createDataFrame(data, PAGES_TS_SCHEMA).coalesce(1)
+    root = str(tmp_path / "changes")
+    change_stats_init(spark.createDataFrame([], PAGES_TS_SCHEMA), root)
+    make_change_batch_processor(root)(pages, 0)
+    got = _rows(change_stats_merged(spark, root))
+    assert got == [("https://corp.example/doc/wide", 4, 3, False, 666666)]
+    assert got == _rows(recrawl_change_stats(html_extract_report(pages)))

@@ -9,11 +9,11 @@ import time
 from pdf_extraction_and_query_spark import contract as C
 from pdf_extraction_and_query_spark.operators.htmlextract import (
     crawl_keep_latest,
+    html_extract_report,
 )
 from pdf_extraction_and_query_spark.sources.htmlcorpus import html_from_text
 from pdf_extraction_and_query_spark.streaming.crawlindex import (
     PAGES_TS_SCHEMA,
-    _parse_with_ts,
     crawl_compact,
     crawl_index_init,
     crawl_index_merged,
@@ -61,7 +61,7 @@ def test_merged_equals_one_shot(spark, tmp_path):
     make_crawl_batch_processor(root)(_pages(spark, _BATCH1), 0)
     got = _rows(crawl_index_merged(spark, root))
     want = _rows(
-        crawl_keep_latest(_parse_with_ts(_pages(spark, _BASE + _BATCH1)))
+        crawl_keep_latest(html_extract_report(_pages(spark, _BASE + _BATCH1)))
     )
     assert got == want and got
     by_canon = {r[0]: r for r in got}
@@ -130,7 +130,7 @@ def test_pre_watermark_index_migrates(spark, tmp_path):
     proc = make_crawl_batch_processor(root)
     proc(_pages(spark, _BATCH1), 0)
     want = _rows(
-        crawl_keep_latest(_parse_with_ts(_pages(spark, _BASE + _BATCH1)))
+        crawl_keep_latest(html_extract_report(_pages(spark, _BASE + _BATCH1)))
     )
     assert _rows(crawl_index_merged(spark, root)) == want
     crawl_compact(spark, root)
@@ -151,7 +151,9 @@ def test_corpus_merged_equals_one_shot_gate(spark, tmp_path):
 
     root = _setup(spark, tmp_path)
     make_crawl_batch_processor(root)(_pages(spark, _BATCH1), 0)
-    want = _rows(crawl_corpus(_parse_with_ts(_pages(spark, _BASE + _BATCH1))))
+    want = _rows(
+        crawl_corpus(html_extract_report(_pages(spark, _BASE + _BATCH1)))
+    )
     assert _rows(crawl_corpus_merged(spark, root)) == want and want
     crawl_compact(spark, root)
     assert _rows(crawl_corpus_merged(spark, root)) == want
@@ -187,8 +189,8 @@ def test_compact_clears_only_folded_partitions(spark, tmp_path):
 
 def test_null_fetch_time_tolerated_and_never_wins(spark):
     """A crawl record without a timestamp must not kill the Arrow pass
-    (NaN -> int64 raises without the fill rule) and must lose to ANY timed
-    fetch of the same URL; untimed-only URLs tie-break on doc_id."""
+    and must lose to ANY timed fetch of the same URL; untimed-only URLs
+    tie-break on doc_id."""
     rows = [("1", 500), (str(1 + _M), None), ("2", None), (str(2 + _M), None)]
     data = [
         (d, html_from_text(d, f"alpha beta doc {d} gamma delta"), ts)
@@ -197,7 +199,7 @@ def test_null_fetch_time_tolerated_and_never_wins(spark):
     pages = spark.createDataFrame(data, PAGES_TS_SCHEMA)
     got = {
         r["canonical"]: (r["n_crawls"], r["latest_doc_id"])
-        for r in crawl_keep_latest(_parse_with_ts(pages)).collect()
+        for r in crawl_keep_latest(html_extract_report(pages)).collect()
     }
     assert got[f"{C.HTML_CANONICAL_PREFIX}1"] == (2, "1")  # timed fetch wins
     # both untimed: string-max doc_id wins deterministically
@@ -205,6 +207,31 @@ def test_null_fetch_time_tolerated_and_never_wins(spark):
         2,
         max("2", str(2 + _M)),
     )
+
+
+def test_fetch_times_above_2_53_keep_full_precision(spark, tmp_path):
+    """One micro-batch: an untimed fetch next to two fetch times above
+    2^53 that a float64 round trip maps to the same value (2^60), so only
+    an exact int64 path keeps doc "3" (2^60 + 100) ahead of doc "9"
+    (2^60 + 2)."""
+    rows = [("1", None), ("3", 2**60 + 100), ("9", 2**60 + 2)]
+    data = [
+        (
+            d,
+            '<link rel="canonical" href="https://corp.example/doc/wide">'
+            f"<p>main content prose of doc {d}</p>",
+            ts,
+        )
+        for d, ts in rows
+    ]
+    # one partition, so every page shares one Arrow batch with the null
+    pages = spark.createDataFrame(data, PAGES_TS_SCHEMA).coalesce(1)
+    root = str(tmp_path / "crawl")
+    crawl_index_init(spark.createDataFrame([], PAGES_TS_SCHEMA), root)
+    make_crawl_batch_processor(root)(pages, 0)
+    got = _rows(crawl_index_merged(spark, root))
+    assert got == [("https://corp.example/doc/wide", 3, "3", 2**60 + 100, 2)]
+    assert got == _rows(crawl_keep_latest(html_extract_report(pages)))
 
 
 def test_streaming_end_to_end(spark, tmp_path):
@@ -222,7 +249,7 @@ def test_streaming_end_to_end(spark, tmp_path):
     time.sleep(0.2)
     got = _rows(crawl_index_merged(spark, root))
     want = _rows(
-        crawl_keep_latest(_parse_with_ts(_pages(spark, _BASE + _BATCH1)))
+        crawl_keep_latest(html_extract_report(_pages(spark, _BASE + _BATCH1)))
     )
     assert got == want
 
