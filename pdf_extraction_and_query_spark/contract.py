@@ -267,7 +267,7 @@ SYNTH_TS_MIX = 37
 # assigned to shards by cumulative whitespace-token count in doc_id order;
 # each shard targets ~PACK_TOKEN_BUDGET tokens
 PACK_TOKEN_BUDGET = 1000
-PACK_BAND = 4096  # docs per prefix-scan band (same pattern as SPAN_BAND)
+PACK_BAND = 4096  # docs per band of util.prefix_sums (as SPAN_BAND)
 # fixed-length training-sequence packing (operators/packing.pack_sequences):
 # sequence s owns global tokens [s*SEQ_LEN, (s+1)*SEQ_LEN) of the doc_id-
 # ordered concatenated corpus; 2048 is the classic pretraining context
@@ -523,7 +523,8 @@ HITS_ITERS = 2
 EPOCH_SALT = "epoch:"
 EPOCH_N = 2
 EPOCH_SHARDS = 8
-EPOCH_BAND_SHIFT = 36  # 48-bit hash -> 4096 hash-order bands
+# 48-bit hash -> 4096 hash-order bands of util.prefix_sums
+EPOCH_BAND_SHIFT = 36
 
 # --- mergeable corpus sketches (operators/sketches.py) ---
 # Fixed-threshold theta sketch (the KMV/bottom-k family, Bar-Yossef et
@@ -793,11 +794,11 @@ MRL_DIMS: tuple[int, ...] = (8, 16, 32, 64)
 # time (search.mrl_recall); change both together.
 # deterministic curriculum ordering (packing.curriculum_order): docs
 # ordered easiest-first by the readability flesch_e3 signal (ties ->
-# doc_id), position assigned by the banded-rank device (epoch_shuffle
-# precedent): band = (-flesch_e3) div CURR_BAND_E3 (integer truncation
-# is monotone, so cross-band order is consistent and the within-band
-# window handles the rest), local row_number + cumulated higher-band
-# counts — the band-totals window runs over #bands rows, never docs.
+# doc_id), position = the exclusive count of the banded
+# util.prefix_sums (as epoch_shuffle) over band = (-flesch_e3) div
+# CURR_BAND_E3 (integer truncation is monotone, so the band never
+# decreases along the DESC order and the within-band window handles the
+# rest) — the band-offsets window runs over #bands rows, never docs.
 # The oracle ranks with the PLAIN global window: an independent
 # algorithm pinning the banded scan.  Zero-word docs (no readability
 # row) are excluded, matching the readability operator's domain.

@@ -9,9 +9,10 @@ Stage layout (each stage is independently queryable; shuffle keys noted):
 
   1. ``explode_spans``     — explode + derive page (explicit field wins, else
                              running page-marker count) + media-segment index.
-                             Default: one doc_id window (single shuffle, one
-                             task per doc).  ``banded=True`` switches to a
-                             DISTRIBUTED PREFIX SCAN on offset bands so a
+                             Both counts are one ``util.prefix_sums`` scan:
+                             by default one doc_id window (single shuffle,
+                             one task per doc); ``banded=True`` makes it the
+                             distributed scan over offset bands so a
                              400k-span whale spreads over ~100 parallel tasks
                              instead of one — hybrid mode routes exactly the
                              whale docs there (PLANS.md §8).
@@ -57,6 +58,7 @@ from ..core.lines import (
     reconstruct_wrapped_lines,
 )
 from ..core.textclean import clean
+from .util import prefix_sums
 
 LINES_SCHEMA_FIELDS = (
     "doc_id string, offset int, kind string, text string, media_ref string, "
@@ -81,8 +83,7 @@ OUT_SCHEMA = "doc_id string, `order` int, kind string, text string, media_ref st
 # spans per prefix-scan band: offsets are per-doc ordinals, so
 # floor(offset / SPAN_BAND) cuts each doc into contiguous offset ranges.
 # A 400k-span whale becomes ~100 parallel window tasks; a normal document
-# stays a single band (the banding is then a no-op join with a 1-row-per-doc
-# totals frame).
+# stays a single band (one row of the broadcast band-offsets frame).
 SPAN_BAND = 4096
 
 
@@ -91,20 +92,19 @@ def explode_spans(spans_df: DataFrame, banded: bool = False) -> DataFrame:
     page_marker spans are dropped (they are page-boundary metadata, not
     content — see core/docpipe.py spec).
 
-    The two running counts (page-marker prefix count -> page, media prefix
-    count -> seg) have two implementations, routed by ``banded``:
+    Both running counts (page-marker count -> page, media count -> seg)
+    are one ``operators/util.prefix_sums`` call per doc_id in offset
+    order; ``banded`` only chooses its shape:
 
     * ``banded=False`` (default): one window per doc_id — a single shuffle,
       optimal for corpora of normally-sized documents (inter-doc
       parallelism; each doc is one window task).
-    * ``banded=True``: a DISTRIBUTED PREFIX SCAN — local inclusive sums
-      inside (doc_id, offset-band) windows plus per-band totals cumulated
-      over the tiny band frame and joined back, so a 400k-span whale
-      spreads over ~100 tasks instead of one.  Costs a second pass over
-      the source (the totals aggregate re-executes the scan: column
-      pruning makes the two branch subplans differ, defeating exchange
-      reuse), so it is only routed to whale-sized documents — measured
-      +30-43% on small-doc corpora, -6x single-whale latency.
+    * ``banded=True``: the distributed scan over offset bands
+      (``SPAN_BAND`` spans each), so a 400k-span whale spreads over ~100
+      window tasks instead of one. The band offsets are summed from the
+      span values, so the span rows are shuffled and windowed once, but
+      the offsets' aggregate is a second pass over the source; it is
+      routed to whale-sized documents only.
 
     ``plans/extract.py`` hybrid mode picks the banded path exactly for the
     documents above its span threshold; both paths are span-equal."""
@@ -122,77 +122,20 @@ def explode_spans(spans_df: DataFrame, banded: bool = False) -> DataFrame:
     )
     is_marker = F.when(F.col("kind") == "page_marker", F.lit(1)).otherwise(F.lit(0))
     is_media = F.when(F.col("kind").isin(*MEDIA_KINDS), F.lit(1)).otherwise(F.lit(0))
-
-    if not banded:
-        w = Window.partitionBy("doc_id").orderBy("offset")
-        df = (
-            df.withColumn(
-                "derived_page",
-                F.greatest(
-                    F.sum(is_marker).over(w.rowsBetween(Window.unboundedPreceding, 0)),
-                    F.lit(1),
-                ),
-            )
-            .withColumn(
-                "seg",
-                F.coalesce(
-                    F.sum(is_media).over(w.rowsBetween(Window.unboundedPreceding, -1)),
-                    F.lit(0),
-                ).cast("int"),
-            )
-            .withColumn("page", F.coalesce(F.col("page_field"), F.col("derived_page")).cast("int"))
-            .filter(F.col("kind") != "page_marker")
-            .drop("page_field", "derived_page")
-        )
-        return df
-
-    df = (
-        df.withColumn("band", F.floor(F.col("offset") / SPAN_BAND).cast("int"))
-        .withColumn("_m", is_marker)
-        .withColumn("_d", is_media)
+    df = prefix_sums(
+        df,
+        {"_m": is_marker, "seg": is_media},
+        ["offset"],
+        keys=["doc_id"],
+        band=F.floor(F.col("offset") / SPAN_BAND) if banded else None,
     )
-    w_local = (
-        Window.partitionBy("doc_id", "band")
-        .orderBy("offset")
-        .rowsBetween(Window.unboundedPreceding, 0)
+    # a kept row is no marker: its exclusive marker count is the inclusive one
+    page = F.coalesce(F.col("page_field"), F.greatest(F.col("_m"), F.lit(1)))
+    return df.filter(F.col("kind") != "page_marker").select(
+        "doc_id", "kind", "text", "media_ref", "offset", "font_size", "bold",
+        F.col("seg").cast("int").alias("seg"),
+        page.cast("int").alias("page"),
     )
-    df = df.withColumn("_m_incl", F.sum("_m").over(w_local)).withColumn(
-        "_d_incl", F.sum("_d").over(w_local)
-    )
-    # band totals = max local inclusive sum; exclusive cumulation over the
-    # band frame (one row per SPAN_BAND spans — tiny relative to the data)
-    w_bands = (
-        Window.partitionBy("doc_id")
-        .orderBy("band")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    totals = (
-        df.groupBy("doc_id", "band")
-        .agg(F.max("_m_incl").alias("_mt"), F.max("_d_incl").alias("_dt"))
-        .select(
-            "doc_id",
-            "band",
-            F.coalesce(F.sum("_mt").over(w_bands), F.lit(0)).alias("_m_before"),
-            F.coalesce(F.sum("_dt").over(w_bands), F.lit(0)).alias("_d_before"),
-        )
-    )
-    df = (
-        df.join(totals, ["doc_id", "band"])
-        .withColumn(
-            "derived_page",
-            F.greatest(F.col("_m_before") + F.col("_m_incl"), F.lit(1)),
-        )
-        .withColumn(
-            "seg", (F.col("_d_before") + F.col("_d_incl") - F.col("_d")).cast("int")
-        )
-        .withColumn("page", F.coalesce(F.col("page_field"), F.col("derived_page")).cast("int"))
-        .filter(F.col("kind") != "page_marker")
-        .drop(
-            "page_field", "derived_page", "band",
-            "_m", "_d", "_m_incl", "_d_incl", "_m_before", "_d_before",
-        )
-    )
-    return df
 
 
 def flag_boilerplate(lines_df: DataFrame, min_pages: int = bp.DEFAULT_MIN_PAGES) -> DataFrame:

@@ -9,11 +9,11 @@ bin-packing heuristics, so the assignment is a pure function of the
 corpus (and therefore oracle-expressible).
 
 Scale: a global ordered prefix sum is ONE window task no matter how many
-executors — the same doc-serial trap as extraction stage 1 — so this
-reuses the banded distributed prefix scan (local exclusive sums inside
-``(band = floor(doc_id / PACK_BAND))`` windows + cumulated band totals
-joined back on the band key).  Token counting itself is the codegen
-column expression shared with ``textstats.token_counts``.
+executors — the same doc-serial trap as extraction stage 1 — so this,
+like ``epoch_shuffle`` and ``curriculum_order``, runs the one banded
+distributed scan ``operators/util.prefix_sums`` (here over
+``band = floor(doc_id / PACK_BAND)``).  Token counting itself is the
+codegen column expression shared with ``textstats.token_counts``.
 """
 
 from __future__ import annotations
@@ -22,43 +22,25 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import contract as C
+from .util import prefix_sums
 
 
 def _prefix_tokens(docs: DataFrame) -> DataFrame:
     """(doc_id, n_tokens, prefix_excl): exclusive prefix sum of per-doc
-    token counts in doc_id order, via the banded distributed scan (local
-    sums inside doc_id bands + cumulated band totals joined back — the
-    band-totals window runs over #bands rows, never over documents)."""
+    token counts in doc_id order, by the banded ``util.prefix_sums`` over
+    ``floor(doc_id / PACK_BAND)`` (the band-offsets window runs over
+    #bands rows, never over documents)."""
     toks = docs.select(
         F.col("doc_id").cast("long").alias("doc_id"),
         F.size(F.split(F.trim(F.col("text")), C.WS_SPLIT_RE))
         .cast("long")
         .alias("n_tokens"),
-    ).withColumn("band", F.floor(F.col("doc_id") / C.PACK_BAND).cast("long"))
-
-    w_local = (
-        Window.partitionBy("band")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
     )
-    local = toks.withColumn(
-        "local_excl", F.coalesce(F.sum("n_tokens").over(w_local), F.lit(0))
-    )
-    w_bands = Window.orderBy("band").rowsBetween(Window.unboundedPreceding, -1)
-    totals = (
-        local.groupBy("band")
-        .agg(F.sum("n_tokens").alias("band_total"))
-        .select(
-            "band",
-            F.coalesce(F.sum("band_total").over(w_bands), F.lit(0)).alias(
-                "band_before"
-            ),
-        )
-    )
-    return local.join(totals, "band").select(
-        "doc_id",
-        "n_tokens",
-        (F.col("band_before") + F.col("local_excl")).alias("prefix_excl"),
+    return prefix_sums(
+        toks,
+        {"prefix_excl": F.col("n_tokens")},
+        ["doc_id"],
+        band=F.floor(F.col("doc_id") / C.PACK_BAND),
     )
 
 
@@ -578,9 +560,8 @@ def epoch_shuffle(
     resumed run never re-sees or skips documents).
 
     Scale shape: the rank within an (epoch, shard) is NOT one global
-    window task — positions come from hash-order bands (the
-    ``_prefix_tokens`` banded-scan pattern): a row_number window per
-    (epoch, shard, band = h >> EPOCH_BAND_SHIFT) whose partitions are
+    window task — it is the exclusive count of ``util.prefix_sums`` over
+    hash-order bands ``h >> EPOCH_BAND_SHIFT``, whose windows are
     ~n/(shards·4096) rows, plus band offsets cumulated over the
     band-count frame (≤ epochs·shards·4096 rows, broadcast back).  The
     DuckDB oracle computes the same positions with the plain global
@@ -595,40 +576,16 @@ def epoch_shuffle(
         F.lit(":"),
         F.col("doc_id").cast("string"),
     )
-    t = (
-        e.withColumn(
-            "h", F.conv(F.substring(F.md5(s), 1, 12), 16, 10).cast("long")
-        )
-        .withColumn("shard", (F.col("h") % n_shards).cast("long"))
-        .withColumn(
-            "band", F.shiftright(F.col("h"), C.EPOCH_BAND_SHIFT).cast("long")
-        )
-    )
-    w_local = Window.partitionBy("epoch", "shard", "band").orderBy(
-        "h", "doc_id"
-    )
-    local = t.withColumn("lr", F.row_number().over(w_local).cast("long"))
-    w_bands = (
-        Window.partitionBy("epoch", "shard")
-        .orderBy("band")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offs = (
-        t.groupBy("epoch", "shard", "band")
-        .agg(F.count(F.lit(1)).alias("bc"))
-        .select(
-            "epoch",
-            "shard",
-            "band",
-            F.coalesce(F.sum("bc").over(w_bands), F.lit(0)).alias("before"),
-        )
-    )
-    return local.join(F.broadcast(offs), ["epoch", "shard", "band"]).select(
-        "doc_id",
-        "epoch",
-        "shard",
-        (F.col("before") + F.col("lr")).cast("long").alias("pos"),
-    )
+    t = e.withColumn(
+        "h", F.conv(F.substring(F.md5(s), 1, 12), 16, 10).cast("long")
+    ).withColumn("shard", (F.col("h") % n_shards).cast("long"))
+    return prefix_sums(
+        t,
+        {"pos": F.lit(1)},
+        ["h", "doc_id"],
+        keys=["epoch", "shard"],
+        band=F.shiftright(F.col("h"), C.EPOCH_BAND_SHIFT),
+    ).select("doc_id", "epoch", "shard", (F.col("pos") + 1).alias("pos"))
 
 
 def unimax_alloc(docs: DataFrame) -> DataFrame:
@@ -871,7 +828,9 @@ def curriculum_order(docs: DataFrame) -> DataFrame:
 
     The score reuses the readability operator's exact arithmetic
     (:func:`..textstats.readability` docstring) so the curriculum can
-    never disagree with the published signal."""
+    never disagree with the published signal. ``pos`` is the exclusive
+    count of ``util.prefix_sums`` over bands ``(-flesch_e3) div
+    CURR_BAND_E3``, which never decrease along the DESC order."""
     t = F.col("text")
     n_sent = F.greatest(
         F.regexp_count(t, F.lit(r"[.!?]+")), F.lit(1)
@@ -892,34 +851,12 @@ def curriculum_order(docs: DataFrame) -> DataFrame:
                 "206835 - 1015 * nw DIV ns - 84600 * sy DIV nw"
             ).cast("long").alias("flesch_e3"),
         )
-        .withColumn(
-            "band",
-            F.expr(f"(-flesch_e3) div {C.CURR_BAND_E3}").cast("long"),
-        )
     )
-    w_local = Window.partitionBy("band").orderBy(
-        F.desc("flesch_e3"), F.asc("doc_id")
-    )
-    local = base.withColumn(
-        "lr", (F.row_number().over(w_local) - 1).cast("long")
-    )
-    w_bands = Window.orderBy("band").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offs = (
-        base.groupBy("band")
-        .agg(F.count(F.lit(1)).alias("bc"))
-        .select(
-            "band",
-            F.coalesce(F.sum("bc").over(w_bands), F.lit(0))
-            .cast("long")
-            .alias("before"),
-        )
-    )
-    return local.join(F.broadcast(offs), "band").select(
-        "doc_id",
-        "flesch_e3",
-        (F.col("before") + F.col("lr")).cast("long").alias("pos"),
+    return prefix_sums(
+        base,
+        {"pos": F.lit(1)},
+        [F.desc("flesch_e3"), F.asc("doc_id")],
+        band=F.expr(f"(-flesch_e3) div {C.CURR_BAND_E3}"),
     )
 
 

@@ -2,10 +2,12 @@
 
 from __future__ import annotations
 
-from typing import Callable, Iterable, Sequence
+from typing import Callable, Iterable, Mapping, Sequence
 
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation, Window
+from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+from pyspark.sql.window import WindowSpec
 
 
 def _parse_bytes(s: str | int) -> int:
@@ -123,6 +125,53 @@ def arrow_rows(
 
     out_schema = StructType(st.fields + [df.schema[c] for c in carry])
     return df.select(*dict.fromkeys([*args, *carry])).mapInArrow(run, out_schema)
+
+
+def _exclusive_sums(
+    values: Iterable[Column | str], w: WindowSpec, names: Sequence[str]
+) -> list[Column]:
+    w = w.rowsBetween(Window.unboundedPreceding, -1)
+    return [F.coalesce(F.sum(v).over(w), F.lit(0)).alias(n) for v, n in zip(values, names)]
+
+
+def prefix_sums(
+    df: DataFrame,
+    sums: Mapping[str, Column],
+    order: Sequence[str | Column],
+    keys: Sequence[str] = (),
+    band: Column | None = None,
+) -> DataFrame:
+    """``df``'s columns plus one bigint column per ``name: value`` in
+    ``sums``: the exclusive running sum of the (integral) ``value`` over
+    the rows before this one within ``keys`` in ``order``, 0 on a group's
+    first row. ``order`` must be a total order within ``keys``.
+
+    Without ``band`` this is one window per ``keys`` group, which runs as
+    one task per group. With ``band`` the scan is distributed, the
+    two-level scan of Blelloch (1990): ``band`` must never decrease along
+    ``order`` within ``keys``. Each row takes its local exclusive sum
+    inside its ``(keys, band)`` window plus its band's offset. The offsets
+    come from the raw values, summed per ``(keys, band)`` with map-side
+    partial aggregation, cumulated over that one-row-per-band frame and
+    broadcast-joined back, so the rows themselves are windowed once."""
+    names, values = list(sums), list(sums.values())
+    if band is None:
+        w = Window.partitionBy(*keys).orderBy(*order)
+        return df.select("*", *_exclusive_sums(values, w, names))
+    tot = [f"_ps_total{i}" for i in range(len(names))]
+    loc = [f"_ps_local{i}" for i in range(len(names))]
+    t = df.withColumn("_band", band)
+    w_bands = Window.partitionBy(*keys).orderBy("_band")
+    offs = (
+        t.groupBy(*keys, "_band")
+        .agg(*[F.sum(v).alias(c) for v, c in zip(values, tot)])
+        .select(*keys, "_band", *_exclusive_sums(tot, w_bands, tot))
+    )
+    w_local = Window.partitionBy(*keys, "_band").orderBy(*order)
+    local = t.select("*", *_exclusive_sums(values, w_local, loc))
+    return local.join(F.broadcast(offs), [*keys, "_band"]).select(
+        *df.columns, *[(F.col(a) + F.col(b)).alias(n) for a, b, n in zip(tot, loc, names)]
+    )
 
 
 def iterate(

@@ -2,7 +2,7 @@
 
 ``extract_spans(spans_df, cfg, mode)``:
 
-* ``mode='staged'`` (default): the five-stage vectorized pipeline from
+* ``mode='staged'``: the five-stage vectorized pipeline from
   ``operators/extraction.py``. Shuffles on doc-granular keys only
   (doc_id / (doc_id,norm) / (doc_id,page) / (doc_id,seg)); page-level
   grouping bounds straggler size for 1000-page documents; AQE splits any
@@ -11,9 +11,10 @@
   kernel per document straight from Arrow span batches — zero shuffles,
   best raw throughput when the corpus is mostly small documents; no
   intra-document parallelism.
-* ``mode='hybrid'``: the one whale router — small docs fused, whale docs
-  staged with the banded stage 1; routed by the ``is_whale`` partition
-  column of a :func:`write_spans_routed` table, else by a size probe.
+* ``mode='hybrid'`` (default): the one whale router — small docs fused,
+  whale docs staged with the banded stage 1; routed by the ``is_whale``
+  partition column of a :func:`write_spans_routed` table, else by a size
+  probe.
 
 All must produce identical span sequences (enforced by
 tests/test_pipeline_equality.py against the eager oracle).
@@ -57,17 +58,18 @@ def _staged(spans_df: DataFrame, cfg: ExtractConfig, banded: bool) -> DataFrame:
 def extract_spans(
     spans_df: DataFrame,
     cfg: ExtractConfig = ExtractConfig(),
-    mode: str = "staged",
+    mode: str = "hybrid",
     hybrid_threshold: int = HYBRID_SPAN_THRESHOLD,
 ) -> DataFrame:
     """Ordered output spans (doc_id, order, kind, text, media_ref).
 
     Modes: ``staged`` (shuffled, page-parallel — survives 1000-page
     stragglers), ``fused`` (zero-shuffle mapInArrow — fastest on uniform
-    small docs), ``hybrid`` (size-aware routing: the skew treatment the
-    north rule asks for — the long tail of small docs streams through the
-    narrow path while oversized docs get intra-document page parallelism;
-    per-doc outputs are identical on every path, so the union is safe).
+    small docs), ``hybrid`` (the default; size-aware routing: the skew
+    treatment the north rule asks for — the long tail of small docs
+    streams through the narrow path while oversized docs get
+    intra-document page parallelism; per-doc outputs are identical on
+    every path, so the union is safe).
 
     Hybrid routes from the input itself. A table written by
     :func:`write_spans_routed` carries the ingest-time ``is_whale``
@@ -186,7 +188,7 @@ def process_documents(
 
 
 def extract_arrays(
-    spans_df: DataFrame, cfg: ExtractConfig = ExtractConfig(), mode: str = "staged"
+    spans_df: DataFrame, cfg: ExtractConfig = ExtractConfig(), mode: str = "hybrid"
 ) -> DataFrame:
     """Per-document ordered array form (the FIXTURES.md §2 equality shape):
     (doc_id, out array<struct<kind,text,media_ref,order>>)."""

@@ -48,6 +48,49 @@ def test_banded_prefix_sum_matches_plain_window_across_bands(spark):
     assert got == plain
 
 
+def test_prefix_sums_equal_plain_window_for_every_band_width(spark):
+    """util.prefix_sums is the plain exclusive running-sum window whatever
+    the banding: two key groups, sparse bands (k 0-4, 20-21 and 1000-1001
+    leave empty bands between filled ones at width 3), zero and negative
+    values, two sums at once; and a DESC order with a ``(-x) div w`` band
+    (the curriculum_order shape)."""
+    from pdf_extraction_and_query_spark.operators.util import prefix_sums
+
+    ks = [0, 1, 2, 3, 4, 20, 21, 1000, 1001]
+    rows = [
+        (g, k, (k * 7 + i) % 5 - 2, 0 if k % 4 == 0 else -3 * k)
+        for i, g in enumerate(("a", "b"))
+        for k in (ks if g == "a" else ks[2:7])
+    ]
+    df = spark.createDataFrame(rows, "g string, k long, x long, y long")
+    sums = {"sx": F.col("x"), "sy": F.col("y")}
+
+    w = Window.partitionBy("g").orderBy("k").rowsBetween(Window.unboundedPreceding, -1)
+    plain = df.select(
+        "*",
+        F.coalesce(F.sum("x").over(w), F.lit(0)).alias("sx"),
+        F.coalesce(F.sum("y").over(w), F.lit(0)).alias("sy"),
+    )
+    expected = sorted(map(tuple, plain.collect()))
+    assert any(r[4] < 0 for r in expected) and any(r[5] < 0 for r in expected)
+    for band in (None, F.expr("k div 1"), F.expr("k div 3"), F.expr(f"k div {10**6}")):
+        got = prefix_sums(df, sums, ["k"], keys=["g"], band=band)
+        assert got.columns == [*df.columns, "sx", "sy"]
+        assert sorted(map(tuple, got.collect())) == expected, band
+
+    w_desc = Window.partitionBy("g").orderBy(F.desc("x"), F.asc("k")).rowsBetween(
+        Window.unboundedPreceding, -1
+    )
+    plain_desc = df.select(
+        "*", F.coalesce(F.sum("y").over(w_desc), F.lit(0)).alias("sy")
+    )
+    got = prefix_sums(
+        df, {"sy": F.col("y")}, [F.desc("x"), F.asc("k")], keys=["g"],
+        band=F.expr("(-x) div 2"),
+    )
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, plain_desc.collect()))
+
+
 def test_boundary_doc_belongs_to_starting_shard(spark):
     docs = _docs(spark, [(0, 80), (1, 80), (2, 10)])  # doc 1 straddles 100
     got = {r["doc_id"]: r["shard_id"] for r in shard_pack(docs, budget=100).collect()}

@@ -7,6 +7,7 @@ What's-wrong #2 — paginate's global no-partition-key window)."""
 import ast
 import os
 import pathlib
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -468,3 +469,38 @@ def test_crawl_corpus_single_keyed_exchange(spark):
     assert len(re.findall(r"hashpartitioning\(", plan)) == 1, plan[:1500]
     assert plan.count("RoundRobinPartitioning") <= 1
     assert "Join" not in plan
+
+
+def test_explode_spans_windows_span_rows_once(spark):
+    """Stage 1's two running counts are one ``util.prefix_sums`` scan.
+    Unbanded: exactly one Window. Banded: one Window over the span rows
+    (ordered by offset) plus one over the band-offsets frame, three hash
+    exchanges and a broadcast join, no SortMergeJoin — the band offsets
+    are summed from the span values, so the span rows are windowed once.
+    Pinned on the initial AQE plan of the session fixture (local[4], 8
+    shuffle partitions)."""
+    from pdf_extraction_and_query_spark.operators.extraction import explode_spans
+    from pdf_extraction_and_query_spark.sources.corpus import docs_to_df, synth_docs
+
+    df = docs_to_df(spark, synth_docs(5, seed=7))
+    plan = explode_spans(df)._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Window [") == 1, plan
+    plan = explode_spans(df, banded=True)._jdf.queryExecution().executedPlan().toString()
+    windows = [ln for ln in plan.splitlines() if "Window [" in ln]
+    assert len(windows) == 2, plan
+    assert sum("offset" in ln for ln in windows) == 1, plan
+    assert plan.count("Exchange hashpartitioning") == 3, plan
+    assert "SortMergeJoin" not in plan and "BroadcastHashJoin" in plan, plan
+
+
+def test_banded_windows_live_in_prefix_sums():
+    """Every banded scan goes through ``operators/util.prefix_sums``: no
+    other package module partitions or orders a window by a band."""
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "pdf_extraction_and_query_spark"
+    band_window = re.compile(r"(partitionBy|orderBy)\([^)]*band")
+    hits = {
+        str(py.relative_to(pkg))
+        for py in pkg.rglob("*.py")
+        if band_window.search(py.read_text())
+    }
+    assert hits == {"operators/util.py"}, hits
