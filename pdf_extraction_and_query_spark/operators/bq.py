@@ -10,7 +10,9 @@ Search = Hamming shortlist + exact re-rank (the sq_topk/pq_topk shape):
 candidates ranked by ``bit_count(srp XOR q_srp)`` over the shared
 :func:`~.dedup.srp_words` sketch (contract ``srp_hyperplanes`` — the
 identical planes, bit-identical in the DuckDB oracle), the BQ_RERANK
-best (hamming asc, vec_id asc) re-ranked by exact int64 dot.
+best (hamming asc, vec_id asc) re-ranked by exact int64 dot.  Every
+entry point (inline, IVF-pruned, prebuilt, streaming-merged) is one
+:func:`_bq_search` over its own sketch source.
 
 100-TB shape: the sketch is 8 bytes/vector (vs 512 B fixed-point) and at
 scale lives as its own persisted column — the scoring scan reads ONLY
@@ -22,17 +24,44 @@ joins the full vectors via a broadcast of the R-row shortlist.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import contract as C
-from .dedup import srp_words
-from .search import _dot_vec, _rank_topk, fixed_point_vec
+from .dedup import srp_pack, srp_word, srp_words
+from .search import _centroids, _ivf_assign, _probe_ids, _qv_np, _rerank_topk
 
 
 def bq_sketches(embeddings: DataFrame) -> DataFrame:
     """(vec_id, srp) — the persisted-index surface: 8 bytes per vector."""
     return srp_words(embeddings).select("vec_id", "srp")
+
+
+def _bq_search(
+    sketches: DataFrame, vectors: DataFrame, qv: np.ndarray, k: int, rerank: int
+) -> DataFrame:
+    """The search tail every BQ entry point shares: the ``rerank`` best
+    (vec_id, srp) sketches by Hamming distance to the query's SRP word (a
+    literal — pure codegen XOR + popcount, hamming asc, vec_id asc), then
+    the exact re-rank against ``vectors``."""
+    qword = int(srp_pack(qv[None, :])[0])
+    shortlist = (
+        sketches.select(
+            "vec_id",
+            F.bit_count(F.col("srp").bitwiseXOR(F.lit(qword)))
+            .cast("long")
+            .alias("hamming"),
+        )
+        .orderBy(F.asc("hamming"), F.asc("vec_id"))
+        .limit(rerank)
+    )
+    return _rerank_topk(shortlist, vectors, qv, k).select(
+        F.col("vec_id").cast("long").alias("vec_id"),
+        "hamming",
+        "dot_e12",
+        "rank",
+    )
 
 
 def bq_topk(
@@ -46,36 +75,8 @@ def bq_topk(
     ``rerank`` best are re-ranked by exact fixed-point dot.  Output
     (vec_id, hamming, dot_e12, rank) — deterministic at both stages
     (hamming asc, vec_id asc; then dot desc, vec_id asc)."""
-    s = srp_words(embeddings)
-    q = s.where(F.col("vec_id") == query_vec_id).select(
-        F.col("srp").alias("qsrp"), F.col("ev").alias("qv")
-    )
-    shortlist = (
-        s.select("vec_id", "srp")
-        .crossJoin(F.broadcast(q.select("qsrp")))
-        .select(
-            "vec_id",
-            F.bit_count(F.col("srp").bitwiseXOR(F.col("qsrp")))
-            .cast("long")
-            .alias("hamming"),
-        )
-        .orderBy(F.asc("hamming"), F.asc("vec_id"))
-        .limit(rerank)
-    )
-    cand = embeddings.join(F.broadcast(shortlist), "vec_id").select(
-        "vec_id", "hamming", fixed_point_vec(F.col("embedding")).alias("ev")
-    )
-    hits = cand.crossJoin(F.broadcast(q.select("qv"))).select(
-        "vec_id",
-        "hamming",
-        _dot_vec(F.col("ev"), F.col("qv")).alias("dot_e12"),
-    )
-    return _rank_topk(hits, k).select(
-        F.col("vec_id").cast("long").alias("vec_id"),
-        "hamming",
-        "dot_e12",
-        "rank",
-    )
+    qv = _qv_np(embeddings, query_vec_id)
+    return _bq_search(bq_sketches(embeddings), embeddings, qv, k, rerank)
 
 
 def ivfbq_topk(
@@ -94,51 +95,14 @@ def ivfbq_topk(
     reads 8 bytes per survivor — the two savings multiply (in a
     persisted layout the sketches live partitioned by cent_id, the
     ivfpq_build precedent; this is the inline oracle-paired form)."""
-    from .search import _centroids, _dot, _ivf_assign
-
-    s = srp_words(embeddings).select("vec_id", "srp")
-    assigned = _ivf_assign(embeddings, n_centroids).select("vec_id", "cent_id")
-    qs = embeddings.where(F.col("vec_id") == query_vec_id).select(
-        fixed_point_vec(F.col("embedding")).alias("qv")
+    qv = _qv_np(embeddings, query_vec_id)
+    probe_ids = _probe_ids(_centroids(embeddings, n_centroids), qv, n_probe)
+    sketches = (
+        _ivf_assign(embeddings, n_centroids)
+        .where(F.col("cent_id").isin(probe_ids))
+        .select("vec_id", srp_word(F.col("ev")).alias("srp"))
     )
-    probes = (
-        _centroids(embeddings, n_centroids)
-        .crossJoin(F.broadcast(qs))
-        .select("cent_id", _dot(F.col("cv"), F.col("qv")).alias("qdot"))
-        .orderBy(F.desc("qdot"), F.asc("cent_id"))
-        .limit(n_probe)
-        .select("cent_id")
-    )
-    qw = srp_words(embeddings.where(F.col("vec_id") == query_vec_id)).select(
-        F.col("srp").alias("qsrp")
-    )
-    shortlist = (
-        s.join(assigned, "vec_id")
-        .join(F.broadcast(probes), "cent_id")
-        .crossJoin(F.broadcast(qw))
-        .select(
-            "vec_id",
-            F.bit_count(F.col("srp").bitwiseXOR(F.col("qsrp")))
-            .cast("long")
-            .alias("hamming"),
-        )
-        .orderBy(F.asc("hamming"), F.asc("vec_id"))
-        .limit(rerank)
-    )
-    cand = embeddings.join(F.broadcast(shortlist), "vec_id").select(
-        "vec_id", "hamming", fixed_point_vec(F.col("embedding")).alias("ev")
-    )
-    hits = cand.crossJoin(F.broadcast(qs)).select(
-        "vec_id",
-        "hamming",
-        _dot_vec(F.col("ev"), F.col("qv")).alias("dot_e12"),
-    )
-    return _rank_topk(hits, k).select(
-        F.col("vec_id").cast("long").alias("vec_id"),
-        "hamming",
-        "dot_e12",
-        "rank",
-    )
+    return _bq_search(sketches, embeddings, qv, k, rerank)
 
 
 def bq_build(embeddings: DataFrame, index_path: str) -> None:
@@ -160,47 +124,15 @@ def bq_topk_prebuilt(
     rerank: int = C.BQ_RERANK,
 ) -> DataFrame:
     """Search phase over a :func:`bq_build` index — the production
-    search-many shape: the query's SRP word is planning metadata (one
-    64-int vector hashed once per query), folded into the sketch scan
-    as a LITERAL so the Hamming ranking is pure codegen arithmetic over
-    (vec_id, srp) — codes-only ReadSchema, zero shuffle before the
-    TakeOrderedAndProject shortlist; only ``rerank`` ids join back to
-    the true vectors for the exact re-rank.  Identical to the inline
-    :func:`bq_topk` by construction (asserted in test_bq)."""
+    search-many shape: the sketch scan reads only (vec_id, srp), zero
+    shuffle before the TakeOrderedAndProject shortlist; only ``rerank``
+    ids join back to the true vectors for the exact re-rank.  Identical
+    to the inline :func:`bq_topk` by construction (asserted in test_bq)."""
     from ..sources import tables
 
-    qword = int(
-        srp_words(embeddings.where(F.col("vec_id") == query_vec_id))
-        .collect()[0]["srp"]
-    )
-    sk = tables.read_table(spark, f"{index_path}/sketches")
-    shortlist = (
-        sk.select(
-            "vec_id",
-            F.bit_count(F.col("srp").bitwiseXOR(F.lit(qword)))
-            .cast("long")
-            .alias("hamming"),
-        )
-        .orderBy(F.asc("hamming"), F.asc("vec_id"))
-        .limit(rerank)
-    )
-    q = embeddings.where(F.col("vec_id") == query_vec_id).select(
-        fixed_point_vec(F.col("embedding")).alias("qv")
-    )
-    cand = embeddings.join(F.broadcast(shortlist), "vec_id").select(
-        "vec_id", "hamming", fixed_point_vec(F.col("embedding")).alias("ev")
-    )
-    hits = cand.crossJoin(F.broadcast(q)).select(
-        "vec_id",
-        "hamming",
-        _dot_vec(F.col("ev"), F.col("qv")).alias("dot_e12"),
-    )
-    return _rank_topk(hits, k).select(
-        F.col("vec_id").cast("long").alias("vec_id"),
-        "hamming",
-        "dot_e12",
-        "rank",
-    )
+    sketches = tables.read_table(spark, f"{index_path}/sketches")
+    qv = _qv_np(embeddings, query_vec_id)
+    return _bq_search(sketches, embeddings, qv, k, rerank)
 
 
 def bq_recall(

@@ -325,25 +325,35 @@ def srp_words(embeddings: DataFrame) -> DataFrame:
     stays exact int64 (|dot| <= 64 * 1e6 * 5e5 << 2^63), so the sketch is
     bit-identical to the expression form and the DuckDB oracle
     (test_curation_ops asserts both equalities)."""
-    from pyspark.sql.functions import pandas_udf
-
     from .search import fixed_point_vec
-
-    planes_t = np.array(
-        C.srp_hyperplanes(C.EMBED_DIM, C.SRP_BITS), dtype=np.int64
-    ).T  # (EMBED_DIM, SRP_BITS)
-    bit_vals = np.int64(1) << np.arange(C.SRP_BITS, dtype=np.int64)
-
-    @pandas_udf("long")
-    def srp_word(ev: pd.Series) -> pd.Series:
-        if ev.empty:
-            return pd.Series([], dtype="int64")
-        E = np.stack(ev.to_numpy()).astype(np.int64, copy=False)
-        bits = (E @ planes_t) >= 0  # (n, SRP_BITS) sign bits
-        return pd.Series((bits * bit_vals).sum(axis=1), dtype="int64")
 
     c = embeddings.select("vec_id", fixed_point_vec(F.col("embedding")).alias("ev"))
     return c.select("vec_id", "ev", srp_word(F.col("ev")).alias("srp"))
+
+
+def srp_word(ev: Column) -> Column:
+    """The SRP word of a fixed-point ``ev`` column, one Arrow batch at a
+    time through :func:`srp_pack`."""
+    from pyspark.sql.functions import pandas_udf
+
+    @pandas_udf("long")
+    def word(ev: pd.Series) -> pd.Series:
+        if ev.empty:
+            return pd.Series([], dtype="int64")
+        E = np.stack(ev.to_numpy()).astype(np.int64, copy=False)
+        return pd.Series(srp_pack(E), dtype="int64")
+
+    return word(ev)
+
+
+def srp_pack(E: np.ndarray) -> np.ndarray:
+    """SRP words of the rows of a fixed-point int64 matrix: the sign bits
+    of ``E @ P.T`` against the contract planes, plane j at bit j."""
+    planes_t = np.array(
+        C.srp_hyperplanes(C.EMBED_DIM, C.SRP_BITS), dtype=np.int64
+    ).T  # (EMBED_DIM, SRP_BITS)
+    bits = (E @ planes_t) >= 0
+    return (bits * (np.int64(1) << np.arange(C.SRP_BITS, dtype=np.int64))).sum(axis=1)
 
 
 def embedding_near_pairs_lsh(

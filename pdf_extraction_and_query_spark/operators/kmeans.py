@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import contract as C
-from .search import fixed_point_vec, _dot_vec
+from .search import _exact_topk, _qv_np, fixed_point_vec
 
 
 def _init_np(embeddings: DataFrame, k: int) -> np.ndarray:
@@ -138,25 +138,11 @@ def ivf_topk_trained(
     cf = cents.astype(np.float64)
     ev = embeddings.select("vec_id", fixed_point_vec(F.col("embedding")).alias("ev"))
     assigned = ev.select("vec_id", "ev", _assign_l2(cents)(F.col("ev")).alias("cent_id"))
-
-    q_rows = (
-        embeddings.where(F.col("vec_id") == query_vec_id)
-        .select(fixed_point_vec(F.col("embedding")).alias("qv"))
-        .collect()
-    )
-    qv = np.array(q_rows[0].qv, dtype=np.float64)
-    d = np.einsum("ij,ij->i", cf, cf) - 2.0 * (cf @ qv)  # exact, see _assign_l2
+    qv = _qv_np(embeddings, query_vec_id)
+    d = np.einsum("ij,ij->i", cf, cf) - 2.0 * (cf @ qv.astype(np.float64))  # exact
     probe_ids = [int(i) for i in np.argsort(d, kind="stable")[:n_probe]]
-
-    spark = embeddings.sparkSession
-    q = spark.createDataFrame([([int(x) for x in qv],)], "qv array<long>")
-    pruned = assigned.where(F.col("cent_id").isin(probe_ids))
-    hits = pruned.crossJoin(F.broadcast(q)).select(
-        "vec_id", _dot_vec(F.col("ev"), F.col("qv")).alias("dot_e12")
-    )
-    from .search import _rank_topk
-
-    return _rank_topk(hits, k)
+    cand = assigned.where(F.col("cent_id").isin(probe_ids)).select("vec_id", "ev")
+    return _exact_topk(cand, qv, k)
 
 
 def cluster_assign(

@@ -15,14 +15,17 @@ Design (100 TB):
     ships a codebook to executors (broadcast constant).
   * encoding is one narrow mapInArrow-style pass: argmin over PQ_K exact
     int64 L2^2 distances per subspace, no shuffle.
-  * inline ADC scoring joins the exploded codes against the broadcast
-    (m, code, part)-LUT and sums per vector: map-side combine collapses the
-    PQ_M rows of a vector before the exchange, so the shuffle carries one
-    (vec_id, adot) row per vector — ids and longs, never vectors.
-  * the prebuilt path (pq_build / pq_topk_prebuilt) scores with a LITERAL
-    LUT folded into the scan projection — zero shuffle until the
-    TakeOrderedAndProject shortlist; the index scan reads (vec_id, codes)
-    only (ReadSchema asserted in test_pq_index).
+  * single-query search (inline, IVFADC, prebuilt and streaming-merged
+    alike) is one :func:`_pq_search` over its own code source: the query
+    LUT folds into the code scan as LITERAL arrays — zero shuffle until
+    the TakeOrderedAndProject shortlist; a prebuilt index scan reads
+    (vec_id, codes) only (ReadSchema asserted in test_pq_index) — then
+    the shared exact re-rank (search._rerank_topk).
+  * batch (``_multi``) ADC scoring joins the exploded codes against the
+    broadcast (q_id, m, code, part)-LUT and sums per vector: map-side
+    combine collapses the PQ_M rows of a vector before the exchange, so
+    the shuffle carries one (q_id, vec_id, adot) row per vector — ids and
+    longs, never vectors.
   * all quantities are exact int64 (|dot| <= 64 * 1e6 * 1e6 < 2^53), so the
     DuckDB oracle matches bit-for-bit.
 """
@@ -35,7 +38,15 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import contract as C
-from .search import _dot, _rank_topk, fixed_point_vec
+from .search import (
+    _centroids,
+    _dot,
+    _ivf_assign,
+    _probe_ids,
+    _qv_np,
+    _rerank_topk,
+    fixed_point_vec,
+)
 
 
 def pq_codebook(embeddings: DataFrame) -> DataFrame:
@@ -60,16 +71,17 @@ def pq_codebook(embeddings: DataFrame) -> DataFrame:
     return out
 
 
-def _codebook_np(embeddings: DataFrame) -> np.ndarray:
-    """Collect the tiny codebook to a (PQ_M, PQ_K, PQ_SUB) int64 array —
-    query-planning metadata (PQ_M*PQ_K*PQ_SUB = 1024 ints), not a data
-    collect; the encode kernel closes over it.
+def _codebook_np(codebook: DataFrame) -> np.ndarray:
+    """THE codebook reader: collect an (m, code, cw) table — the inline
+    :func:`pq_codebook` or a persisted sidecar — to a (PQ_M, PQ_K, PQ_SUB)
+    int64 array; query-planning metadata (PQ_M*PQ_K*PQ_SUB = 1024 ints),
+    not a data collect.
 
-    Completeness is ASSERTED: a corpus with non-contiguous vec_ids would
-    yield fewer than PQ_K codewords, the encoder could then emit codes the
-    LUT/_adc_scores inner join silently drops, and scores would diverge
-    from the oracle — fail fast instead (round-3 ADVICE.md)."""
-    rows = pq_codebook(embeddings).collect()
+    Completeness is ASSERTED: a corpus with non-contiguous vec_ids (or a
+    truncated sidecar) yields fewer than PQ_K codewords, a zero-filled
+    codeword would then score and encode as a real one, and scores would
+    diverge from the oracle — fail fast instead (round-3 ADVICE.md)."""
+    rows = codebook.collect()
     if len(rows) != C.PQ_M * C.PQ_K:
         raise ValueError(
             f"pq codebook incomplete: {len(rows)} rows, expected "
@@ -117,7 +129,7 @@ def pq_assign(embeddings: DataFrame, cb: np.ndarray | None = None) -> DataFrame:
     FROZEN codebook (the streaming insert rule — re-training the codebook
     is a rebuild, not maintenance)."""
     if cb is None:
-        cb = _codebook_np(embeddings)
+        cb = _codebook_np(pq_codebook(embeddings))
     encode = _encode_kernel(cb)
     return embeddings.select(
         "vec_id", fixed_point_vec(F.col("embedding")).alias("ev")
@@ -173,6 +185,27 @@ def _adc_scores(embeddings: DataFrame, queries: DataFrame) -> DataFrame:
     )
 
 
+def _pq_search(
+    codes: DataFrame,
+    vectors: DataFrame,
+    cb: np.ndarray,
+    qv: np.ndarray,
+    k: int,
+    rerank: int,
+) -> DataFrame:
+    """The search tail every single-query PQ/IVFADC entry point shares:
+    the ``rerank`` best (vec_id, codes) rows by literal-LUT ADC score
+    (:func:`_adc_literal_score`; adot_e12 desc, vec_id asc), then the
+    exact re-rank against ``vectors``."""
+    shortlist = (
+        codes.select("vec_id", _adc_literal_score(cb, qv).alias("adot_e12"))
+        .orderBy(F.desc("adot_e12"), F.asc("vec_id"))
+        .limit(rerank)
+    )
+    ranked = _rerank_topk(shortlist, vectors, qv, k)
+    return ranked.select("rank", "vec_id", "adot_e12", "dot_e12")
+
+
 def pq_topk(
     embeddings: DataFrame,
     k: int = C.TOPK,
@@ -184,24 +217,9 @@ def pq_topk(
     fetch ONLY the shortlist's true vectors, exact-dot re-rank to top-k.
     Output (rank, vec_id, adot_e12, dot_e12) — the quantized score is kept
     so the oracle pins the ADC arithmetic, not just the final order."""
-    qs = embeddings.where(F.col("vec_id") == query_vec_id).select(
-        F.col("vec_id").alias("q_id"),
-        fixed_point_vec(F.col("embedding")).alias("qv"),
-    )
-    shortlist = (
-        _adc_scores(embeddings, qs)
-        .orderBy(F.desc("adot_e12"), F.asc("vec_id"))
-        .limit(rerank)
-        .select("vec_id", "adot_e12")
-    )
-    cand = embeddings.select(
-        "vec_id", fixed_point_vec(F.col("embedding")).alias("ev")
-    ).join(F.broadcast(shortlist), "vec_id")
-    hits = cand.crossJoin(F.broadcast(qs.select("qv"))).select(
-        "vec_id", "adot_e12", _dot(F.col("ev"), F.col("qv")).alias("dot_e12")
-    )
-    ranked = _rank_topk(hits, k)
-    return ranked.select("rank", "vec_id", "adot_e12", "dot_e12")
+    cb = _codebook_np(pq_codebook(embeddings))
+    qv = _qv_np(embeddings, query_vec_id)
+    return _pq_search(pq_assign(embeddings, cb), embeddings, cb, qv, k, rerank)
 
 
 def pq_topk_multi(
@@ -221,9 +239,21 @@ def pq_topk_multi(
         .where(F.col("srn") <= rerank)
         .select("q_id", "vec_id", "adot_e12")
     )
-    cand = embeddings.select(
-        "vec_id", fixed_point_vec(F.col("embedding")).alias("ev")
-    ).join(F.broadcast(shortlist), "vec_id")
+    return _rerank_multi(shortlist, embeddings, qs, k)
+
+
+def _rerank_multi(
+    shortlist: DataFrame, embeddings: DataFrame, qs: DataFrame, k: int
+) -> DataFrame:
+    """Per-query exact re-rank of the (q_id, vec_id, adot_e12) shortlists:
+    joined to the vectors before their fixed-point conversion, one q_id
+    window."""
+    cand = embeddings.join(F.broadcast(shortlist), "vec_id").select(
+        "q_id",
+        "vec_id",
+        "adot_e12",
+        fixed_point_vec(F.col("embedding")).alias("ev"),
+    )
     hits = cand.join(F.broadcast(qs), "q_id").select(
         "q_id", "vec_id", "adot_e12", _dot(F.col("ev"), F.col("qv")).alias("dot_e12")
     )
@@ -264,23 +294,18 @@ def pq_recall(
     )
 
 
-def _adc_literal_score(lut: np.ndarray) -> "F.Column":
-    """ADC score column over a ``codes`` array column with the query LUT
-    folded in as LITERAL arrays — a pure codegen projection (PQ_M
-    element_at lookups + adds), zero shuffle; shared by the prebuilt and
-    streaming-merged search paths."""
+def _adc_literal_score(cb: np.ndarray, qv: np.ndarray) -> "F.Column":
+    """THE PQ shortlist scorer: ADC score column over a ``codes`` array
+    column with the query LUT — the (PQ_M, PQ_K) exact int64 partial dots
+    of ``qv`` against every codeword — folded in as LITERAL arrays: a pure
+    codegen projection (PQ_M element_at lookups + adds), zero shuffle."""
+    lut = np.einsum("mks,ms->mk", cb, qv.reshape(C.PQ_M, C.PQ_SUB))
     adot = None
     for m in range(C.PQ_M):
         lut_m = F.array(*[F.lit(int(v)).cast("long") for v in lut[m]])
         term = F.element_at(lut_m, F.element_at(F.col("codes"), m + 1) + 1)
         adot = term if adot is None else adot + term
     return adot.cast("long")
-
-
-def query_lut(cb: np.ndarray, qv: np.ndarray) -> np.ndarray:
-    """(PQ_M, PQ_K) exact int64 partial dots of the query against every
-    codeword — the per-query planning table (1024 ints)."""
-    return np.einsum("mks,ms->mk", cb, qv.reshape(C.PQ_M, C.PQ_SUB))
 
 
 def pq_build(embeddings: DataFrame, index_path: str) -> None:
@@ -306,48 +331,21 @@ def ivfpq_topk(
     layout, composed from this repo's two halves: the coarse quantizer
     (IVF nearest-centroid assignment) prunes to the ``n_probe`` probed
     lists, PQ codes score the survivors (asymmetric inner product against
-    the broadcast LUT), and only the ``rerank`` shortlist pays the exact
+    the literal query LUT), and only the ``rerank`` shortlist pays the exact
     dot. At 10^12 vectors the scan touches n_probe/n_lists of the corpus
     AND reads 8 small ints per survivor instead of the 512-byte vector —
     the two savings multiply. Declarative inline form (oracle-paired);
     :func:`ivfpq_build`/:func:`ivfpq_topk_prebuilt` are the persisted
     shape where the probed lists are partition directories."""
-    from .search import _centroids, _ivf_assign
-
-    assigned = _ivf_assign(embeddings, n_centroids)  # (vec_id, ev, cent_id)
-    qs = embeddings.where(F.col("vec_id") == query_vec_id).select(
-        F.col("vec_id").alias("q_id"),
-        fixed_point_vec(F.col("embedding")).alias("qv"),
+    qv = _qv_np(embeddings, query_vec_id)
+    probe_ids = _probe_ids(_centroids(embeddings, n_centroids), qv, n_probe)
+    cb = _codebook_np(pq_codebook(embeddings))
+    codes = (
+        _ivf_assign(embeddings, n_centroids)
+        .where(F.col("cent_id").isin(probe_ids))
+        .select("vec_id", _encode_kernel(cb)(F.col("ev")).alias("codes"))
     )
-    probes = (
-        _centroids(embeddings, n_centroids)
-        .crossJoin(F.broadcast(qs.select("qv")))
-        .select("cent_id", _dot(F.col("cv"), F.col("qv")).alias("qdot"))
-        .orderBy(F.desc("qdot"), F.asc("cent_id"))
-        .limit(n_probe)
-        .select("cent_id")
-    )
-    pruned = assigned.join(F.broadcast(probes), "cent_id")
-    cb = _codebook_np(embeddings)
-    coded = pruned.select("vec_id", _encode_kernel(cb)(F.col("ev")).alias("codes"))
-    ex = coded.select("vec_id", F.posexplode("codes").alias("m", "code"))
-    adot = (
-        ex.join(F.broadcast(_lut(embeddings, qs)), ["m", "code"])
-        .groupBy("vec_id")
-        .agg(F.sum("part").cast("long").alias("adot_e12"))
-    )
-    shortlist = (
-        adot.orderBy(F.desc("adot_e12"), F.asc("vec_id"))
-        .limit(rerank)
-        .select("vec_id", "adot_e12")
-    )
-    cand = embeddings.select(
-        "vec_id", fixed_point_vec(F.col("embedding")).alias("ev")
-    ).join(F.broadcast(shortlist), "vec_id")
-    hits = cand.crossJoin(F.broadcast(qs.select("qv"))).select(
-        "vec_id", "adot_e12", _dot(F.col("ev"), F.col("qv")).alias("dot_e12")
-    )
-    return _rank_topk(hits, k).select("rank", "vec_id", "adot_e12", "dot_e12")
+    return _pq_search(codes, embeddings, cb, qv, k, rerank)
 
 
 def ivfpq_topk_multi(
@@ -367,8 +365,6 @@ def ivfpq_topk_multi(
     rows before the exchange), and only each query's ``rerank`` shortlist
     pays the exact dot.  Two q_id-keyed row_number shuffles — the
     pq_topk_multi shape with the IVF pruning in front."""
-    from .search import _centroids, _ivf_assign
-
     assigned = _ivf_assign(embeddings, n_centroids)  # (vec_id, ev, cent_id)
     qs = _queries(embeddings, n_queries)
     wp = Window.partitionBy("q_id").orderBy(F.desc("qdot"), F.asc("cent_id"))
@@ -380,7 +376,7 @@ def ivfpq_topk_multi(
         .where(F.col("prank") <= n_probe)
         .select("q_id", "cent_id")
     )
-    cb = _codebook_np(embeddings)
+    cb = _codebook_np(pq_codebook(embeddings))
     # narrow encode of the assignment's ev (no shuffle), then fan each
     # vector's codes out to the queries probing its list
     coded = assigned.select(
@@ -399,18 +395,7 @@ def ivfpq_topk_multi(
         .where(F.col("srn") <= rerank)
         .select("q_id", "vec_id", "adot_e12")
     )
-    cand = embeddings.select(
-        "vec_id", fixed_point_vec(F.col("embedding")).alias("ev")
-    ).join(F.broadcast(shortlist), "vec_id")
-    hits = cand.join(F.broadcast(qs), "q_id").select(
-        "q_id", "vec_id", "adot_e12", _dot(F.col("ev"), F.col("qv")).alias("dot_e12")
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("dot_e12"), F.asc("vec_id"))
-    return (
-        hits.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-        .select("q_id", "vec_id", "rank", "adot_e12", "dot_e12")
-    )
+    return _rerank_multi(shortlist, embeddings, qs, k)
 
 
 def ivfpq_build(
@@ -424,9 +409,8 @@ def ivfpq_build(
     codebook and frozen-centroid sidecars. No join: coding runs as a
     narrow kernel over the assignment's ev before it is dropped."""
     from ..sources import tables
-    from .search import _centroids, _ivf_assign
 
-    cb = _codebook_np(embeddings)
+    cb = _codebook_np(pq_codebook(embeddings))
     assigned = _ivf_assign(embeddings, n_centroids)
     idx = assigned.select(
         "vec_id", "cent_id", _encode_kernel(cb)(F.col("ev")).alias("codes")
@@ -458,43 +442,14 @@ def ivfpq_topk_prebuilt(
     # sidecars go through the table shim like the codes table: ivfpq_build
     # writes them via replace_table, so a configured SPARK_GRAFT_CATALOG
     # must route the reads to the same storage (round-3 ADVICE.md)
+    qv = _qv_np(embeddings, query_vec_id)
     cents = tables.read_table(spark, f"{index_path}/_centroids")
-    q = embeddings.where(F.col("vec_id") == query_vec_id).select(
-        fixed_point_vec(F.col("embedding")).alias("qv")
-    )
-    probe_rows = (
-        cents.crossJoin(F.broadcast(q))
-        .select("cent_id", _dot(F.col("cv"), F.col("qv")).alias("qdot"))
-        .orderBy(F.desc("qdot"), F.asc("cent_id"))
-        .limit(n_probe)
-        .collect()
-    )
-    probe_ids = [r["cent_id"] for r in probe_rows]
-    cb = np.zeros((C.PQ_M, C.PQ_K, C.PQ_SUB), dtype=np.int64)
-    for r in tables.read_table(spark, f"{index_path}/codebook").collect():
-        cb[r["m"], r["code"], :] = r["cw"]
-    qv = np.array(
-        embeddings.where(F.col("vec_id") == query_vec_id)
-        .select(fixed_point_vec(F.col("embedding")).alias("qv"))
-        .collect()[0]["qv"],
-        dtype=np.int64,
-    )
-    lut = query_lut(cb, qv)
+    probe_ids = _probe_ids(cents, qv, n_probe)
+    cb = _codebook_np(tables.read_table(spark, f"{index_path}/codebook"))
     # the streaming IVFADC maintainer folds into versions of this table
     codes, _ = tables.read_versioned(spark, f"{index_path}/codes")
     codes = codes.where(F.col("cent_id").isin(probe_ids))
-    shortlist = (
-        codes.select("vec_id", _adc_literal_score(lut).alias("adot_e12"))
-        .orderBy(F.desc("adot_e12"), F.asc("vec_id"))
-        .limit(rerank)
-    )
-    cand = embeddings.select(
-        "vec_id", fixed_point_vec(F.col("embedding")).alias("ev")
-    ).join(F.broadcast(shortlist), "vec_id")
-    hits = cand.crossJoin(F.broadcast(q)).select(
-        "vec_id", "adot_e12", _dot(F.col("ev"), F.col("qv")).alias("dot_e12")
-    )
-    return _rank_topk(hits, k).select("rank", "vec_id", "adot_e12", "dot_e12")
+    return _pq_search(codes, embeddings, cb, qv, k, rerank)
 
 
 def pq_topk_prebuilt(
@@ -515,30 +470,7 @@ def pq_topk_prebuilt(
     inline :func:`pq_topk` by construction (asserted in test_pq_index)."""
     from ..sources import tables
 
-    cb = np.zeros((C.PQ_M, C.PQ_K, C.PQ_SUB), dtype=np.int64)
-    for r in tables.read_table(spark, f"{index_path}/codebook").collect():
-        cb[r["m"], r["code"], :] = r["cw"]
-    qrow = (
-        embeddings.where(F.col("vec_id") == query_vec_id)
-        .select(fixed_point_vec(F.col("embedding")).alias("qv"))
-        .collect()
-    )
-    qv = np.array(qrow[0]["qv"], dtype=np.int64)
-    lut = query_lut(cb, qv)
-
+    cb = _codebook_np(tables.read_table(spark, f"{index_path}/codebook"))
+    qv = _qv_np(embeddings, query_vec_id)
     codes = tables.read_table(spark, f"{index_path}/codes")
-    shortlist = (
-        codes.select("vec_id", _adc_literal_score(lut).alias("adot_e12"))
-        .orderBy(F.desc("adot_e12"), F.asc("vec_id"))
-        .limit(rerank)
-    )
-    q = embeddings.where(F.col("vec_id") == query_vec_id).select(
-        fixed_point_vec(F.col("embedding")).alias("qv")
-    )
-    cand = embeddings.select(
-        "vec_id", fixed_point_vec(F.col("embedding")).alias("ev")
-    ).join(F.broadcast(shortlist), "vec_id")
-    hits = cand.crossJoin(F.broadcast(q)).select(
-        "vec_id", "adot_e12", _dot(F.col("ev"), F.col("qv")).alias("dot_e12")
-    )
-    return _rank_topk(hits, k).select("rank", "vec_id", "adot_e12", "dot_e12")
+    return _pq_search(codes, embeddings, cb, qv, k, rerank)

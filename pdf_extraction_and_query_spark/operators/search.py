@@ -365,6 +365,71 @@ def paginate_documents(
     )
 
 
+def _qv_np(
+    vectors: DataFrame, query_vec_id: int, ev: Column | None = None
+) -> np.ndarray:
+    """The query's fixed-point vector, collected as int64 — 64 ints of
+    query-planning metadata (the codebook/probe-list precedent). ``ev``
+    reads it from an already fixed-point column instead of converting
+    ``embedding`` (an IVF index row carries ``ev``)."""
+    if ev is None:
+        ev = fixed_point_vec(F.col("embedding"))
+    rows = (
+        vectors.where(F.col("vec_id") == query_vec_id)
+        .select(ev.alias("qv"))
+        .collect()
+    )
+    if not rows:
+        raise ValueError(f"query vec_id {query_vec_id} is not in the vectors")
+    return np.array(rows[0]["qv"], dtype=np.int64)
+
+
+def _lit_vec(qv: np.ndarray) -> Column:
+    return F.array(*[F.lit(int(x)).cast("long") for x in qv])
+
+
+def _probe_ids(cents: DataFrame, qv: np.ndarray, n_probe: int) -> list[int]:
+    """The IVF probe rule every single-query IVF search shares: the
+    ``n_probe`` centroids of ``cents`` = (cent_id, cv) nearest the query
+    by (qdot desc, cent_id asc). Collected — n_probe ints of planning
+    metadata — so the probed lists reach a partitioned index scan as
+    PartitionFilters."""
+    rows = (
+        cents.select("cent_id", _dot(F.col("cv"), _lit_vec(qv)).alias("qdot"))
+        .orderBy(F.desc("qdot"), F.asc("cent_id"))
+        .limit(n_probe)
+        .collect()
+    )
+    return [r["cent_id"] for r in rows]
+
+
+def _exact_topk(
+    cand: DataFrame, qv: np.ndarray, k: int, dot=_dot_vec
+) -> DataFrame:
+    """Exact top-k of the (vec_id, ev, ...) candidates against the query:
+    every column but ``ev`` is carried, ``dot_e12`` and ``rank`` appended.
+    ``dot`` is the Arrow :func:`_dot_vec` for probed lists and the
+    expression :func:`_dot` for an R-row shortlist."""
+    keep = [c for c in cand.columns if c != "ev"]
+    scored = cand.select(*keep, dot(F.col("ev"), _lit_vec(qv)).alias("dot_e12"))
+    return _rank_topk(scored, k)
+
+
+def _rerank_topk(
+    shortlist: DataFrame, vectors: DataFrame, qv: np.ndarray, k: int
+) -> DataFrame:
+    """The exact re-rank that ends every quantized search (BQ, SQ, PQ,
+    IVFADC; inline, prebuilt and merged): the R-row ``shortlist`` (vec_id
+    plus its quantized score) joins the primary (vec_id, embedding) table
+    by broadcast FIRST, and only the survivors are converted to fixed
+    point and dotted against the query — a ``fixed_point_vec`` below the
+    join would run on every corpus row."""
+    cand = vectors.join(F.broadcast(shortlist), "vec_id").select(
+        *shortlist.columns, fixed_point_vec(F.col("embedding")).alias("ev")
+    )
+    return _exact_topk(cand, qv, k, _dot)
+
+
 def ivf_topk(
     embeddings: DataFrame,
     k: int = C.TOPK,
@@ -380,25 +445,11 @@ def ivf_topk(
     of the corpus from the scan; here centroids are the first
     ``n_centroids`` vectors (deterministic stand-in for trained k-means).
     Integer fixed-point scoring keeps it oracle-exact."""
+    qv = _qv_np(embeddings, query_vec_id)
+    probe_ids = _probe_ids(_centroids(embeddings, n_centroids), qv, n_probe)
     assigned = _ivf_assign(embeddings, n_centroids)
-    # probe list: clusters nearest the query vector
-    q = (
-        embeddings.where(F.col("vec_id") == query_vec_id)
-        .select(fixed_point_vec(F.col("embedding")).alias("qv"))
-    )
-    probes = (
-        _centroids(embeddings, n_centroids)
-        .crossJoin(F.broadcast(q))
-        .select("cent_id", _dot(F.col("cv"), F.col("qv")).alias("qdot"))
-        .orderBy(F.desc("qdot"), F.asc("cent_id"))
-        .limit(n_probe)
-        .select("cent_id")
-    )
-    pruned = assigned.join(F.broadcast(probes), "cent_id")
-    hits = pruned.crossJoin(F.broadcast(q)).select(
-        "vec_id", _dot_vec(F.col("ev"), F.col("qv")).alias("dot_e12")
-    )
-    return _rank_topk(hits, k)
+    cand = assigned.where(F.col("cent_id").isin(probe_ids)).select("vec_id", "ev")
+    return _exact_topk(cand, qv, k)
 
 
 def ivf_topk_multi(
@@ -506,31 +557,16 @@ def ivf_topk_prebuilt(
     n_probe: int = C.IVF_PROBE,
 ) -> DataFrame:
     """Search phase over an :func:`ivf_build` index: pick the ``n_probe``
-    centroids nearest the query (tiny driver-side plan step — n_probe ints
-    of query-planning metadata, not a data collect), scan ONLY those
-    partitions, exact-score the survivors, TakeOrderedAndProject. Results
-    are identical to :func:`ivf_topk` by construction (same assignment,
-    same probe rule, same fixed-point scoring)."""
+    centroids nearest the query, scan ONLY those partitions, exact-score
+    the survivors, TakeOrderedAndProject. Results are identical to
+    :func:`ivf_topk` by construction (same assignment, same probe rule,
+    same fixed-point scoring)."""
     from ..sources import tables
 
-    q = (
-        embeddings.where(F.col("vec_id") == query_vec_id)
-        .select(fixed_point_vec(F.col("embedding")).alias("qv"))
-    )
-    probe_rows = (
-        _centroids(embeddings, n_centroids)
-        .crossJoin(F.broadcast(q))
-        .select("cent_id", _dot(F.col("cv"), F.col("qv")).alias("qdot"))
-        .orderBy(F.desc("qdot"), F.asc("cent_id"))
-        .limit(n_probe)
-        .collect()
-    )
-    probe_ids = [r["cent_id"] for r in probe_rows]
+    qv = _qv_np(embeddings, query_vec_id)
+    probe_ids = _probe_ids(_centroids(embeddings, n_centroids), qv, n_probe)
     idx = tables.read_table(spark, index_path).where(F.col("cent_id").isin(probe_ids))
-    hits = idx.crossJoin(F.broadcast(q)).select(
-        "vec_id", _dot_vec(F.col("ev"), F.col("qv")).alias("dot_e12")
-    )
-    return _rank_topk(hits, k)
+    return _exact_topk(idx.select("vec_id", "ev"), qv, k)
 
 
 def vector_topk_filtered(

@@ -24,11 +24,11 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import contract as C
-from .search import _dot_vec, _rank_topk, fixed_point_vec
+from .search import _qv_np, _rerank_topk, fixed_point_vec
 
 
 def sq_bounds_np(embeddings: DataFrame) -> tuple[np.ndarray, np.ndarray]:
@@ -91,17 +91,14 @@ def sq_codes(embeddings: DataFrame) -> DataFrame:
     )
 
 
-def _qv_np(embeddings: DataFrame, query_vec_id: int) -> np.ndarray:
-    rows = (
-        embeddings.where(F.col("vec_id") == query_vec_id)
-        .select(fixed_point_vec(F.col("embedding")).alias("qv"))
-        .collect()
-    )
-    return np.array(rows[0].qv, dtype=np.int64)
-
-
-def _score_kernel(w: np.ndarray, b: int):
+def _score_kernel(qv: np.ndarray, bounds: tuple[np.ndarray, np.ndarray]):
+    """Arrow kernel over a ``codes`` column: the asymmetric score
+    ``codes @ w + b`` = SQ_LEVELS * <qv, recon(x)>, exact int64."""
     from pyspark.sql.functions import pandas_udf
+
+    mn, mx = bounds
+    w = qv * (mx - mn)                      # |w_d| <= 2e12
+    b = int((C.SQ_LEVELS * qv * mn).sum())  # exact python int
 
     @pandas_udf("long")
     def score(codes: pd.Series) -> pd.Series:
@@ -111,6 +108,27 @@ def _score_kernel(w: np.ndarray, b: int):
         return pd.Series(Q @ w + b)
 
     return score
+
+
+def _sq_search(
+    codes: DataFrame,
+    vectors: DataFrame,
+    qv: np.ndarray,
+    bounds: tuple[np.ndarray, np.ndarray],
+    k: int,
+    rerank: int,
+) -> DataFrame:
+    """The search tail every SQ entry point shares: the ``rerank`` best
+    (vec_id, codes) rows by :func:`_score_kernel` (adot_sq desc, vec_id
+    asc), then the exact re-rank against ``vectors``.  Output (vec_id,
+    adot_sq, dot_e12, rank)."""
+    score = _score_kernel(qv, bounds)
+    shortlist = (
+        codes.select("vec_id", score(F.col("codes")).alias("adot_sq"))
+        .orderBy(F.desc("adot_sq"), F.asc("vec_id"))
+        .limit(rerank)
+    )
+    return _rerank_topk(shortlist, vectors, qv, k)
 
 
 def sq_topk(
@@ -125,28 +143,13 @@ def sq_topk(
     via TakeOrderedAndProject, exact dot re-rank of the shortlist only.
     Pass ``bounds`` to search under a FROZEN quantizer (the streaming
     maintainer's contract — streaming/sq.py)."""
-    mn, mx = bounds if bounds is not None else sq_bounds_np(embeddings)
+    if bounds is None:
+        bounds = sq_bounds_np(embeddings)
     qv = _qv_np(embeddings, query_vec_id)
-    w = qv * (mx - mn)                      # |w_d| <= 2e12
-    b = int((C.SQ_LEVELS * qv * mn).sum())  # exact python int
-    scored = sq_assign(embeddings, (mn, mx)).select(
-        "vec_id", _score_kernel(w, b)(F.col("codes")).alias("adot_sq")
+    codes = sq_assign(embeddings, bounds)
+    return _sq_search(codes, embeddings, qv, bounds, k, rerank).select(
+        "vec_id", "dot_e12", "rank"
     )
-    shortlist = (
-        scored.orderBy(F.desc("adot_sq"), F.asc("vec_id"))
-        .limit(rerank)
-        .select("vec_id")
-    )
-    q = embeddings.sparkSession.createDataFrame(
-        [([int(x) for x in qv],)], "qv array<long>"
-    )
-    cand = embeddings.join(F.broadcast(shortlist), "vec_id").select(
-        "vec_id", fixed_point_vec(F.col("embedding")).alias("ev")
-    )
-    hits = cand.crossJoin(F.broadcast(q)).select(
-        "vec_id", _dot_vec(F.col("ev"), F.col("qv")).alias("dot_e12")
-    )
-    return _rank_topk(hits, k)
 
 
 def sq_recall(

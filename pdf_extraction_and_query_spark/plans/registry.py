@@ -1215,13 +1215,15 @@ def _bpe_apply_sql(col: str) -> str:
 
 
 def _srp_word_sql() -> str:
-    """Twin of dedup.srp_words: SRP_BITS sign bits packed into a bigint."""
+    """Twin of dedup.srp_words: SRP_BITS sign bits packed into a bigint.
+    Each plane literal is zipped with ``ev`` once per row; indexing the
+    literal inside a per-element lambda rebuilds it for every element."""
     terms = []
     for j, hp in enumerate(C.srp_hyperplanes(C.EMBED_DIM, C.SRP_BITS)):
-        arr = "[" + ", ".join(str(v) for v in hp) + "]"
+        arr = "[" + ", ".join(str(v) for v in hp) + "]::bigint[]"
         dot = (
-            f"list_sum(list_transform(generate_series(1, {C.EMBED_DIM}), "
-            f"i -> ev[i] * ({arr})[i]))"
+            f"list_sum(list_transform(list_zip(ev, {arr}), "
+            f"p -> p[1] * p[2]))"
         )
         terms.append(f"(CASE WHEN {dot} >= 0 THEN {1 << j} ELSE 0 END)")
     return "cast(" + " + ".join(terms) + " as bigint)"

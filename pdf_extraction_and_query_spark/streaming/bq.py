@@ -21,12 +21,10 @@ from __future__ import annotations
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from .. import contract as C
-from ..operators.bq import bq_sketches
-from ..operators.dedup import srp_words
-from ..operators.search import _dot_vec, _rank_topk, fixed_point_vec
+from ..operators.bq import _bq_search, bq_sketches
+from ..operators.search import _qv_np
 from . import deltaindex as DX
 
 _COLS = ["vec_id", "srp"]
@@ -60,38 +58,8 @@ def bq_topk_merged(
     re-rank against ``vectors`` — the primary (vec_id, embedding) table,
     which must cover every indexed vector.  Row-identical to the batch
     :func:`~..operators.bq.bq_topk` over the same corpus."""
-    sk = DX.read_merged(spark, root, _COLS)
-    qword = int(
-        srp_words(vectors.where(F.col("vec_id") == query_vec_id))
-        .collect()[0]["srp"]
-    )
-    shortlist = (
-        sk.select(
-            "vec_id",
-            F.bit_count(F.col("srp").bitwiseXOR(F.lit(qword)))
-            .cast("long")
-            .alias("hamming"),
-        )
-        .orderBy(F.asc("hamming"), F.asc("vec_id"))
-        .limit(rerank)
-    )
-    q = vectors.where(F.col("vec_id") == query_vec_id).select(
-        fixed_point_vec(F.col("embedding")).alias("qv")
-    )
-    cand = vectors.join(F.broadcast(shortlist), "vec_id").select(
-        "vec_id", "hamming", fixed_point_vec(F.col("embedding")).alias("ev")
-    )
-    hits = cand.crossJoin(F.broadcast(q)).select(
-        "vec_id",
-        "hamming",
-        _dot_vec(F.col("ev"), F.col("qv")).alias("dot_e12"),
-    )
-    return _rank_topk(hits, k).select(
-        F.col("vec_id").cast("long").alias("vec_id"),
-        "hamming",
-        "dot_e12",
-        "rank",
-    )
+    sketches = DX.read_merged(spark, root, _COLS)
+    return _bq_search(sketches, vectors, _qv_np(vectors, query_vec_id), k, rerank)
 
 
 def bq_stream_compact(spark: SparkSession, root: str) -> None:

@@ -25,9 +25,9 @@ from pyspark.sql import functions as F
 from .. import contract as C
 from ..operators.search import (
     _centroids,
-    _dot,
-    _dot_vec,
-    _rank_topk,
+    _exact_topk,
+    _probe_ids,
+    _qv_np,
     assign_to_centroids,
     fixed_point_vec,
 )
@@ -75,22 +75,11 @@ def ivf_topk_merged(
     vector is looked up in the index itself (base ∪ delta — a streamed-in
     vector can be the query)."""
     allv = DX.read_merged(spark, root, _COLS)
-    q = allv.where(F.col("vec_id") == query_vec_id).select(
-        F.col("ev").alias("qv")
-    )
+    qv = _qv_np(allv, query_vec_id, F.col("ev"))
     cents = tables.read_table(spark, f"{root}/_centroids")
-    probes = (
-        cents.crossJoin(F.broadcast(q))
-        .select("cent_id", _dot(F.col("cv"), F.col("qv")).alias("qdot"))
-        .orderBy(F.desc("qdot"), F.asc("cent_id"))
-        .limit(n_probe)
-        .select("cent_id")
-    )
-    pruned = allv.join(F.broadcast(probes), "cent_id")
-    hits = pruned.crossJoin(F.broadcast(q)).select(
-        "vec_id", _dot_vec(F.col("ev"), F.col("qv")).alias("dot_e12")
-    )
-    return _rank_topk(hits, k)
+    probe_ids = _probe_ids(cents, qv, n_probe)
+    cand = allv.where(F.col("cent_id").isin(probe_ids)).select("vec_id", "ev")
+    return _exact_topk(cand, qv, k)
 
 
 def ivf_compact(spark: SparkSession, root: str) -> None:

@@ -31,13 +31,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import contract as C
-from ..operators.pq import (
-    _adc_literal_score,
-    pq_assign,
-    pq_codebook,
-    query_lut,
-)
-from ..operators.search import _dot, _rank_topk, fixed_point_vec
+from ..operators.pq import _codebook_np, _pq_search, pq_assign, pq_codebook
+from ..operators.search import _probe_ids, _qv_np, fixed_point_vec
 from ..sources import tables
 from . import deltaindex as DX
 
@@ -60,10 +55,7 @@ def pq_stream_init(embeddings: DataFrame, root: str) -> None:
 def _read_codebook(
     spark: SparkSession, root: str, name: str = "_codebook"
 ) -> np.ndarray:
-    cb = np.zeros((C.PQ_M, C.PQ_K, C.PQ_SUB), dtype=np.int64)
-    for r in tables.read_table(spark, f"{root}/{name}").collect():
-        cb[r["m"], r["code"], :] = r["cw"]
-    return cb
+    return _codebook_np(tables.read_table(spark, f"{root}/{name}"))
 
 
 def make_pq_batch_processor(root: str) -> Callable[[DataFrame, int], None]:
@@ -91,27 +83,8 @@ def pq_topk_merged(
     that feeds the index deltas appends the raw rows there)."""
     codes = DX.read_merged(spark, root, _COLS)
     cb = _read_codebook(spark, root)
-    qrow = (
-        vectors.where(F.col("vec_id") == query_vec_id)
-        .select(fixed_point_vec(F.col("embedding")).alias("qv"))
-        .collect()
-    )
-    lut = query_lut(cb, np.array(qrow[0]["qv"], dtype=np.int64))
-    shortlist = (
-        codes.select("vec_id", _adc_literal_score(lut).alias("adot_e12"))
-        .orderBy(F.desc("adot_e12"), F.asc("vec_id"))
-        .limit(rerank)
-    )
-    q = vectors.where(F.col("vec_id") == query_vec_id).select(
-        fixed_point_vec(F.col("embedding")).alias("qv")
-    )
-    cand = vectors.select(
-        "vec_id", fixed_point_vec(F.col("embedding")).alias("ev")
-    ).join(F.broadcast(shortlist), "vec_id")
-    hits = cand.crossJoin(F.broadcast(q)).select(
-        "vec_id", "adot_e12", _dot(F.col("ev"), F.col("qv")).alias("dot_e12")
-    )
-    return _rank_topk(hits, k).select("rank", "vec_id", "adot_e12", "dot_e12")
+    qv = _qv_np(vectors, query_vec_id)
+    return _pq_search(codes, vectors, cb, qv, k, rerank)
 
 
 def ivfpq_stream_init(embeddings: DataFrame, root: str) -> None:
@@ -158,38 +131,16 @@ def ivfpq_topk_merged(
     """IVFADC top-k over base ∪ deltas: probe prune on cent_id on BOTH
     sides, literal-LUT ADC over the surviving codes, exact re-rank against
     the primary ``vectors`` table."""
+    qv = _qv_np(vectors, query_vec_id)
     cents = tables.read_table(spark, f"{root}/_centroids")
-    q = vectors.where(F.col("vec_id") == query_vec_id).select(
-        fixed_point_vec(F.col("embedding")).alias("qv")
-    )
-    probe_rows = (
-        cents.crossJoin(F.broadcast(q))
-        .select("cent_id", _dot(F.col("cv"), F.col("qv")).alias("qdot"))
-        .orderBy(F.desc("qdot"), F.asc("cent_id"))
-        .limit(n_probe)
-        .collect()
-    )
-    probe_ids = [r["cent_id"] for r in probe_rows]
+    probe_ids = _probe_ids(cents, qv, n_probe)
     codes = (
         DX.read_merged(spark, _ivfpq(root), _IVFPQ_COLS)
         .where(F.col("cent_id").isin(probe_ids))
         .select("vec_id", "codes")
     )
     cb = _read_codebook(spark, root, name="codebook")
-    qv = np.array(q.collect()[0]["qv"], dtype=np.int64)
-    lut = query_lut(cb, qv)
-    shortlist = (
-        codes.select("vec_id", _adc_literal_score(lut).alias("adot_e12"))
-        .orderBy(F.desc("adot_e12"), F.asc("vec_id"))
-        .limit(rerank)
-    )
-    cand = vectors.select(
-        "vec_id", fixed_point_vec(F.col("embedding")).alias("ev")
-    ).join(F.broadcast(shortlist), "vec_id")
-    hits = cand.crossJoin(F.broadcast(q)).select(
-        "vec_id", "adot_e12", _dot(F.col("ev"), F.col("qv")).alias("dot_e12")
-    )
-    return _rank_topk(hits, k).select("rank", "vec_id", "adot_e12", "dot_e12")
+    return _pq_search(codes, vectors, cb, qv, k, rerank)
 
 
 def ivfpq_compact(spark: SparkSession, root: str) -> None:

@@ -26,11 +26,10 @@ from typing import Callable
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from .. import contract as C
-from ..operators.search import _dot, _rank_topk, fixed_point_vec
-from ..operators.sq import _qv_np, _score_kernel, sq_assign, sq_bounds_np
+from ..operators.search import _qv_np
+from ..operators.sq import _sq_search, sq_assign, sq_bounds_np
 from ..sources import tables
 from . import deltaindex as DX
 
@@ -81,23 +80,9 @@ def sq_topk_merged(
     re-rank against ``vectors`` — the primary (vec_id, embedding) table,
     which must cover every indexed vector."""
     codes = DX.read_merged(spark, root, _COLS)
-    mn, mx = _read_bounds(spark, root)
     qv = _qv_np(vectors, query_vec_id)
-    w = qv * (mx - mn)
-    b = int((C.SQ_LEVELS * qv * mn).sum())
-    shortlist = (
-        codes.select("vec_id", _score_kernel(w, b)(F.col("codes")).alias("adot_sq"))
-        .orderBy(F.desc("adot_sq"), F.asc("vec_id"))
-        .limit(rerank)
-    )
-    q = spark.createDataFrame([([int(x) for x in qv],)], "qv array<long>")
-    cand = vectors.select(
-        "vec_id", fixed_point_vec(F.col("embedding")).alias("ev")
-    ).join(F.broadcast(shortlist), "vec_id")
-    hits = cand.crossJoin(F.broadcast(q)).select(
-        "vec_id", "adot_sq", _dot(F.col("ev"), F.col("qv")).alias("dot_e12")
-    )
-    return _rank_topk(hits, k).select("rank", "vec_id", "adot_sq", "dot_e12")
+    out = _sq_search(codes, vectors, qv, _read_bounds(spark, root), k, rerank)
+    return out.select("rank", "vec_id", "adot_sq", "dot_e12")
 
 
 def sq_compact(spark: SparkSession, root: str) -> None:

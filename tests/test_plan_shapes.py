@@ -504,3 +504,132 @@ def test_banded_windows_live_in_prefix_sums():
         if band_window.search(py.read_text())
     }
     assert hits == {"operators/util.py"}, hits
+
+
+def _children(lines, i):
+    """Line indices of the direct children of node ``i`` in a physical
+    plan's tree string (a child sits one indent step, 3 chars, deeper)."""
+
+    def depth(line):
+        return len(line) - len(line.lstrip(" :+-"))
+
+    d, kids = depth(lines[i]), []
+    for j in range(i + 1, len(lines)):
+        if depth(lines[j]) <= d:
+            break
+        if depth(lines[j]) == d + 3:
+            kids.append(j)
+    return kids
+
+
+def _subtree(lines, i):
+    kids = _children(lines, i)
+    out = [lines[i]]
+    for j in kids:
+        out += _subtree(lines, j)
+    return out
+
+
+def _converts_before_shortlist_join(df):
+    """Whether a ``fixed_point_vec`` Project over ``embedding`` sits on
+    the vector side of the broadcast join that fetches a quantized
+    shortlist (build side: a TakeOrderedAndProject, or the ``srn``
+    window of the batch forms)."""
+    lines = df._jdf.queryExecution().executedPlan().toString().splitlines()
+    for i, line in enumerate(lines):
+        if "BroadcastHashJoin [vec_id#" not in line:
+            continue
+        left, right = _children(lines, i)
+        build, probe = (right, left) if "BuildRight" in line else (left, right)
+        if not any(
+            "TakeOrderedAndProject" in s or "srn#" in s
+            for s in _subtree(lines, build)
+        ):
+            continue
+        if any(
+            "Project" in s and "transform(slice(embedding" in s
+            for s in _subtree(lines, probe)
+        ):
+            return True
+    return False
+
+
+def test_shortlists_join_before_converting_vectors(spark, tmp_path):
+    """Every quantized search (BQ, SQ, PQ, IVFADC; inline, prebuilt,
+    streaming-merged and batch) fetches its R-row shortlist's vectors by
+    broadcast join BEFORE the interpreted fixed-point conversion — a
+    conversion below the join runs on every corpus row."""
+    from pdf_extraction_and_query_spark.operators import bq as B
+    from pdf_extraction_and_query_spark.operators import pq as P
+    from pdf_extraction_and_query_spark.operators import sq as Q
+    from pdf_extraction_and_query_spark.streaming import bq as SB
+    from pdf_extraction_and_query_spark.streaming import pq as SP
+    from pdf_extraction_and_query_spark.streaming import sq as SQ
+    from tests.test_pq_index import SF
+
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    root = {
+        n: str(tmp_path / n) for n in ("bq", "pq", "ivfpq", "sbq", "spq", "ssq")
+    }
+    B.bq_build(emb, root["bq"])
+    P.pq_build(emb, root["pq"])
+    SP.ivfpq_stream_init(emb, root["ivfpq"])  # == ivfpq_build's layout
+    SB.bq_stream_init(emb, root["sbq"])
+    SP.pq_stream_init(emb, root["spq"])
+    SQ.sq_stream_init(emb, root["ssq"])
+    searches = {
+        "bq_topk": lambda: B.bq_topk(emb),
+        "ivfbq_topk": lambda: B.ivfbq_topk(emb),
+        "bq_topk_prebuilt": lambda: B.bq_topk_prebuilt(spark, emb, root["bq"]),
+        "bq_topk_merged": lambda: SB.bq_topk_merged(spark, emb, root["sbq"]),
+        "sq_topk": lambda: Q.sq_topk(emb),
+        "sq_topk_merged": lambda: SQ.sq_topk_merged(spark, emb, root["ssq"]),
+        "pq_topk": lambda: P.pq_topk(emb),
+        "pq_topk_prebuilt": lambda: P.pq_topk_prebuilt(spark, emb, root["pq"]),
+        "pq_topk_merged": lambda: SP.pq_topk_merged(spark, emb, root["spq"]),
+        "pq_topk_multi": lambda: P.pq_topk_multi(emb),
+        "ivfpq_topk": lambda: P.ivfpq_topk(emb),
+        "ivfpq_topk_prebuilt": lambda: P.ivfpq_topk_prebuilt(
+            spark, emb, root["ivfpq"]
+        ),
+        "ivfpq_topk_merged": lambda: SP.ivfpq_topk_merged(
+            spark, emb, root["ivfpq"]
+        ),
+        "ivfpq_topk_multi": lambda: P.ivfpq_topk_multi(emb),
+    }
+    bad = sorted(
+        name
+        for name, search in searches.items()
+        if _converts_before_shortlist_join(search())
+    )
+    assert bad == [], bad
+
+
+def test_vector_search_tail_is_written_once():
+    """The single-query vector search steps live in one place each: the
+    IVF probe rule (``.limit(n_probe)``) only in ``search._probe_ids``, the
+    shortlist fetch (``join(F.broadcast(shortlist)``) only in
+    ``search._rerank_topk`` and the batch re-rank ``pq._rerank_multi``,
+    the query lookup (``== query_vec_id``) only in ``search`` (``_qv_np``
+    plus the exact search's ``with_query`` and ``vector_topk_filtered``),
+    the codebook read (``r["code"]``) only in ``pq._codebook_np``."""
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "pdf_extraction_and_query_spark"
+    needles = (
+        ".limit(n_probe)",
+        "join(F.broadcast(shortlist)",
+        "== query_vec_id",
+        'r["code"]',
+    )
+    counts = {}
+    for py in pkg.rglob("*.py"):
+        text = py.read_text()
+        for needle in needles:
+            if text.count(needle):
+                counts[(str(py.relative_to(pkg)), needle)] = text.count(needle)
+    assert counts == {
+        ("operators/search.py", ".limit(n_probe)"): 1,
+        ("operators/search.py", "join(F.broadcast(shortlist)"): 1,
+        ("operators/pq.py", "join(F.broadcast(shortlist)"): 1,
+        ("operators/search.py", "== query_vec_id"): 3,
+        ("operators/pq.py", 'r["code"]'): 1,
+    }, counts

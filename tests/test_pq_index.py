@@ -163,3 +163,46 @@ def test_encode_kernel_memory_bound_at_k256(spark):
     want = diff.argmin(axis=2)
     got = np.stack(codes.iloc[:50].to_numpy())
     assert np.array_equal(got, want)
+
+
+def test_truncated_codebook_sidecar_raises(spark, tmp_path):
+    """Every codebook read goes through one validated reader: a sidecar
+    missing one codeword must fail the search, not zero-fill the codeword
+    and return scores against it."""
+    import pytest
+
+    from pdf_extraction_and_query_spark.operators.pq import (
+        ivfpq_build,
+        ivfpq_topk_prebuilt,
+    )
+    from pdf_extraction_and_query_spark.sources import tables
+    from pdf_extraction_and_query_spark.streaming.pq import (
+        pq_stream_init,
+        pq_topk_merged,
+    )
+
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    pq_root, ivfpq_root, stream_root = (
+        str(tmp_path / n) for n in ("pq", "ivfpq", "stream")
+    )
+    pq_build(emb, pq_root)
+    ivfpq_build(emb, ivfpq_root)
+    pq_stream_init(emb, stream_root)
+    for sidecar in (
+        f"{pq_root}/codebook",
+        f"{ivfpq_root}/codebook",
+        f"{stream_root}/_codebook",
+    ):
+        cb = tables.read_table(spark, sidecar)
+        rows = cb.where(~((F.col("m") == 0) & (F.col("code") == 0))).collect()
+        assert len(rows) == C.PQ_M * C.PQ_K - 1
+        tables.replace_table(spark.createDataFrame(rows, cb.schema), sidecar)
+
+    searches = (
+        lambda: pq_topk_prebuilt(spark, emb, pq_root),
+        lambda: ivfpq_topk_prebuilt(spark, emb, ivfpq_root),
+        lambda: pq_topk_merged(spark, emb, stream_root),
+    )
+    for search in searches:
+        with pytest.raises(ValueError, match="codebook incomplete"):
+            search().collect()

@@ -99,3 +99,29 @@ def test_hybrid_rrf_prebuilt_fuses_component_lists(spark, tmp_path):
     assert sorted(got) == sorted(want_order)
     for rank, i in enumerate(want_order, 1):
         assert got[i] == (vec.get(i, 0), kw.get(i, 0), scores[i], rank)
+
+
+def _index_partition_filters(df, schema_marker):
+    """PartitionFilters of every index scan (the FileScans whose
+    ReadSchema carries ``schema_marker``) in the executed plan."""
+    import re
+
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return [
+        re.search(r"PartitionFilters: (.*?), PushedFilters", line).group(1)
+        for line in plan.splitlines()
+        if "FileScan" in line and schema_marker in line
+    ]
+
+
+def test_merged_scans_only_probed_partitions(spark, tmp_path):
+    """Base and delta scans both prune to the probed cent_id partition
+    directories (the ivf_topk_prebuilt pin in test_ivf_index, on the
+    merged reader)."""
+    emb, base, batch = _split(spark)
+    root = str(tmp_path / "ivf")
+    ivf_stream_init(base, root)
+    make_ivf_batch_processor(root)(batch, 0)
+    pfs = _index_partition_filters(ivf_topk_merged(spark, root), "ev:array")
+    assert len(pfs) == 2, pfs  # base + delta
+    assert all("cent_id" in pf for pf in pfs), pfs

@@ -86,3 +86,24 @@ def test_ivfpq_merged_equals_one_shot_and_replay(spark, tmp_path):
         spark, (f"{root}/codes", f"{root}/delta"), ["vec_id"]
     )
     assert merged.count() == emb.count()
+
+
+def test_ivfpq_merged_scans_only_probed_partitions(spark, tmp_path):
+    """Base and delta code scans both prune to the probed cent_id
+    partition directories (the ivfpq_topk_prebuilt pin in test_pq_index,
+    on the merged reader)."""
+    from pdf_extraction_and_query_spark.streaming.pq import (
+        ivfpq_stream_init,
+        ivfpq_topk_merged,
+        make_ivfpq_batch_processor,
+    )
+    from tests.test_streaming_ivf import _index_partition_filters
+
+    emb, base, batch = _split(spark)
+    root = str(tmp_path / "ivfpq")
+    ivfpq_stream_init(base, root)
+    make_ivfpq_batch_processor(root)(batch, 0)
+    got = ivfpq_topk_merged(spark, emb, root)
+    pfs = _index_partition_filters(got, "codes:array")
+    assert len(pfs) == 2, pfs  # base + delta
+    assert all("cent_id" in pf for pf in pfs), pfs
