@@ -8,10 +8,11 @@ pipeline (``plans/extract.py``) must produce byte-identical span sequences;
 ``tests/test_pipeline_equality.py`` enforces it.
 
 There is ONE kernel, :func:`extract_columns`, over parallel per-span
-columns. :func:`extract_document` adapts span dicts to it, and the fused
-Spark path feeds it slices of flattened Arrow batches, so the two cannot
-drift apart; ``tests/test_kernel_golden.py`` pins its output to literal
-digests instead.
+columns. :func:`extract_document` adapts span dicts to it, the fused Spark
+path feeds it slices of flattened Arrow batches, and the staged Spark stages
+3-4 call its own line fold (:func:`fold_lines`) and chunk emitter
+(:func:`segment_chunker`) over Arrow groups, so no path can drift apart;
+``tests/test_kernel_golden.py`` pins its output to literal digests instead.
 
 Interleaved-span contract (documented spec, since the reference drops media
 — ``src/extraction/pymupdf_extractor.py:124``):
@@ -25,18 +26,28 @@ Interleaved-span contract (documented spec, since the reference drops media
     independently (reconstruct -> header markup -> clean -> chunk);
   * output = segment-0 chunks, media-0, segment-1 chunks, media-1, ... with
     a global 0-based ``order``. For media-free documents this is exactly the
-    reference pipeline's chunk sequence.
+    reference pipeline's chunk sequence;
+  * wrapped lines fold page by page, pages ascending and offset order within
+    a page, as the reference iterates pages 0..n
+    (``src/extraction/formatting_extractor.py:68``); a page's lines may merge
+    even when explicit ``page`` fields interleave in offset order, and each
+    block sits at its first line's offset;
+  * a null or NaN ``font_size`` reads as missing: it is left out of the
+    page's mode size and the line takes the default size (the reference's
+    ``sizes.count`` mode, ``formatting_extractor.py:74-86``, would count NaN
+    objects by identity).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Any, Dict, List, Optional, Sequence, Tuple
+from itertools import groupby
+from operator import itemgetter
+from typing import Any, Callable, Dict, Iterator, List, Optional, Sequence, Tuple
 
 from . import boilerplate as bp
 from .chunker import DEFAULT_CHUNK_OVERLAP, DEFAULT_MAX_CHUNK_SIZE, SectionChunker
 from .lines import (
-    DEFAULT_FONT_SIZE,
     blocks_to_marked_text,
     line_features,
     page_font_mode,
@@ -65,6 +76,10 @@ def span_columns(spans: Sequence[Dict[str, Any]]) -> Tuple[List[Any], ...]:
     return tuple([s.get(f) for s in spans] for f in SPAN_FIELDS)
 
 
+# parallel per-text-span columns, in this order, are the stage-3 fold's input
+FOLD_FIELDS = ("page", "offset", "seg", "text", "font_size", "bold", "drop")
+
+
 def _pages_and_segments(
     kinds: Sequence[str], offsets: Sequence[int], pages: Sequence[Any]
 ) -> List[Tuple[int, int, int]]:
@@ -90,102 +105,129 @@ def _pages_and_segments(
     return out
 
 
-def _line_records(
+def _stages_1_2(
     cols: Sequence[Sequence[Any]], cfg: ExtractConfig
-) -> List[Dict[str, Any]]:
-    """Stage 1-2 over span columns: page/segment derivation, page font
-    mode, boilerplate strip, per-line features. Returns, in offset order,
-    feature records for the kept text lines and ``{kind, text, media_ref,
-    offset, page, seg}`` records for the media spans."""
+) -> Tuple[Tuple[Sequence[Any], ...], List[Dict[str, Any]]]:
+    """Stages 1-2 over span columns: page/segment derivation and the
+    boilerplate flag. Returns the text spans in offset order as the
+    :data:`FOLD_FIELDS` columns of :func:`fold_lines` (text stripped) and
+    ``{kind, text, media_ref, offset, page, seg}`` records for the media
+    spans."""
     kinds, texts, refs, offsets, pages, sizes, bolds = cols
     prepared = _pages_and_segments(kinds, offsets, pages)
-    text_rows = [(i, page) for i, page, _ in prepared if kinds[i] == "text"]
-    lines = {i: (texts[i] or "").strip() for i, _ in text_rows}
-
-    # page font mode over ALL text spans of the page (reference collects
-    # sizes before the empty-line filter, formatting_extractor.py:74-86)
-    sizes_by_page: Dict[int, List[float]] = {}
-    for i, page in text_rows:
-        if sizes[i] is not None:
-            sizes_by_page.setdefault(page, []).append(float(sizes[i]))
-    mode_by_page = {p: page_font_mode(v) for p, v in sizes_by_page.items()}
+    media = [
+        {"kind": kinds[i], "text": texts[i], "media_ref": refs[i],
+         "offset": offsets[i], "page": page, "seg": seg}
+        for i, page, seg in prepared
+        if kinds[i] != "text"
+    ]
+    rows = [
+        (page, offsets[i], seg, (texts[i] or "").strip(), sizes[i], bolds[i])
+        for i, page, seg in prepared
+        if kinds[i] == "text"
+    ]
+    text_pages, offs, segs, lines, text_sizes, text_bolds = (
+        zip(*rows) if rows else ((),) * 6
+    )
 
     # boilerplate can only fire for docs spanning >= min_pages pages (spec);
     # for the 1-3-page long tail we skip normalization entirely, and when it
     # does run, each distinct line is normalized ONCE (footers repeat) and
     # the result reused for the membership test (was ~30% of kernel CPU).
-    boiler: set = set()
-    norms: Dict[str, str] = {}
-    if len({page for _, page in text_rows}) >= cfg.boilerplate_min_pages:
-        norms = {t: bp.normalize_line(t) for t in set(lines.values())}
+    drops = [False] * len(rows)
+    if len(set(text_pages)) >= cfg.boilerplate_min_pages:
+        norms = {t: bp.normalize_line(t) for t in set(lines)}
         boiler = bp.boilerplate_keys_from_norms(
-            ((norms[lines[i]], page) for i, page in text_rows),
+            ((norms[t], page) for t, page in zip(lines, text_pages)),
             cfg.boilerplate_min_pages,
         )
+        drops = [norms[t] in boiler for t in lines]
+    return (text_pages, offs, segs, lines, text_sizes, text_bolds, drops), media
 
-    out: List[Dict[str, Any]] = []
-    for i, page, seg in prepared:
-        text = lines.get(i)
-        if text is None:
-            out.append(
-                {"kind": kinds[i], "text": texts[i], "media_ref": refs[i],
-                 "offset": offsets[i], "page": page, "seg": seg}
-            )
-            continue
-        if not text:
-            continue  # formatting_extractor.py:162-164
-        if boiler and norms[text] in boiler:
-            continue
-        feats = line_features(
-            text, page, sizes[i], bolds[i], mode_by_page.get(page, DEFAULT_FONT_SIZE)
+
+def _page_lines(*cols: Sequence[Any]) -> Iterator[List[Dict[str, Any]]]:
+    """Per page, pages ascending: the feature records of its kept lines in
+    offset order (stable sorts, so duplicate offsets keep input order)."""
+    rows = sorted(zip(*cols), key=itemgetter(1))
+    rows.sort(key=itemgetter(0))
+    for page, run in groupby(rows, key=itemgetter(0)):
+        run = list(run)
+        # page font mode over ALL text spans of the page (reference collects
+        # sizes before the empty-line filter, formatting_extractor.py:74-86)
+        normal = page_font_mode(
+            [float(r[4]) for r in run if r[4] is not None and r[4] == r[4]]
         )
-        feats["kind"] = "text"
-        feats["seg"] = seg
-        feats["offset"] = offsets[i]
-        feats["media_ref"] = None
-        out.append(feats)
-    return out
+        feats = []
+        for _, off, seg, text, size, bold, drop in run:
+            text = (text or "").strip()
+            if not text or drop:
+                continue  # formatting_extractor.py:162-164; boilerplate
+            # NaN != NaN: a NaN size reads as missing
+            rec = line_features(text, page, size if size == size else None, bold, normal)
+            rec["seg"] = seg
+            rec["offset"] = off
+            feats.append(rec)
+        yield feats
+
+
+def fold_lines(*cols: Sequence[Any]) -> List[Dict[str, Any]]:
+    """THE stage-3 fold over the text spans of whole pages, given as
+    parallel :data:`FOLD_FIELDS` columns: page font mode, the empty-line and
+    boilerplate (``drop``) filter, :func:`line_features`, then
+    :func:`reconstruct_wrapped_lines` page by page. Returns the blocks
+    (``text``, ``page``, ``seg``, ``offset`` of the first line,
+    ``is_likely_header``, ...) in order of their first span's offset.
+
+    The kernel runs it over a whole document, the staged Spark path over
+    each (doc, page band) group (``operators/extraction.reconstruct_blocks``)."""
+    blocks = [b for feats in _page_lines(*cols) for b in reconstruct_wrapped_lines(feats)]
+    blocks.sort(key=itemgetter("offset"))
+    return blocks
 
 
 def extract_lines(
     spans: Sequence[Dict[str, Any]], cfg: ExtractConfig = ExtractConfig()
 ) -> List[Dict[str, Any]]:
-    """Stage 1-2 (see :func:`_line_records`) over span dicts."""
-    return _line_records(span_columns(spans), cfg)
+    """Stages 1-2 and the per-line features over span dicts: feature records
+    for the kept text lines and media records, in offset order."""
+    text, media = _stages_1_2(span_columns(spans), cfg)
+    lines = [
+        {**r, "kind": "text", "media_ref": None}
+        for feats in _page_lines(*text)
+        for r in feats
+    ]
+    return sorted(lines + media, key=itemgetter("offset"))
 
 
 def reconstruct_blocks(
     spans: Sequence[Dict[str, Any]], cfg: ExtractConfig = ExtractConfig()
 ) -> List[Dict[str, Any]]:
-    """Stage 3: wrapped-line reconstruction + header re-eval over the text
-    lines (media records pass through in position)."""
-    lines = extract_lines(spans, cfg)
-    text_lines = [r for r in lines if r["kind"] == "text"]
-    media = [r for r in lines if r["kind"] != "text"]
-    blocks = reconstruct_wrapped_lines(text_lines)
-    merged = blocks + media
-    merged.sort(key=lambda r: r["offset"])
-    return merged
+    """Stages 1-3 over span dicts: :func:`fold_lines` blocks and media
+    records, in offset order."""
+    text, media = _stages_1_2(span_columns(spans), cfg)
+    blocks = [{**b, "kind": "text", "media_ref": None} for b in fold_lines(*text)]
+    return sorted(blocks + media, key=itemgetter("offset"))
 
 
-def _segments(
-    cols: Sequence[Sequence[Any]], cfg: ExtractConfig
-) -> Tuple[int, Dict[int, List[Dict[str, Any]]], Dict[int, Dict[str, Any]]]:
-    """Stages 1-3 grouped by media segment: ``(n_segs, blocks_by_seg,
-    media_by_seg)``. Blocks keep offset order; media span k closes
-    segment k."""
-    media_by_seg: Dict[int, Dict[str, Any]] = {}
-    text_lines: List[Dict[str, Any]] = []
-    for r in _line_records(cols, cfg):
-        if r["kind"] == "text":
-            text_lines.append(r)
-        else:
-            media_by_seg[r["seg"]] = r
-    blocks_by_seg: Dict[int, List[Dict[str, Any]]] = {}
-    for b in reconstruct_wrapped_lines(text_lines):
-        blocks_by_seg.setdefault(b["seg"], []).append(b)
-    n_segs = max(max(blocks_by_seg, default=-1), max(media_by_seg, default=-1)) + 1
-    return n_segs, blocks_by_seg, media_by_seg
+def segment_chunker(
+    cfg: ExtractConfig,
+) -> Callable[[Sequence[Dict[str, Any]]], List[Dict[str, Any]]]:
+    """THE stage-4 emitter, its :class:`SectionChunker` built once from
+    ``cfg``: one media segment's blocks in order -> header markup -> clean
+    -> section-aware chunks ``[{text, metadata, chunk_size}, ...]``. The
+    kernel keeps each chunk's text, the staged Spark path
+    (``operators/extraction.chunk_blocks``) its metadata too."""
+    chunker = SectionChunker(
+        max_chunk_size=cfg.max_chunk_size,
+        chunk_overlap=cfg.chunk_overlap,
+        use_section_awareness=cfg.use_section_awareness,
+    )
+
+    def emit(blocks: Sequence[Dict[str, Any]]) -> List[Dict[str, Any]]:
+        cleaned, _ = clean(blocks_to_marked_text(blocks), validate=False)
+        return chunker.chunk(cleaned)
+
+    return emit
 
 
 def extract_columns(
@@ -202,23 +244,26 @@ def extract_columns(
     per span, :data:`SPAN_FIELDS` order) -> its ordered output spans as
     ``(kind, text, media_ref)``; a span's ``order`` is its list index.
 
-    Every extraction path runs this function: the eager oracle through
-    :func:`extract_document`, the fused Spark path straight from Arrow
-    batches (``operators/extraction.fused_extract``)."""
-    n_segs, blocks_by_seg, media_by_seg = _segments(
+    Every extraction path runs this function's stages: the eager oracle
+    through :func:`extract_document`, the fused Spark path straight from
+    Arrow batches (``operators/extraction.fused_extract``), and the staged
+    Spark stages 3-4 through :func:`fold_lines` and
+    :func:`segment_chunker`."""
+    text, media = _stages_1_2(
         (kinds, texts, refs, offsets, pages, sizes, bolds), cfg
     )
-    chunker = SectionChunker(
-        max_chunk_size=cfg.max_chunk_size,
-        chunk_overlap=cfg.chunk_overlap,
-        use_section_awareness=cfg.use_section_awareness,
-    )
+    blocks_by_seg: Dict[int, List[Dict[str, Any]]] = {}
+    for b in fold_lines(*text):
+        blocks_by_seg.setdefault(b["seg"], []).append(b)
+    # media span k closes segment k
+    media_by_seg = {m["seg"]: m for m in media}
+    n_segs = max(max(blocks_by_seg, default=-1), max(media_by_seg, default=-1)) + 1
+    emit = segment_chunker(cfg)
     out: List[Tuple[str, Optional[str], Optional[str]]] = []
     for seg in range(n_segs):
         blocks = blocks_by_seg.get(seg)
         if blocks:
-            cleaned, _ = clean(blocks_to_marked_text(blocks), validate=False)
-            out.extend(("text", ch["text"], None) for ch in chunker.chunk(cleaned))
+            out.extend(("text", ch["text"], None) for ch in emit(blocks))
         m = media_by_seg.get(seg)
         if m is not None:
             out.append((m["kind"], m["text"], m["media_ref"]))

@@ -21,54 +21,54 @@ Stage layout (each stage is independently queryable; shuffle keys noted):
                              of a doc is boilerplate; window shuffle on
                              ``(doc_id, norm)`` with ``collect_set(page)``
                              (partial aggregation happens map-side).
-  3. ``reconstruct_blocks``— grouped-map Arrow UDF per ``(doc_id, page)``:
-                             page font mode, per-line features, buffer fold +
-                             header re-eval (core kernels). Page granularity
+  3. ``reconstruct_blocks``— grouped-map Arrow UDF per (doc_id, 16-page
+                             band) over the text lines' fold columns: the
+                             kernel's own fold ``core.docpipe.fold_lines``
+                             (page font mode, line features, wrap fold +
+                             header re-eval, page by page). Page granularity
                              is semantics-preserving (the merge predicate
                              never crosses pages) and is the skew treatment:
-                             a 1000-page report becomes 1000 independent
+                             a 1000-page report becomes ~63 independent
                              tasks instead of one straggler.
-  4. ``chunk_blocks``      — grouped-map Arrow UDF per ``(doc_id, seg)``:
-                             header markup -> clean -> section-aware chunking.
+  4. ``chunk_blocks``      — grouped-map Arrow UDF per doc_id: the kernel's
+                             per-segment emitter
+                             ``core.docpipe.segment_chunker`` (header markup
+                             -> clean -> section-aware chunking), keeping
+                             each chunk's metadata.
   5. ``interleave``        — union chunks with media spans, global per-doc
                              ``order`` via one window on ``doc_id``.
 
-Reference parity notes: stages 3-4 run the exact fold/split kernels from
-``core`` (ported from src/extraction/formatting_extractor.py and
-src/chunking/langchain_chunker.py of the reference); everything else is
-native column expressions / windows that Catalyst fully optimizes.
+Reference parity notes: stages 3-4 call the very functions the eager kernel
+``core.docpipe.extract_columns`` calls (ported from
+src/extraction/formatting_extractor.py and src/chunking/langchain_chunker.py
+of the reference), so the staged stages hold no copy of them; everything
+else is native column expressions / windows that Catalyst fully optimizes.
 """
 
 from __future__ import annotations
 
-import pandas as pd
+from itertools import groupby
+from operator import itemgetter
+
 import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..core import boilerplate as bp
-from ..core.chunker import SectionChunker
-from ..core.docpipe import MEDIA_KINDS, SPAN_FIELDS, ExtractConfig, extract_columns
-from ..core.lines import (
-    DEFAULT_FONT_SIZE,
-    blocks_to_marked_text,
-    line_features,
-    page_font_mode,
-    reconstruct_wrapped_lines,
+from ..core.docpipe import (
+    FOLD_FIELDS,
+    MEDIA_KINDS,
+    SPAN_FIELDS,
+    ExtractConfig,
+    extract_columns,
+    fold_lines,
+    segment_chunker,
 )
-from ..core.textclean import clean
-from .util import prefix_sums
-
-LINES_SCHEMA_FIELDS = (
-    "doc_id string, offset int, kind string, text string, media_ref string, "
-    "page int, seg int, font_size double, bold boolean"
-)
+from .util import arrow_groups, prefix_sums
 
 BLOCKS_SCHEMA = (
     "doc_id string, offset int, page int, seg int, text string, "
-    "font_size double, is_bold boolean, is_all_caps boolean, "
-    "is_larger boolean, is_likely_header boolean"
+    "is_likely_header boolean"
 )
 
 CHUNKS_SCHEMA = (
@@ -173,164 +173,62 @@ def flag_boilerplate(lines_df: DataFrame, min_pages: int = bp.DEFAULT_MIN_PAGES)
 # pages per grouped-map task: the line-merge fold never crosses a page
 # boundary (formatting_extractor.py:247-249), so ANY page-granular grouping
 # is semantics-preserving. 16 pages/group keeps a 1000-page report spread
-# over ~63 parallel tasks while cutting the per-group Arrow/pandas overhead
-# ~16x vs one-group-per-page (which made the staged path 25x slower than
-# fused on small-doc corpora).
+# over ~63 parallel tasks while cutting the per-group Arrow overhead ~16x vs
+# one-group-per-page (which made the staged path 25x slower than fused on
+# small-doc corpora).
 PAGES_PER_GROUP = 16
 
 
-def _fold_lines(rows: list) -> list:
-    """Reference reconstruction for a run of (page, offset, text, font_size,
-    bold, is_boiler, seg) tuples, grouped page-by-page (plain-list hot path
-    — pandas row access was ~3x slower than the kernel itself)."""
-    from itertools import groupby
-    from math import isnan
-
-    blocks = []
-    for _, page_rows in groupby(rows, key=lambda r: r[0]):
-        page_rows = list(page_rows)
-        sizes = [
-            float(s)
-            for (_, _, _, s, _, _, _) in page_rows
-            if s is not None and not isnan(s)
-        ]
-        normal = page_font_mode(sizes) if sizes else DEFAULT_FONT_SIZE
-        feats = []
-        for page, offset, text, font_size, bold, is_boiler, seg in page_rows:
-            text = (text or "").strip()
-            if not text or is_boiler:
-                continue
-            fs = None if font_size is None or isnan(font_size) else float(font_size)
-            rec = line_features(text, int(page), fs, bold, normal)
-            rec["seg"] = int(seg)
-            rec["offset"] = int(offset)
-            feats.append(rec)
-        blocks.extend(reconstruct_wrapped_lines(feats))
-    return blocks
-
-
-def _pandas_parallelism(df: DataFrame) -> int:
-    """Partition count for grouped-map stages. AQE's byte-based coalescing
-    is blind to per-group PYTHON cost — on a small corpus it collapsed the
-    grouped-map exchange to 1 partition and serialized every pandas group
-    (measured 33s for work 32 cores do in ~1s). An explicit repartition on
-    the group keys is AQE-immune and Catalyst elides the duplicate exchange
-    the groupBy would otherwise insert.
-
-    Capped at 4x the cluster's core count: an untuned session carries the
-    200-partition default, and 200 near-empty Arrow tasks on an 8-core
-    driver-gate session paid ~5x pure task-launch overhead (27 s -> ~6 s
-    for the chunk pipeline at sf0.01). Four waves per core keeps skew
-    headroom without drowning small inputs in task launches."""
-    spark = df.sparkSession
-    shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return min(shuffle, 4 * spark.sparkContext.defaultParallelism)
-
-
 def reconstruct_blocks(lines_df: DataFrame) -> DataFrame:
-    """Stage 3: grouped-map fold per (doc_id, page-group) — the exact
-    reference reconstruction semantics (formatting_extractor.py:192-329) via
-    the core kernel, applied page-by-page inside each group."""
-    text_lines = lines_df.filter(F.col("kind") == "text").withColumn(
-        "pgrp", F.floor(F.col("page") / PAGES_PER_GROUP).cast("int")
-    )
-    text_lines = text_lines.repartition(
-        _pandas_parallelism(lines_df), "doc_id", "pgrp"
+    """Stage 3: the kernel's fold ``core.docpipe.fold_lines`` (page font
+    mode, line features, wrapped-line reconstruction + header re-eval,
+    formatting_extractor.py:150-329) per (doc_id, page band) group, one
+    ``applyInArrow`` call over the text lines' fold columns."""
+    text_lines = (
+        lines_df.filter(F.col("kind") == "text")
+        .withColumnRenamed("is_boiler", "drop")
+        .select(
+            "doc_id",
+            F.floor(F.col("page") / PAGES_PER_GROUP).cast("int").alias("pgrp"),
+            *FOLD_FIELDS,
+        )
     )
 
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = sorted(
-            zip(
-                pdf["page"].tolist(),
-                pdf["offset"].tolist(),
-                pdf["text"].tolist(),
-                [None if pd.isna(v) else float(v) for v in pdf["font_size"]],
-                [None if pd.isna(v) else bool(v) for v in pdf["bold"]],
-                pdf["is_boiler"].tolist(),
-                pdf["seg"].tolist(),
-            ),
-            key=lambda r: (r[0], r[1]),
-        )
-        blocks = _fold_lines(rows)
-        if not blocks:
-            return pd.DataFrame(
-                columns=[
-                    "doc_id", "offset", "page", "seg", "text", "font_size",
-                    "is_bold", "is_all_caps", "is_larger", "is_likely_header",
-                ]
-            )
-        doc_id = pdf["doc_id"].iloc[0]
-        return pd.DataFrame(
-            {
-                "doc_id": [doc_id] * len(blocks),
-                "offset": [b["offset"] for b in blocks],
-                "page": [b["page"] for b in blocks],
-                "seg": [b["seg"] for b in blocks],
-                "text": [b["text"] for b in blocks],
-                "font_size": [b["font_size"] for b in blocks],
-                "is_bold": [b["is_bold"] for b in blocks],
-                "is_all_caps": [b["is_all_caps"] for b in blocks],
-                "is_larger": [b["is_larger"] for b in blocks],
-                "is_likely_header": [b["is_likely_header"] for b in blocks],
-            }
-        )
+    def fold(key, *cols):
+        return [
+            (key[0], b["offset"], b["page"], b["seg"], b["text"], b["is_likely_header"])
+            for b in fold_lines(*cols)
+        ]
 
-    return text_lines.groupBy("doc_id", "pgrp").applyInPandas(fold, BLOCKS_SCHEMA)
+    return arrow_groups(text_lines, ("doc_id", "pgrp"), FOLD_FIELDS, BLOCKS_SCHEMA, fold)
 
 
 def chunk_blocks(blocks_df: DataFrame, cfg: ExtractConfig = ExtractConfig()) -> DataFrame:
-    """Stage 4: grouped-map per doc_id, looping segments inside: header
-    markup -> clean -> section-aware chunking (core kernels; reference
-    rag_service.py:73-86 lifecycle). Doc granularity is safe here — the
-    chunker is one linear pass over the segment's text (no per-page cost
-    blowup), and grouping by doc instead of (doc, seg) avoids one tiny
+    """Stage 4: the kernel's per-segment emitter
+    ``core.docpipe.segment_chunker`` (header markup -> clean ->
+    section-aware chunking; reference rag_service.py:73-86 lifecycle) per
+    doc_id group, looping segments inside. Doc granularity is safe here —
+    the chunker is one linear pass over the segment's text (no per-page
+    cost blowup), and grouping by doc instead of (doc, seg) avoids one tiny
     Arrow group per media span."""
-    chunker = SectionChunker(
-        max_chunk_size=cfg.max_chunk_size,
-        chunk_overlap=cfg.chunk_overlap,
-        use_section_awareness=cfg.use_section_awareness,
-    )
+    emit = segment_chunker(cfg)
 
-    def do_chunk(pdf: pd.DataFrame) -> pd.DataFrame:
-        from itertools import groupby
-
-        doc_id = pdf["doc_id"].iloc[0]
-        rows = sorted(
-            zip(
-                pdf["seg"].tolist(),
-                pdf["offset"].tolist(),
-                pdf["text"].tolist(),
-                pdf["is_likely_header"].tolist(),
-            )
-        )
-        out = {k: [] for k in (
-            "seg", "chunk_seq", "text", "chunk_size", "section", "subsection",
-            "subsubsection", "section_hierarchy", "chunk_part", "is_split_chunk",
-        )}
-        for seg, seg_rows in groupby(rows, key=lambda r: r[0]):
-            blocks = [
-                {"text": t, "is_likely_header": bool(h)}
-                for (_, _, t, h) in seg_rows
-            ]
-            marked = blocks_to_marked_text(blocks)
-            cleaned, _ = clean(marked, validate=False)
-            for i, c in enumerate(chunker.chunk(cleaned)):
+    def do_chunk(key, *cols):
+        out = []
+        for seg, rows in groupby(sorted(zip(*cols)), key=itemgetter(0)):
+            blocks = [{"text": t, "is_likely_header": h} for _, _, t, h in rows]
+            for i, c in enumerate(emit(blocks)):
                 m = c["metadata"]
-                out["seg"].append(int(seg))
-                out["chunk_seq"].append(i)
-                out["text"].append(c["text"])
-                out["chunk_size"].append(c["chunk_size"])
-                out["section"].append(m.get("section"))
-                out["subsection"].append(m.get("subsection"))
-                out["subsubsection"].append(m.get("subsubsection"))
-                out["section_hierarchy"].append(m.get("section_hierarchy"))
-                out["chunk_part"].append(m.get("chunk_part"))
-                out["is_split_chunk"].append(bool(m.get("is_split_chunk", False)))
-        out["doc_id"] = [doc_id] * len(out["seg"])
-        return pd.DataFrame(out)
+                out.append((
+                    key[0], seg, i, c["text"], c["chunk_size"], m.get("section"),
+                    m.get("subsection"), m.get("subsubsection"),
+                    m.get("section_hierarchy"), m.get("chunk_part"),
+                    bool(m.get("is_split_chunk", False)),
+                ))
+        return out
 
-    blocks_df = blocks_df.repartition(_pandas_parallelism(blocks_df), "doc_id")
-    return blocks_df.groupBy("doc_id").applyInPandas(do_chunk, CHUNKS_SCHEMA)
+    cols = ("seg", "offset", "text", "is_likely_header")
+    return arrow_groups(blocks_df, ("doc_id",), cols, CHUNKS_SCHEMA, do_chunk)
 
 
 def interleave(chunks_df: DataFrame, lines_df: DataFrame) -> DataFrame:
@@ -368,8 +266,8 @@ def _span_lists(spans: pa.ListArray) -> tuple:
     ``spans`` column, plus each doc's bounds into them (its list offsets
     rebased to 0). A field that is absent or all null costs no conversion;
     the rest convert through numpy (~10x faster than ``to_pylist``), where
-    a numeric null arrives as NaN and, like NaN itself, reads as None — as
-    on the staged path (``_fold_lines``)."""
+    a numeric null arrives as NaN and, like NaN itself, reads as None (the
+    kernel reads a NaN size as missing, too)."""
     bounds = spans.offsets.to_pylist()
     flat = spans.values.slice(bounds[0], bounds[-1] - bounds[0])
     children = dict(zip((f.name for f in flat.type), flat.flatten()))

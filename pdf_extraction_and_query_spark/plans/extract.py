@@ -3,8 +3,9 @@
 ``extract_spans(spans_df, cfg, mode)``:
 
 * ``mode='staged'``: the five-stage vectorized pipeline from
-  ``operators/extraction.py``. Shuffles on doc-granular keys only
-  (doc_id / (doc_id,norm) / (doc_id,page) / (doc_id,seg)); page-level
+  ``operators/extraction.py``, whose stages 3-4 call the kernel's own line
+  fold and chunk emitter. Shuffles on doc-granular keys only
+  (doc_id / (doc_id,norm) / (doc_id,page band) / doc_id); page-band
   grouping bounds straggler size for 1000-page documents; AQE splits any
   residual skewed partitions.
 * ``mode='fused'``: one narrow ``mapInArrow`` pass running the columnar

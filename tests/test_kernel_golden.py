@@ -9,8 +9,9 @@ agrees with every other.
 
 The corpus is seeded ``synth_doc`` documents from each page-count class plus
 hand-built edge documents (unsorted and duplicate offsets, missing or null
-fields, NaN font sizes, empty / media-only / marker-only documents, page-marker
-text, whitespace runs, and Unicode digits, spaces and case mappings).
+fields, NaN font sizes, explicit pages interleaved in offset order, empty /
+media-only / marker-only documents, page-marker text, whitespace runs, and
+Unicode digits, spaces and case mappings).
 """
 
 import hashlib
@@ -100,8 +101,10 @@ EDGE = {
         _BODY, footer=lambda p: f"Acme Corp page {p}", page=None, font_size=None, bold=None
     ),
     "nan_font_size": [
-        # NaN is the page's most common size (one shared NaN object, three
-        # times), so the page's mode size is NaN and no line reads as larger
+        # a NaN size reads as missing, like a null one: NaN (five lines, one
+        # shared NaN object among them) is not counted in the page's mode
+        # size, so 11 is the mode and the 14 pt bold line reads as larger;
+        # a NaN line's own size is the default 11
         _s("page_marker", "--- Page 1 ---", 0, page=1),
         _s("text", "Heading With Nan Size", 1, page=1, font_size=float("nan"), bold=True),
         _s("text", "body line one that is long enough", 2, page=1, font_size=11.0, bold=False),
@@ -113,6 +116,14 @@ EDGE = {
         # a header only if the mode were a number below 14
         _s("text", "Results, Revenue, and Costs Overview", 8, page=1, font_size=14.0, bold=True),
         _s("text", "closing body line after the larger heading", 9, page=1, bold=False),
+    ],
+    "interleaved_pages": [
+        # explicit pages that interleave in offset order: the fold runs page
+        # by page (the reference iterates pages in order), so a page's lines
+        # merge even when another page's lines sit between them in offset
+        _s("text", f"body line {i} of page {p} runs long enough to merge", i,
+           page=p, font_size=11.0, bold=False)
+        for i, p in enumerate((1, 2, 1, 2, 1))
     ],
     "text_before_first_marker": [
         _s("text", "this opening line sits before any page marker", 0, font_size=11.0, bold=False),
@@ -241,8 +252,13 @@ GOLDEN = {
     "media_only|small_flat": "bf2f4fdc91d14310aff7271e7d90ddf5",
     "missing_fields|default": "00f075fad87efa4bcaae3ce53e0b4d4d",
     "missing_fields|small_flat": "00f075fad87efa4bcaae3ce53e0b4d4d",
-    "nan_font_size|default": "949dfa72b75d11a67570b793b5f19892",
-    "nan_font_size|small_flat": "dfed22f5403c7f87b3f73be75ac2c4a1",
+    "interleaved_pages|default": "70af8f4e32646b2e5a5cc7d508aae046",
+    "interleaved_pages|small_flat": "70af8f4e32646b2e5a5cc7d508aae046",
+    # spec decision: a NaN font size reads as missing on every path (the
+    # Spark paths already read it so); the kernel used to count NaN objects
+    # as sizes in the page's mode
+    "nan_font_size|default": "a2cadf616b99682e26fde958bbb51e5f",
+    "nan_font_size|small_flat": "c1e4a84c0e5a0f20c4bd5b731ef1e579",
     "text_before_first_marker|default": "19864f740f1f37f6b57e7de330524b3c",
     "text_before_first_marker|small_flat": "19864f740f1f37f6b57e7de330524b3c",
     "unicode_boilerplate|default": "fe8535fd35714028c0be29fd1e28af4d",

@@ -506,6 +506,38 @@ def test_banded_windows_live_in_prefix_sums():
     assert hits == {"operators/util.py"}, hits
 
 
+def test_extraction_stages_live_in_core():
+    """The line fold and the chunk emitter are written once, in ``core``:
+    no package module outside ``core/`` names the stage-3/4 kernels or
+    imports ``core.textclean.clean``, so every extraction path runs the
+    eager kernel's own ``docpipe.fold_lines`` and ``docpipe.segment_chunker``."""
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "pdf_extraction_and_query_spark"
+    kernels = {
+        "line_features", "page_font_mode", "reconstruct_wrapped_lines",
+        "blocks_to_marked_text", "SectionChunker",
+    }
+    offenders = []
+    for py in sorted(pkg.rglob("*.py")):
+        rel = py.relative_to(pkg)
+        if rel.parts[0] == "core":
+            continue
+        for n in ast.walk(ast.parse(py.read_text())):
+            where = f"{rel}:{getattr(n, 'lineno', 0)}"
+            name = n.id if isinstance(n, ast.Name) else getattr(n, "attr", None)
+            if name in kernels:
+                offenders.append(f"{where} {name}")
+            if isinstance(n, ast.ImportFrom):
+                mod = n.module or ""
+                offenders += [
+                    f"{where} imports {a.name}"
+                    for a in n.names
+                    if a.name in kernels
+                    or (mod.endswith("textclean") and a.name == "clean")
+                    or (mod.endswith("core") and a.name == "textclean")
+                ]
+    assert offenders == [], offenders
+
+
 def _children(lines, i):
     """Line indices of the direct children of node ``i`` in a physical
     plan's tree string (a child sits one indent step, 3 chars, deeper)."""
